@@ -11,7 +11,6 @@ serializers around ``spark.sql``.
 
 from __future__ import annotations
 
-import concurrent.futures
 import hashlib
 import os
 import struct as _struct
@@ -272,27 +271,14 @@ class Engine:
         # global USE where possible.
         self._lock = threading.RLock()
         self._opfn_counter = 0  # pipeline-table-function view names
-        # Serializes the brief set-conf -> force-physical-plan ->
-        # restore-conf windows of the static-planning fast path: two
-        # concurrent readers could otherwise interleave so that one
-        # reads the other's temporary adaptive=false as its "previous"
-        # value and restores it permanently (observed as an
-        # order-dependent test flake). Planning is ms-scale; query
-        # EXECUTION happens outside the window and stays concurrent.
+        # Serializes the set-conf -> force-physical-plan -> restore-conf
+        # window of _plan_static: two concurrent readers could otherwise
+        # interleave so that one reads the other's temporary
+        # adaptive=false as its "previous" value and restores it
+        # permanently (observed as an order-dependent test flake).
+        # Planning is ms-scale; query EXECUTION happens outside the
+        # window and stays concurrent.
         self._conf_lock = threading.Lock()
-        # Prepared-statement pipelining: after serving a plan-cache
-        # hit, one background thread pre-plans the NEXT Dataset for
-        # that statement so a repeated query pays ~0 planning latency
-        # on arrival (measured ~40 ms/hit at 10M: ~11 ms QueryExecution
-        # machinery + ~15-30 ms physical planning over a parquet scan).
-        # The prebuilt Dataset has executed nothing — planning only —
-        # so every shuffle still runs when it is collected; this is
-        # statement preparation, not result caching. Slots die with
-        # the cache entry (generation bump / eviction / view guard).
-        self._prebuilt: dict[str, list] = {}
-        self._prep_pool = concurrent.futures.ThreadPoolExecutor(
-            max_workers=1, thread_name_prefix="moospark-prep"
-        )
 
     # ------------------------------------------------------------ sessions
 
@@ -1448,7 +1434,6 @@ class Engine:
                     # stale entry and re-plan
                     with self._lock:
                         self._plan_cache.pop(key, None)
-                        self._prebuilt.pop(key, None)
                     hit = None
                 if hit is not None:
                     # Two reuse tiers, both execution-honest:
@@ -1488,36 +1473,24 @@ class Engine:
                     # tiers: the cache key carries _catalog_gen
                     # (bumped on every DDL/INSERT) and TEMP VIEW
                     # semanticHash guards.
-                    hit_df, mode, _guards, hot = hit
-                    if mode != "plain" and hot.get("state") != "unsafe":
+                    hit_df, width, _guards, hot = hit
+                    if width is not None and hot.get("state") != "unsafe":
                         if hot.get("state") is None:
                             st, ids = self._hot_reuse_info(hit_df)
                             hot["state"], hot["ids"] = st, ids
                         if hot.get("state") == "safe":
                             self._reset_shuffle_outputs(hot["ids"])
                             return hit_df
-                    pre = None
-                    with self._lock:
-                        lst = self._prebuilt.get(key)
-                        if lst:
-                            pre = lst.pop()
-                    # pipeline the next run's planning regardless of
-                    # whether this one was served from the slot
-                    self._schedule_prebuild(key, hit_df, mode)
-                    if pre is not None:
-                        return pre
-                    return self._rebuild_from_cache(hit_df, mode)
-            df, mode = self._plan_select_with_mode(prepared)
+                    return self._rebuild_from_cache(hit_df, width)
+            df, width = self._plan_select(prepared)
             if key is not None:
                 with self._lock:
                     self._plan_cache[key] = (
-                        df, mode, self._temp_view_guards(df), {"state": None}
+                        df, width, self._temp_view_guards(df), {"state": None}
                     )
                     self._plan_cache.move_to_end(key)
                     while len(self._plan_cache) > self._plan_cache_max:
-                        old_key, _ = self._plan_cache.popitem(last=False)
-                        self._prebuilt.pop(old_key, None)
-                self._schedule_prebuild(key, df, mode)
+                        self._plan_cache.popitem(last=False)
             return df
         except EngineError:
             raise
@@ -1543,74 +1516,32 @@ class Engine:
     # threshold AQE keeps runtime coalescing + skew-join splitting —
     # the 100 TB story; any real table blows past this on its first
     # leaf.
-    SMALL_SCAN_BYTES = int(os.environ.get("MOOSPARK_SMALL_SCAN_BYTES", str(64 << 20)))
+    SMALL_SCAN_BYTES = 64 << 20
 
-    def _plan_select(self, prepared: str) -> DataFrame:
-        """spark.sql + the small-scan fast path (static planning).
-
-        The re-plan forces physical planning while AQE is off, so the
-        returned DataFrame keeps its non-adaptive executedPlan after
-        the conf flips back (QueryExecution memoizes it). A concurrent
-        read landing inside the window would also plan statically —
-        valid, just not adaptive — so no lock is taken on this path.
-        """
-        return self._plan_select_with_mode(prepared)[0]
-
-    def _plan_select_with_mode(self, prepared: str) -> tuple[DataFrame, str]:
-        """Build + fast-path a statement; returns (df, mode) where
-        mode records the static-planning decision for the plan cache
-        ("plain" | "static")."""
-        if "(" in prepared and prepared.lstrip()[:12].upper().startswith(
-            "SELECT COUNT"
-        ):
-            early = self._try_early_limit_count(prepared)
-            if early is not None:
-                return early, "static"
+    def _plan_select(self, prepared: str) -> tuple[DataFrame, Optional[int]]:
+        """Build + fast-path a statement; returns (df, width) where
+        width is the static shuffle width the plan was forced to, or
+        None when it plans under the session conf (adaptive)."""
         df = self.spark.sql(prepared)
-        up = prepared.upper()
-        if "GROUP" in up:
-            # Aggregate-shape rewrites (plans/agg_split.py; both are
-            # conservative single-block shape matches that fall back
-            # to the original plan on any analysis error):
-            # 1. ON by default — drop GROUP BY keys that are
-            #    deterministic expressions over the remaining simple
-            #    keys (grouping by (k, f(k)) ≡ grouping by (k);
-            #    narrower shuffle rows, fewer hashed exprs — cb35
-            #    14.5 → 10.9 s at 100M, PROBE_AGGSPLIT_100M.json);
-            # 2. OPT-IN (MOOSPARK_AGG_SPLIT=1) — split DISTINCT agg +
-            #    string MIN/MAX into two joined passes. Measured and
-            #    REJECTED as a default at 100M: cb22's filter passes
-            #    ~1.3% of rows, so the single SortAggregate pipeline
-            #    costs less than the second scan of the wide string
-            #    columns (2.2 s single-pass vs 4.3 s split, same
-            #    artifact). It pays only when the post-filter row
-            #    count rivals the scan, so it stays available for
-            #    high-selectivity workloads rather than default-on.
-            df0 = df
+        if "GROUP" in prepared.upper():
+            # Drop GROUP BY keys that are deterministic expressions
+            # over the remaining simple keys (plans/agg_split.py;
+            # grouping by (k, f(k)) ≡ grouping by (k); narrower shuffle
+            # rows, fewer hashed exprs — cb35 14.5 → 10.9 s at 100M,
+            # PROBE_AGGSPLIT_100M.json). A conservative single-block
+            # shape match that falls back to the original plan on any
+            # analysis error.
             try:
-                from .plans.agg_split import (
-                    maybe_split_distinct_minmax,
-                    reduce_group_keys,
-                )
+                from .plans.agg_split import reduce_group_keys
 
-                work = prepared
-                red = reduce_group_keys(work)
+                red = reduce_group_keys(prepared)
                 if red is not None:
-                    df, work = self.spark.sql(red), red
-            except Exception:
-                df, work = df0, prepared
-            if "DISTINCT" in up and os.environ.get("MOOSPARK_AGG_SPLIT") == "1":
-                # separate guard: a split failure must not roll back a
-                # reduction that already analyzed
-                try:
-                    split = maybe_split_distinct_minmax(work, df.schema)
-                    if split is not None:
-                        df = self.spark.sql(split)
-                except Exception:
-                    pass
+                    df = self.spark.sql(red)
+            except Exception:  # noqa: BLE001
+                pass
         try:
             if self.spark.conf.get("spark.sql.adaptive.enabled") != "true":
-                return df, "plain"
+                return df, None
             size = self._leaf_scan_bytes(df)
             if size is None or size > self.SMALL_SCAN_BYTES:
                 if self._is_single_shuffle_agg(df):
@@ -1630,15 +1561,8 @@ class Engine:
                     # _is_single_shuffle_agg).  Shuffle width stays at
                     # the session default, the same width AQE starts
                     # from.
-                    with self._conf_lock:
-                        prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-                        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                        try:
-                            df._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                        finally:
-                            self.spark.conf.set("spark.sql.adaptive.enabled", prev)
-                    return df, "static"
-                return df, "plain"
+                    return df, self._plan_static(df)
+                return df, None
             # Static planning loses AQE's partition coalescing, so pick
             # the shuffle width AQE would have picked — one partition
             # per ~16 MB of input, capped at the session default.  The
@@ -1646,223 +1570,31 @@ class Engine:
             # at 32 made the static path a net LOSS (10.3s vs 6.7s
             # sweep); sizing it statically keeps both the no-barrier
             # win and the small-shuffle win.
-            with self._conf_lock:
-                prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions")
-                parts = max(1, min(int(prev_parts), (size >> 24) + 1))
-                self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                self.spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-                try:
-                    # physical planning hasn't run yet (spark.sql is
-                    # analysis-eager only); forcing it now, with AQE off,
-                    # bakes the static plan into this QueryExecution
-                    df._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                finally:
-                    self.spark.conf.set("spark.sql.adaptive.enabled", "true")
-                    self.spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            return df, f"small:{parts}"
+            return df, self._plan_static(df, (size >> 24) + 1)
         except Exception:  # noqa: BLE001 — fast path must never break a query
-            return df, "plain"
+            return df, None
 
-    # Probe sizes for the streaming-limit early exit, smallest first.
-    # 64k rows is one or two parquet pages; 8M covers the 10M fixture
-    # minus its tail, after which the full plan is cheaper anyway.
-    _EARLY_LIMIT_PROBE_ROWS = (1 << 16, 1 << 20, 1 << 23)
+    def _plan_static(self, df: DataFrame, cap: Optional[int] = None) -> int:
+        """Force ``df``'s physical planning with AQE off, at the session
+        shuffle width capped at ``cap``; returns the width used.
 
-    @staticmethod
-    def _top_level_find(s: str, word: str) -> int:
-        """Index of the first paren-depth-0, unquoted, word-bounded,
-        case-insensitive occurrence of ``word`` in ``s``; -1 if none."""
-        low = s.lower()
-        w = word.lower()
-        depth = 0
-        i = 0
-        n = len(s)
-        while i < n:
-            c = s[i]
-            if c in ("'", '"', "`"):
-                j = i + 1
-                while j < n:
-                    if s[j] == "\\" and c != "`":
-                        j += 2
-                        continue
-                    if s[j] == c:
-                        break
-                    j += 1
-                i = j + 1
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth = max(0, depth - 1)
-            elif depth == 0 and low.startswith(w, i):
-                before_ok = i == 0 or not (low[i - 1].isalnum() or low[i - 1] == "_")
-                e = i + len(w)
-                after_ok = e >= n or not (low[e].isalnum() or low[e] == "_")
-                if before_ok and after_ok:
-                    return i
-            i += 1
-        return -1
-
-    def _try_early_limit_count(self, prepared: str) -> Optional[DataFrame]:
-        """Streaming-limit early exit for
-        ``SELECT COUNT(*) FROM (SELECT … GROUP BY g LIMIT k) t``.
-
-        The subquery's LIMIT carries no ORDER BY, so any k groups
-        satisfy it, and the outer COUNT consumes only the row count:
-        the query asks for ``least(k, |distinct g|)``. A streaming
-        engine (ClickHouse, DuckDB) stops aggregating the moment k
-        groups exist; Spark's hash aggregate has no early-out, so it
-        builds every group before limiting (ClickBench Q17 pays a full
-        two-column aggregation over the table to count 10 rows).
-
-        Rewrite: verify at plan time that the first M source rows
-        already contain >= k distinct key combinations, then serve a
-        plan that aggregates only a LIMIT-M slice of the source.
-        Soundness: groups over a row subset are a subset of groups over
-        the table, so >= k groups in the slice implies both plans
-        return exactly k; data is immutable within a catalog
-        generation (the plan cache key carries ``_catalog_gen``), so
-        the plan-time validation holds for every later execution. The
-        served plan re-scans its M-row slice on each run — no result
-        reuse. Shapes where the subquery's aggregate VALUES (not just
-        its cardinality) are consumed — ORDER BY, HAVING, joins,
-        set-ops, rollups — never match; on any doubt (alias-typed
-        group keys, positional keys, analysis errors) the full plan is
-        served instead.
-        """
-        import re as _re
-
-        s = prepared.strip().rstrip(";").strip()
-        m = _re.match(
-            r"(?is)^SELECT\s+COUNT\(\s*(?:\*|1)\s*\)\s+AS\s+(`\w+`|\w+)\s+FROM\s*\(",
-            s,
-        )
-        if m is None:
-            return None
-        alias = m.group(1)
-        # balanced-paren extraction of the derived table
-        start = m.end() - 1
-        depth = 0
-        end = -1
-        i = start
-        n = len(s)
-        while i < n:
-            c = s[i]
-            if c in ("'", '"', "`"):
-                j = i + 1
-                while j < n:
-                    if s[j] == "\\" and c != "`":
-                        j += 2
-                        continue
-                    if s[j] == c:
-                        break
-                    j += 1
-                i = j + 1
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    end = i
-                    break
-            i += 1
-        if end < 0:
-            return None
-        inner = s[start + 1 : end].strip()
-        tail = s[end + 1 :].strip()
-        if tail and not _re.match(r"(?is)^(?:AS\s+)?(?:`\w+`|\w+)$", tail):
-            return None
-        if not _re.match(r"(?is)^SELECT\s", inner):
-            return None
-        gb = self._top_level_find(inner, "GROUP BY")
-        frm = self._top_level_find(inner, "FROM")
-        if gb < 0 or frm < 0 or frm > gb:
-            return None
-        for kw in (
-            "ORDER BY", "HAVING", "UNION", "INTERSECT", "EXCEPT", "JOIN",
-            "DISTINCT", "WINDOW", "QUALIFY", "ROLLUP", "CUBE",
-            "GROUPING SETS", "WITH",
-        ):
-            if self._top_level_find(inner, kw) >= 0:
-                return None
-        src = inner[frm + 4 : gb].strip()
-        rest = inner[gb + len("GROUP BY") :].strip()
-        lm = _re.search(r"(?is)\bLIMIT\s+(\d+)\s*$", rest)
-        if lm is None:
-            return None
-        k = int(lm.group(1))
-        keys = rest[: lm.start()].strip()
-        if not (0 < k <= 100_000) or not keys:
-            return None
-        if self._top_level_find(keys, "LIMIT") >= 0:
-            return None
-        # positional keys (GROUP BY 1) would turn into literals in the
-        # probe text — bail
-        from .dialect.translate import _split_top_level_commas
-
-        if any(
-            _re.fullmatch(r"\d+", p.strip())
-            for p in _split_top_level_commas(keys)
-        ):
-            return None
-        # single plain table ref (optionally WHERE-filtered): the probe
-        # wraps it in SELECT * ... LIMIT M, which is only
-        # unambiguous for one relation
-        ws = self._top_level_find(src, "WHERE")
-        table = (src[:ws] if ws >= 0 else src).strip()
-        if not _re.fullmatch(r"(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*", table):
-            return None
-        # Analyze the ORIGINAL query first: if the inner SELECT list has
-        # an unresolved column or a bad call, the rewrite must not mask
-        # the analysis error by serving a count built from keys only.
-        try:
-            self.spark.sql(s)
-        except Exception:  # noqa: BLE001 — let the full path raise it
-            return None
-        prev_got = None
-        for probe_rows in self._EARLY_LIMIT_PROBE_ROWS:
-            sql = (
-                f"SELECT COUNT(*) AS {alias} FROM ("
-                f"SELECT {keys} FROM (SELECT * FROM {src} "
-                f"LIMIT {probe_rows}) __cl_src "
-                f"GROUP BY {keys} LIMIT {k}) __cl_grp"
-            )
+        spark.sql is analysis-eager only, so physical planning has not
+        run yet; forcing it inside the window bakes the static plan into
+        the QueryExecution (which memoizes it) before the conf is
+        restored. This is the one place the engine flips
+        ``spark.sql.adaptive.enabled``."""
+        with self._conf_lock:
+            prev = self.spark.conf.get("spark.sql.adaptive.enabled")
+            prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions")
+            width = int(prev_parts) if cap is None else min(int(prev_parts), cap)
+            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+            self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
             try:
-                df = self.spark.sql(sql)
-                with self._conf_lock:
-                    prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-                    prev_parts = self.spark.conf.get(
-                        "spark.sql.shuffle.partitions"
-                    )
-                    self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                    self.spark.conf.set("spark.sql.shuffle.partitions", "8")
-                    try:
-                        df._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                    finally:
-                        self.spark.conf.set("spark.sql.adaptive.enabled", prev)
-                        self.spark.conf.set(
-                            "spark.sql.shuffle.partitions", prev_parts
-                        )
-                got = df.first()[0]
-            except Exception:  # noqa: BLE001 — fall back to the full plan
-                return None
-            if got >= k:
-                return df
-            if (
-                got * 4 < k
-                and prev_got is not None
-                and got < prev_got * 2
-            ):
-                # far below k AND the group count stopped growing
-                # across a 16x larger probe: the table very likely has
-                # < k groups in total — larger probes would only burn
-                # plan-time aggregations. (Growth alone doesn't bail:
-                # tables clustered by the group key legitimately show
-                # few groups in a prefix but keep escalating.)
-                return None
-            prev_got = got
-        return None
+                df._jdf.queryExecution().executedPlan()  # noqa: SLF001
+            finally:
+                self.spark.conf.set("spark.sql.adaptive.enabled", prev)
+                self.spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        return width
 
     def _temp_view_guards(self, df: DataFrame) -> dict:
         """semanticHash fingerprints of every TEMP VIEW the analyzed
@@ -1967,29 +1699,19 @@ class Engine:
         except Exception:  # noqa: BLE001
             return None
 
-    def _rebuild_from_cache(self, hit_df: DataFrame, mode: str) -> DataFrame:
+    def _rebuild_from_cache(
+        self, hit_df: DataFrame, width: Optional[int]
+    ) -> DataFrame:
         """Fresh Dataset from a cached statement's optimized plan,
-        re-applying its static-planning decision. Execution state is
+        re-applying its static-planning width. Execution state is
         untouched: the new QueryExecution's exchanges have never run."""
         jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(  # noqa: SLF001
             self.spark._jsparkSession,
             hit_df._jdf.queryExecution().optimizedPlan(),  # noqa: SLF001
         )
         df2 = DataFrame(jdf, hit_df.sparkSession)
-        if mode != "plain":
-            with self._conf_lock:
-                prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-                prev_parts = self.spark.conf.get("spark.sql.shuffle.partitions")
-                self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                if mode.startswith("small:"):
-                    self.spark.conf.set(
-                        "spark.sql.shuffle.partitions", mode.split(":", 1)[1]
-                    )
-                try:
-                    df2._jdf.queryExecution().executedPlan()  # noqa: SLF001
-                finally:
-                    self.spark.conf.set("spark.sql.adaptive.enabled", prev)
-                    self.spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        if width is not None:
+            self._plan_static(df2, width)
         return df2
 
     def _hot_reuse_info(self, hit_df: DataFrame):
@@ -2002,8 +1724,8 @@ class Engine:
         built relation, Subquery/ReusedSubquery cache their scalar
         result, InMemoryTableScan reads a cached RDD) — for such
         plans, re-collect recomputes every stage once the shuffle map
-        outputs are unregistered. AQE plans never reach here (mode
-        "plain" is excluded at the call site): their query stages hold
+        outputs are unregistered. AQE plans never reach here (width
+        None is excluded at the call site): their query stages hold
         materialized results the final plan would reuse."""
         try:
             plan = hit_df._jdf.queryExecution().executedPlan()  # noqa: SLF001
@@ -2043,35 +1765,10 @@ class Engine:
                 # executes from scratch.
                 pass
 
-    def _schedule_prebuild(self, key: str, hit_df: DataFrame, mode: str) -> None:
-        """Queue a background pre-plan of the next Dataset for this
-        cache entry (one slot per key). Failures are swallowed — the
-        slot is an optimization; the inline path always works."""
-
-        def work():
-            try:
-                with self._lock:
-                    if key not in self._plan_cache or self._prebuilt.get(key):
-                        return
-                df = self._rebuild_from_cache(hit_df, mode)
-                with self._lock:
-                    if key in self._plan_cache:
-                        slot = self._prebuilt.setdefault(key, [])
-                        if len(slot) < 1:
-                            slot.append(df)
-            except Exception:  # noqa: BLE001 — prebuild must never break queries
-                pass
-
-        try:
-            self._prep_pool.submit(work)
-        except RuntimeError:
-            pass  # pool shut down (interpreter exit)
-
     def _invalidate_plans(self) -> None:
         with self._lock:
             self._catalog_gen += 1
             self._plan_cache.clear()
-            self._prebuilt.clear()
 
     def _run_insert(self, sess: UserSession, sql: str) -> None:
         self._invalidate_plans()

@@ -783,11 +783,9 @@ def ngram_jaccard_pairs(
     # §2b shared-subtree pattern — the gram pipeline runs once per
     # pair side without it). Interleaved A/B at sf0.1: t08 min 1.92 →
     # 2.17 s (materializing corpus-sized gram ARRAYS costs more than
-    # the saved second gram pass), and the fresh checkpoint RDD per
-    # call busts connected_components' reuse_cache key for t30/t37
-    # (jobs 4 → 39 / 14 → 49, walls 0.4 → 3.2 / 1.0 → 4.3 s). Unlike
-    # the §2b LSH signature frame (slim fixed-width signatures), the
-    # duplicated subtree here is cheaper than its materialization.
+    # the saved second gram pass). Unlike the §2b LSH signature frame
+    # (slim fixed-width signatures), the duplicated subtree here is
+    # cheaper than its materialization.
     out = (
         pairs.join(g.withColumnRenamed(id_col, "id_a").withColumnRenamed("_g", "_ga"), "id_a")
         .join(g.withColumnRenamed(id_col, "id_b").withColumnRenamed("_g", "_gb"), "id_b")
@@ -1027,16 +1025,11 @@ def embedding_neardup_pairs(
     )
 
 
-_CC_CACHE: OrderedDict = OrderedDict()
-_CC_CACHE_MAX = 4
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    reuse_cache: bool = False,
 ) -> DataFrame:
     """Cluster near-duplicate pairs into components: (id, component)
     where ``component`` is the minimum node id reachable from ``id``.
@@ -1060,26 +1053,8 @@ def connected_components(
     their own singleton clusters; callers left-join if they need
     them). Deterministic: min-labels do not depend on partitioning.
     """
-    cache_key = None
-    if reuse_cache:
-        # Memoize the label frame per edge-set plan (semanticHash of
-        # the analyzed plan): a dedup pipeline runs pairs -> clusters
-        # -> survivors over the same edges, and the iterative pass is
-        # the expensive step. Opt-in because the hash keys the PLAN —
-        # appending files under an unchanged source path would not
-        # miss; callers enable it for immutable inputs only.
-        try:
-            cache_key = (
-                int(edges._jdf.queryExecution().analyzed().semanticHash()),  # noqa: SLF001
-                src,
-                dst,
-            )
-            hit = _CC_CACHE.get(cache_key)
-            if hit is not None:
-                _CC_CACHE.move_to_end(cache_key)
-                return hit
-        except Exception:  # noqa: BLE001
-            cache_key = None
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     e = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     )
@@ -1163,11 +1138,6 @@ def connected_components(
         if cur == prev_sum:
             break
         prev_sum = cur
-    if cache_key is not None:
-        _CC_CACHE[cache_key] = lab
-        _CC_CACHE.move_to_end(cache_key)
-        while len(_CC_CACHE) > _CC_CACHE_MAX:
-            _CC_CACHE.popitem(last=False)
     return lab
 
 

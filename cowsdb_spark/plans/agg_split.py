@@ -1,49 +1,25 @@
-"""Split DISTINCT + string-MIN/MAX aggregates into two joined passes.
+"""Drop derived GROUP BY keys before Spark plans the aggregate.
 
-Spark's HashAggregateExec requires every aggregation-buffer field to
-be an UnsafeRow-mutable (fixed-width) type; a ``MIN(string_col)``
-buffer is a string, so any aggregate containing one falls back to
-SortAggregateExec.  On its own that is tolerable (one sort keyed on
-the group-by columns).  Combined with a DISTINCT aggregate it is a
-disaster: Spark plans the single-distinct rewrite as THREE stacked
-aggregates — partial on (group_keys, distinct_col), merge, final —
-and because the string MIN rides in the buffer, every level is a
-SortAggregate, so the filtered data is sorted on the near-unique
-(group_keys, distinct_col) pair and resorted after the exchange
-(ClickBench Q22 shape).
-
-The split rewrite computes the non-distinct aggregates and the
-distinct aggregates in two separate GROUP BY subqueries over the same
-base relation and joins them null-safely on the group keys, giving
-each side its best physical operator — the string-MIN side a single
-SortAggregate keyed on the (low-cardinality) group keys only, the
-distinct side a pure fixed-width HashAggregate pipeline.
-
-**Measured verdict at 100M (tools/probe_cb22_r7.py →
-PROBE_AGGSPLIT_100M.json): REJECTED as a default.** cb22's contains
-filters pass ~1.3% of rows, so the sort pipeline runs on ~1.3M rows
-and costs less than the rewrite's second scan of the wide Title/URL
-string columns: 2.2 s single-pass vs 4.3 s split (fresh-JVM
-interleaved medians). The split pays only when the post-filter row
-count rivals the scan cost, so the engine applies it under
-``MOOSPARK_AGG_SPLIT=1`` instead of by default — kept because the
-shape analysis is also what powers ``reduce_group_keys`` (which IS
-default-on: cb35 14.5 → 10.9 s in the same artifact).
+``reduce_group_keys`` rewrites ``GROUP BY k, f(k)`` to ``GROUP BY k``
+when ``f`` is deterministic and references only retained simple-column
+keys: the derived key is constant within each group of ``k``, so the
+groups are identical, while the shuffle rows narrow and the hash covers
+fewer expressions (ClickBench Q35 groups by ClientIP and three
+ClientIP-minus-constant echoes; cb35 14.5 -> 10.9 s at 100M,
+PROBE_AGGSPLIT_100M.json). The engine applies it by default.
 
 This is a *conservative, text-level* pass over the translated Spark
-SQL: it fires only on a shape it can parse completely —
+SQL: it fires only on a shape ``parse_single_groupby`` parses
+completely —
 
     SELECT items FROM single_table [WHERE ...] GROUP BY keys
     [ORDER BY ...] [LIMIT n [OFFSET m]]
 
 with no subqueries, set operations, HAVING, windows, DISTINCT
-projection, ROLLUP/CUBE/GROUPING SETS, or nondeterministic functions;
-every aggregate item must carry an explicit alias.  Anything else
-returns ``None`` and the caller keeps the original plan.  The caller
-additionally gates on the original DataFrame's schema (the min/max
-output type IS the argument type) so numeric min/max — which
-hash-aggregates fine in one pass — never pays the extra scan, and
-re-analyzes the rewritten text, falling back if Spark rejects it.
+projection, ROLLUP/CUBE/GROUPING SETS, or nondeterministic functions.
+Anything else returns ``None`` and the caller keeps the original plan;
+the caller also re-analyzes the rewritten text and falls back if Spark
+rejects it.
 """
 
 from __future__ import annotations
@@ -101,35 +77,6 @@ def _split_alias(item: str) -> tuple[str, Optional[str]]:
                 expr = "".join(x.text for x in toks[: i]).strip()
                 return expr, tail.text.strip('`"')
     return item.strip(), None
-
-
-def _has_top_level_distinct(item: str) -> Optional[bool]:
-    """True if the item contains a DISTINCT aggregate, None (= bail)
-    if it mixes distinct and non-distinct aggregate calls."""
-    up = " " + re.sub(r"\s+", " ", item).upper() + " "
-    has_distinct = "(DISTINCT " in up or "( DISTINCT " in up
-    if not has_distinct:
-        return False
-    # count aggregate-looking calls: a distinct item must be ONLY
-    # distinct calls (an expression mixing both can't be split)
-    calls = re.findall(r"\b([A-Za-z_][A-Za-z_0-9]*)\s*\(", item)
-    agg_calls = [
-        c for c in calls
-        if c.upper() in ("COUNT", "SUM", "AVG", "MIN", "MAX", "COLLECT_SET")
-    ]
-    distinct_calls = len(re.findall(r"\(\s*DISTINCT\b", item, re.IGNORECASE))
-    if len(agg_calls) != distinct_calls:
-        return None
-    return True
-
-
-def _minmax_positions(items: list[str]) -> list[int]:
-    """Indices of items whose outermost call is MIN( or MAX(."""
-    out = []
-    for i, it in enumerate(items):
-        if re.match(r"\s*(MIN|MAX)\s*\(", it, re.IGNORECASE):
-            out.append(i)
-    return out
 
 
 def parse_single_groupby(sql: str) -> Optional[dict]:
@@ -227,98 +174,6 @@ def _split_top(s: str) -> list[str]:
     return [p for p in parts if p]
 
 
-def maybe_split_distinct_minmax(sql: str, schema) -> Optional[str]:
-    """Return the split rewrite of ``sql``, or None if the shape does
-    not match or would not benefit.  ``schema`` is the ORIGINAL
-    query's resolved schema (select items map 1:1 to its fields); the
-    rewrite fires only when some top-level MIN/MAX item's output type
-    is non-fixed-width (string/binary/complex) — the SortAggregate
-    trigger — alongside at least one DISTINCT aggregate item.
-    """
-    p = parse_single_groupby(sql)
-    if p is None:
-        return None
-    items = p["items"]
-    if len(schema) != len(items):
-        return None
-    # resolve GROUP BY ordinals to select-item expressions
-    keys = []
-    for k in p["keys"]:
-        if re.fullmatch(r"\d+", k):
-            idx = int(k) - 1
-            if not 0 <= idx < len(items):
-                return None
-            keys.append(_split_alias(items[idx])[0])
-        else:
-            keys.append(k)
-    key_norms = {_norm(k) for k in keys}
-
-    # classify select items
-    key_items: dict[int, tuple[str, str]] = {}      # pos -> (keyexpr, outname)
-    nd_items: dict[int, tuple[str, str]] = {}       # pos -> (expr, alias)
-    d_items: dict[int, tuple[str, str]] = {}
-    for i, it in enumerate(items):
-        expr, alias = _split_alias(it)
-        if _norm(expr) in key_norms:
-            name = alias or (expr.split(".")[-1].strip("`\" "))
-            if not re.fullmatch(r"[\w]+", name) and not alias:
-                return None  # unaliased expression key: unclear output name
-            key_items[i] = (expr, name)
-            continue
-        isdist = _has_top_level_distinct(it)
-        if isdist is None:
-            return None
-        if " over " in expr.lower():
-            return None  # window function
-        if alias is None:
-            return None  # non-key item without an explicit alias
-        # anything non-distinct goes to __m: the original query
-        # analyzed, so every item is an aggregate or an expression
-        # over group keys — both valid under __m's identical GROUP BY
-        (d_items if isdist else nd_items)[i] = (expr, alias)
-    if not d_items or not nd_items:
-        return None
-    # the benefit gate: a string-ish MIN/MAX among the non-distinct items
-    minmax = [
-        i for i in nd_items
-        if re.match(r"\s*(MIN|MAX)\s*\(", items[i], re.IGNORECASE)
-    ]
-    if not minmax:
-        return None
-    from pyspark.sql import types as T
-
-    fixed = (
-        T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType, T.DateType, T.TimestampType,
-        T.TimestampNTZType, T.DecimalType,
-    )
-    if not any(not isinstance(schema[i].dataType, fixed) for i in minmax):
-        return None
-
-    base = p["from"] + (f" WHERE {p['where']}" if p["where"] else "")
-    key_sel = ", ".join(f"{k} AS __k{j}" for j, k in enumerate(keys))
-    group_by = ", ".join(keys)
-    m_aggs = ", ".join(f"{e} AS `{a}`" for e, a in nd_items.values())
-    d_aggs = ", ".join(f"{e} AS `{a}`" for e, a in d_items.values())
-    join_on = " AND ".join(f"__m.__k{j} <=> __d.__k{j}" for j in range(len(keys)))
-    outer = []
-    for i in range(len(items)):
-        if i in key_items:
-            kexpr, name = key_items[i]
-            j = next(j for j, k in enumerate(keys) if _norm(k) == _norm(kexpr))
-            outer.append(f"__m.__k{j} AS `{name}`")
-        elif i in nd_items:
-            outer.append(f"__m.`{nd_items[i][1]}`")
-        else:
-            outer.append(f"__d.`{d_items[i][1]}`")
-    return (
-        f"SELECT {', '.join(outer)} FROM "
-        f"(SELECT {key_sel}, {m_aggs} FROM {base} GROUP BY {group_by}) __m "
-        f"JOIN (SELECT {key_sel}, {d_aggs} FROM {base} GROUP BY {group_by}) __d "
-        f"ON {join_on} {p['tail']}".strip()
-    )
-
-
 # Spark keywords that can appear as bare idents inside expressions and
 # must not be mistaken for column references.
 _EXPR_KEYWORDS = {
@@ -368,8 +223,8 @@ def reduce_group_keys(sql: str) -> Optional[str]:
     1 suffices).  Select items are untouched: an expression over
     group-by columns is valid post-aggregation in Spark.
 
-    Same conservative contract as the splitter: restricted shape only,
-    None when nothing changes, caller re-analyzes and falls back.
+    Restricted shape only (``parse_single_groupby``), None when
+    nothing changes; the caller re-analyzes and falls back.
     """
     p = parse_single_groupby(sql)
     if p is None:

@@ -2212,8 +2212,7 @@ def t30(spark, sf_dir):
         .join(d.select(F.col("doc_id").alias("id_b")), "id_b", "inner")
     )
     edges = ngram_jaccard_pairs(d, pairs, n=3).filter(F.col("jaccard") >= 0.5)
-    comp = connected_components(edges)  # no memo: benched entries must
-    # recompute label propagation every timed pass (r9 verdict #1)
+    comp = connected_components(edges)
     return (
         comp.groupBy("comp")
         .agg(F.count("*").alias("size"))
@@ -2453,8 +2452,7 @@ def t33(spark, sf_dir):
         .join(d.select(F.col("doc_id").alias("id_b")), "id_b", "inner")
     )
     edges = ngram_jaccard_pairs(d, pairs, n=3).filter(F.col("jaccard") >= 0.5)
-    comp = connected_components(edges)  # no memo: benched entries must
-    # recompute label propagation every timed pass (r9 verdict #1)
+    comp = connected_components(edges)
     losers = comp.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias("doc_id")
     )

@@ -1,17 +1,15 @@
-"""The DISTINCT + string-MIN/MAX aggregate splitter (plans/agg_split.py).
+"""The derived-GROUP-BY-key reduction (plans/agg_split.py).
 
-Shape gates, semantics (incl. NULL group keys through the null-safe
-join), and the engine integration's fall-back contract.
+Shape gates of the shared single-block parser, semantics of the
+reduction (NULL keys, ordinals), and the engine integration's
+fall-back contract.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from cowsdb_spark.plans.agg_split import (
-    maybe_split_distinct_minmax,
-    parse_single_groupby,
-)
+from cowsdb_spark.plans.agg_split import parse_single_groupby, reduce_group_keys
 
 CB22 = (
     "SELECT SearchPhrase, MIN(URL) AS mu, MIN(Title) AS mt, COUNT(*) AS c, "
@@ -21,13 +19,17 @@ CB22 = (
 )
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=str)
+
+
 @pytest.fixture(scope="module")
 def t(spark):
     rows = [
         ("a", "u1", 1, "mm"),
         ("a", "u2", 2, "zz"),
         ("b", "u1", 3, "aa"),
-        (None, "u3", 4, "qq"),  # NULL group key must survive the join
+        (None, "u3", 4, "qq"),  # NULL group key must survive the rewrite
         (None, "u3", 5, "pp"),
     ]
     df = spark.createDataFrame(rows, "k string, s string, n long, v string")
@@ -36,36 +38,6 @@ def t(spark):
 
 
 class TestShapeGates:
-    def test_fires_on_cb22_shape(self, spark):
-        spark.sql("SELECT 1").collect()  # session alive
-        schema = spark.sql(
-            "SELECT 'x' AS SearchPhrase, 'u' AS mu, 't' AS mt, "
-            "CAST(1 AS BIGINT) AS c, CAST(1 AS BIGINT) AS u"
-        ).schema
-        out = maybe_split_distinct_minmax(CB22, schema)
-        assert out is not None and "<=>" in out and out.count("GROUP BY") == 2
-
-    def test_bails_without_distinct(self, spark, t):
-        sql = (
-            "SELECT k, MIN(v) AS mv, COUNT(*) AS c FROM agg_split_t "
-            "GROUP BY k"
-        )
-        assert maybe_split_distinct_minmax(sql, spark.sql(sql).schema) is None
-
-    def test_bails_without_minmax(self, spark, t):
-        sql = (
-            "SELECT k, COUNT(*) AS c, COUNT(DISTINCT s) AS u "
-            "FROM agg_split_t GROUP BY k"
-        )
-        assert maybe_split_distinct_minmax(sql, spark.sql(sql).schema) is None
-
-    def test_bails_on_numeric_minmax(self, spark, t):
-        sql = (
-            "SELECT k, MIN(n) AS mn, COUNT(DISTINCT s) AS u "
-            "FROM agg_split_t GROUP BY k"
-        )
-        assert maybe_split_distinct_minmax(sql, spark.sql(sql).schema) is None
-
     def test_bails_on_having_subquery_window(self):
         assert parse_single_groupby(
             "SELECT k, MIN(v) AS m, COUNT(DISTINCT s) AS u FROM t "
@@ -78,58 +50,53 @@ class TestShapeGates:
             "SELECT k, MIN(v) AS m FROM a JOIN b ON a.k = b.k GROUP BY k"
         ) is None
 
-    def test_bails_on_unaliased_aggregate(self, spark, t):
-        sql = (
-            "SELECT k, MIN(v), COUNT(DISTINCT s) AS u "
-            "FROM agg_split_t GROUP BY k"
-        )
-        assert maybe_split_distinct_minmax(sql, spark.sql(sql).schema) is None
-
     def test_string_literal_parens_do_not_confuse(self, spark, t):
-        # a '(' inside a literal must not corrupt clause detection
+        # a '(' or clause keyword inside a literal must not corrupt
+        # clause detection
         sql = (
-            "SELECT k, MIN(v) AS mv, COUNT(DISTINCT s) AS u "
-            "FROM agg_split_t WHERE v <> '(from group' GROUP BY k"
+            "SELECT k, k || 'x' AS kx, COUNT(*) AS c "
+            "FROM agg_split_t WHERE v <> '(from group' GROUP BY k, k || 'x'"
         )
-        out = maybe_split_distinct_minmax(sql, spark.sql(sql).schema)
-        assert out is not None and out.count("'(from group'") == 2
+        p = parse_single_groupby(sql)
+        assert p is not None and p["where"] == "v <> '(from group'"
+        assert p["keys"] == ["k", "k || 'x'"]
+        out = reduce_group_keys(sql)
+        assert out is not None and out.count("'(from group'") == 1
+        assert _rows(spark.sql(out)) == _rows(spark.sql(sql))
 
 
 class TestSemantics:
     def test_null_group_key_survives(self, spark, t):
         sql = (
-            "SELECT k, MIN(v) AS mv, COUNT(*) AS c, COUNT(DISTINCT s) AS u "
-            "FROM agg_split_t GROUP BY k ORDER BY k"
+            "SELECT k, upper(k) AS ku, COUNT(*) AS c, COUNT(DISTINCT s) AS u "
+            "FROM agg_split_t GROUP BY k, upper(k) ORDER BY k"
         )
         base = spark.sql(sql)
-        out = maybe_split_distinct_minmax(sql, base.schema)
-        assert out is not None
+        out = reduce_group_keys(sql)
+        assert out is not None and "GROUP BY k ORDER" in out
         got = spark.sql(out)
         assert got.columns == base.columns
-        assert sorted(map(tuple, got.collect()), key=str) == sorted(
-            map(tuple, base.collect()), key=str
-        )
+        assert _rows(got) == _rows(base)
+        assert (None, None, 2, 1) in _rows(got)
 
     def test_multi_key_and_ordinal(self, spark, t):
         sql = (
-            "SELECT k, s, MIN(v) AS mv, COUNT(DISTINCT n) AS u "
-            "FROM agg_split_t GROUP BY 1, s ORDER BY k, s"
+            "SELECT k, s, concat(k, s) AS ks, MIN(v) AS mv, "
+            "COUNT(DISTINCT n) AS u FROM agg_split_t "
+            "GROUP BY 1, s, concat(k, s) ORDER BY k, s"
         )
         base = spark.sql(sql)
-        out = maybe_split_distinct_minmax(sql, base.schema)
-        assert out is not None
+        out = reduce_group_keys(sql)
+        assert out is not None and "GROUP BY k, s ORDER" in out
         got = spark.sql(out)
         assert got.columns == base.columns
-        assert sorted(map(tuple, got.collect()), key=str) == sorted(
-            map(tuple, base.collect()), key=str
-        )
+        assert _rows(got) == _rows(base)
 
 
 class TestEngineIntegration:
-    def test_split_is_opt_in_and_matches(self, spark, monkeypatch):
-        # default OFF: rejected at 100M (PROBE_AGGSPLIT_100M.json —
-        # cb22's 1.3%-selective filter makes the second scan cost more
-        # than the single SortAggregate pipeline it removes)
+    def test_cb22_default_path_matches(self, spark):
+        # cb22 (DISTINCT + string MIN) runs as one aggregate pipeline:
+        # no rewrite joins two passes, and the answer matches raw Spark
         from cowsdb_spark.engine import Engine
 
         from tools.gen_hits import ensure_hits
@@ -141,19 +108,10 @@ class TestEngineIntegration:
         assert "Join" not in plan
         base = [tuple(r) for r in spark.sql(CB22).collect()]
         assert [tuple(r) for r in df.collect()] == base
-        # opt-in ON: the split engages and still matches
-        monkeypatch.setenv("MOOSPARK_AGG_SPLIT", "1")
-        eng2 = Engine(spark)
-        df2 = eng2.execute_to_df(CB22)[0]
-        plan2 = df2._jdf.queryExecution().executedPlan().toString()
-        assert "Join" in plan2
-        assert [tuple(r) for r in df2.collect()] == base
 
 
 class TestReduceGroupKeys:
     def test_drops_derived_keys(self):
-        from cowsdb_spark.plans.agg_split import reduce_group_keys
-
         sql = (
             "SELECT ClientIP, ClientIP - 1 AS m1, COUNT(*) AS c FROM hits "
             "GROUP BY ClientIP, ClientIP - 1 ORDER BY c DESC LIMIT 10"
@@ -163,8 +121,6 @@ class TestReduceGroupKeys:
         assert "GROUP BY ClientIP ORDER" in out and "- 1 AS m1" in out
 
     def test_keeps_keys_with_foreign_refs(self):
-        from cowsdb_spark.plans.agg_split import reduce_group_keys
-
         # extract() references EventTime, which is not a retained key
         sql = (
             "SELECT UserID, extract(minute FROM EventTime) AS m, COUNT(*) AS c "
@@ -193,32 +149,11 @@ class TestReduceGroupKeys:
         base = [tuple(r) for r in spark.sql(sql).collect()]
         assert [tuple(r) for r in df.collect()] == base
 
-    def test_reduced_plus_split_compose(self, spark, monkeypatch):
-        from cowsdb_spark.engine import Engine
-
-        monkeypatch.setenv("MOOSPARK_AGG_SPLIT", "1")
-        from tools.gen_hits import ensure_hits
-
-        spark.read.parquet(ensure_hits()).createOrReplaceTempView("hits")
-        eng = Engine(spark)
-        sql = (
-            "SELECT ClientIP, ClientIP - 1 AS m1, MIN(Title) AS mt, "
-            "COUNT(DISTINCT UserID) AS u FROM hits "
-            "GROUP BY ClientIP, ClientIP - 1 ORDER BY u DESC, ClientIP LIMIT 5"
-        )
-        df = eng.execute_to_df(sql)[0]
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Join" in plan
-        base = [tuple(r) for r in spark.sql(sql).collect()]
-        assert [tuple(r) for r in df.collect()] == base
-
 
 class TestNondeterministicKeys:
     def test_partition_id_key_not_dropped(self, spark):
         # spark_partition_id() is per-row nondeterministic: dropping a
         # key built from it would merge groups (review finding r7)
-        from cowsdb_spark.plans.agg_split import reduce_group_keys
-
         sql = (
             "SELECT k, k + spark_partition_id() AS p, COUNT(*) AS c "
             "FROM t GROUP BY k, k + spark_partition_id()"
@@ -241,7 +176,7 @@ class TestNondeterministicKeys:
 
 
 class TestRewriteProperty:
-    """Property fuzz over the text-level passes: random keyword casing,
+    """Property fuzz over the key reduction: random keyword casing,
     whitespace, alias spellings, and clause-keyword-bearing string
     literals must never change results — the rewrite either fires with
     identical output or bails."""
@@ -270,11 +205,6 @@ class TestRewriteProperty:
     def test_fuzzed_shapes_match_base(self, spark):
         import random
 
-        from cowsdb_spark.plans.agg_split import (
-            maybe_split_distinct_minmax,
-            reduce_group_keys,
-        )
-
         rows = [
             ("a", "u1", 1, "mm"), ("a", "u2", 2, "zz"), ("b", "u1", 3, "aa"),
             (None, "u3", 4, "(where group"), ("b", None, 5, "order by"),
@@ -297,7 +227,6 @@ class TestRewriteProperty:
             base = sorted(
                 map(tuple, spark.sql(base_sql).collect()), key=str
             )
-            schema = spark.sql(base_sql).schema
             for _ in range(6):
                 fuzzed = self._perturb(base_sql, rng)
                 want = sorted(
@@ -310,9 +239,3 @@ class TestRewriteProperty:
                         map(tuple, spark.sql(red).collect()), key=str
                     )
                     assert got == base, f"reduce broke: {fuzzed!r} -> {red!r}"
-                split = maybe_split_distinct_minmax(red or fuzzed, schema)
-                if split is not None:
-                    got = sorted(
-                        map(tuple, spark.sql(split).collect()), key=str
-                    )
-                    assert got == base, f"split broke: {fuzzed!r} -> {split!r}"

@@ -923,7 +923,7 @@ class TestGroupByFdeps:
 
 class TestSmallScanFastPath:
     """Small inputs plan statically (no AdaptiveSparkPlan); the session
-    AQE conf is restored afterwards (engine.py Engine._plan_select)."""
+    AQE conf is restored afterwards (Engine.execute_to_df)."""
 
     def test_static_plan_and_conf_restored(self, spark):
         from cowsdb_spark.engine import Engine

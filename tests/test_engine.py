@@ -1000,6 +1000,44 @@ class TestPlanCacheGuards:
         all_after = engine.spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
         assert all_after > all_before, "cache hit executed zero Spark jobs"
 
+    def test_warm_hit_rebuilds_broadcast_plan(self, engine, monkeypatch):
+        # a plan holding a BroadcastExchange memoizes the built relation
+        # inside the plan object, so it must not be reused as-is: the
+        # hit is rebuilt from the cached optimized plan (WARM tier) and
+        # re-executes, broadcast included
+        u = {"user": "pcgw"}
+        engine.execute("CREATE TABLE pw_dim (k Int64, name String) ENGINE=Memory", **u)
+        engine.execute("INSERT INTO pw_dim VALUES (0, 'zero'), (1, 'one'), (2, 'two')", **u)
+        engine.execute("CREATE TABLE pw_fact (x Int64) ENGINE=Memory", **u)
+        engine.execute("INSERT INTO pw_fact SELECT number AS x FROM numbers(3000)", **u)
+        sql = (
+            "SELECT d.name, count() AS c FROM pw_fact AS f "
+            "JOIN pw_dim AS d ON f.x % 3 = d.k GROUP BY d.name ORDER BY d.name"
+        )
+        df = engine.execute_to_df(sql, **u)[0]
+        assert "BroadcastExchange" in df._jdf.queryExecution().executedPlan().toString()
+        first = [tuple(r) for r in df.collect()]
+        assert first == [("one", 1000), ("two", 1000), ("zero", 1000)]
+        rebuilds = []
+        orig = engine._rebuild_from_cache
+
+        def spy(hit_df, width):
+            rebuilds.append(width)
+            return orig(hit_df, width)
+
+        monkeypatch.setattr(engine, "_rebuild_from_cache", spy)
+        sched = engine.spark.sparkContext._jsc.sc().dagScheduler()
+        before = sched.nextJobId()
+        df2 = engine.execute_to_df(sql, **u)[0]  # cache hit
+        second = [tuple(r) for r in df2.collect()]
+        after = sched.nextJobId()
+        assert len(rebuilds) == 1, "second run was not a WARM cache hit"
+        assert df2 is not df
+        assert after > before, "WARM hit executed zero Spark jobs"
+        assert second == first
+        engine.execute("DROP TABLE pw_dim", **u)
+        engine.execute("DROP TABLE pw_fact", **u)
+
 
 class TestAttachDetach:
     """DETACH TABLE hides a table (data kept, invisible to queries
@@ -1260,10 +1298,8 @@ class TestAvroEngine:
 
 
 class TestEarlyLimitCount:
-    """Streaming-limit early exit: COUNT(*) over a LIMIT-without-ORDER
-    grouped subquery answers least(k, |groups|) from a bounded source
-    slice when the slice provably holds >= k groups
-    (engine._try_early_limit_count)."""
+    """COUNT(*) over a LIMIT-without-ORDER grouped subquery (the
+    ClickBench Q17 shape) answers least(k, |groups|)."""
 
     @pytest.fixture(scope="class")
     def tbl(self, engine):
@@ -1300,39 +1336,8 @@ class TestEarlyLimitCount:
         )
         assert out == b"3\n"
 
-    def test_order_by_inside_not_rewritten(self, engine, tbl):
-        # ORDER BY makes the subquery's row identity meaningful: the
-        # rewrite must not fire (result identical either way here, but
-        # the plan must be the full one)
-        assert (
-            engine._try_early_limit_count(
-                "SELECT COUNT(*) AS c FROM (SELECT x, COUNT(*) AS n "
-                "FROM some_table GROUP BY x ORDER BY n LIMIT 7) q"
-            )
-            is None
-        )
-
-    def test_having_not_rewritten(self, engine, tbl):
-        assert (
-            engine._try_early_limit_count(
-                "SELECT COUNT(*) AS c FROM (SELECT x FROM some_table "
-                "GROUP BY x HAVING COUNT(*) > 2 LIMIT 7) q"
-            )
-            is None
-        )
-
-    def test_positional_key_not_rewritten(self, engine, tbl):
-        assert (
-            engine._try_early_limit_count(
-                "SELECT COUNT(*) AS c FROM (SELECT x FROM some_table "
-                "GROUP BY 1 LIMIT 7) q"
-            )
-            is None
-        )
-
     def test_alias_key_falls_back_correct(self, engine, tbl):
-        # group key is a select alias: the probe can't resolve it over
-        # SELECT *, so the full plan serves — and is correct
+        # group key is a select alias
         out = engine.execute(
             "SELECT COUNT(*) AS c FROM (SELECT x % 3 AS a, COUNT(*) AS n "
             "FROM elc_t GROUP BY a LIMIT 2) q",
@@ -1341,7 +1346,7 @@ class TestEarlyLimitCount:
         assert out == b"2\n"
 
     def test_expression_key(self, engine, tbl):
-        # verbatim expression keys resolve over the probe's SELECT *
+        # verbatim expression key
         out = engine.execute(
             "SELECT COUNT(*) AS c FROM (SELECT x % 10 AS m, COUNT(*) AS n "
             "FROM elc_t GROUP BY x % 10 LIMIT 4) q",
@@ -1351,24 +1356,24 @@ class TestEarlyLimitCount:
 
     def test_reprobes_after_insert(self, engine, tbl):
         # soundness under mutation: the plan-cache key carries the
-        # catalog generation, so growing the table re-probes instead
-        # of serving the stale limited/full decision
+        # catalog generation, so growing the table re-answers instead
+        # of serving a plan cached before the insert
         u = {"user": "elc"}
         engine.execute("CREATE TABLE elc_m (x Int64) ENGINE=Memory", **u)
         engine.execute("INSERT INTO elc_m SELECT number % 3 AS x FROM numbers(50)", **u)
         q = ("SELECT COUNT(*) AS c FROM "
              "(SELECT x, COUNT(*) AS n FROM elc_m GROUP BY x LIMIT 10) q")
-        assert engine.execute(q, **u) == b"3\n"   # 3 groups < 10: full plan
+        assert engine.execute(q, **u) == b"3\n"   # 3 groups < 10
         engine.execute(
             "INSERT INTO elc_m SELECT number % 40 AS x FROM numbers(400)", **u
         )
-        assert engine.execute(q, **u) == b"10\n"  # 41 distinct now: early exit
+        assert engine.execute(q, **u) == b"10\n"  # 41 distinct now
         engine.execute("DROP TABLE elc_m", **u)
 
     def test_analysis_error_still_raised(self, engine, tbl):
-        # r6 (ADVICE): an unresolved column in the inner SELECT list
-        # (never referenced by GROUP BY) must surface the analysis
-        # error, not be masked by the keys-only rewritten count
+        # an unresolved column in the inner SELECT list (never
+        # referenced by GROUP BY or the outer COUNT) must surface the
+        # analysis error
         from cowsdb_spark.engine import EngineError
 
         with pytest.raises(EngineError):

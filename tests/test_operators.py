@@ -1162,23 +1162,13 @@ class TestSamplePerKey:
         assert sample_per_key(d, k=10).count() == 2
 
 
-class TestConnectedComponentsCache:
-    def test_opt_in_cache_hits_and_misses(self, spark):
-        from cowsdb_spark.operators.dedup import _CC_CACHE, connected_components
+class TestConnectedComponentsArgs:
+    def test_max_iter_below_one_raises(self, spark):
+        from cowsdb_spark.operators.dedup import connected_components
 
-        _CC_CACHE.clear()
-        e1 = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-        r1 = connected_components(e1, reuse_cache=True)
-        assert len(_CC_CACHE) == 1
-        r2 = connected_components(e1, reuse_cache=True)
-        assert r2 is r1  # plan-identical edges reuse the label frame
-        e2 = spark.createDataFrame([(5, 6)], "id_a long, id_b long")
-        out = {r.id: r.comp for r in connected_components(e2, reuse_cache=True).collect()}
-        assert out == {5: 5, 6: 5} and len(_CC_CACHE) == 2
-        # default path never touches the cache
-        _CC_CACHE.clear()
-        connected_components(e1)
-        assert len(_CC_CACHE) == 0
+        e = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+        with pytest.raises(ValueError, match="max_iter"):
+            connected_components(e, max_iter=0)
 
 
 class TestContamination:
