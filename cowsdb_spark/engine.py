@@ -36,7 +36,7 @@ from .dialect.ddl import (
     TruncateTable,
     parse_ddl,
 )
-from .formats import QueryResult, serialize
+from .formats import FORMATS, QueryResult, serialize
 from .functions.ch_hashes import register_all as _register_hashes
 from .functions.codecs import register_all as _register_codecs
 from .functions.misc_udfs import register_all as _register_misc
@@ -447,71 +447,23 @@ class Engine:
         X-ClickHouse-Summary response header. ``extra_settings`` are
         query-level settings (CH URL params): above session SET,
         below an explicit statement SETTINGS clause."""
-        t_start = time.time()
-        try:
-            df, out_fmt, settings, elapsed = self.execute_to_df(
-                query, user, password, database, params=params, session_id=session_id
-            )
-        except EngineError as e:
-            self._log_query(user, password, query, time.time() - t_start, 0,
-                            "ExceptionWhileProcessing", str(e))
-            raise
-        eng_warnings = settings.pop("__engine_warnings__", [])
-        outfile = settings.pop("__outfile__", None)
-        outfile_mode = settings.pop("__outfile_mode__", "error")
-        outfile_stdout = settings.pop("__outfile_stdout__", False)
-        sess = self.get_session(user, password, session_id)
-        merged = {**sess.settings, **(extra_settings or {}), **settings}
-        use_fmt = out_fmt or fmt or merged.get("default_format") or "TSV"
-        # Warning channel (reference main.py:863-868: a query can succeed
-        # WITH non-fatal stderr text and still return 200).  Our analog:
-        # per-query settings the engine accepted but does not act on are
-        # reported as warnings in the stats dict; servers surface them
-        # without failing the query.  Session-level SET values don't
-        # re-warn on every subsequent statement.
-        warnings = eng_warnings + [
-            f"Setting '{k}' was accepted but is ignored by this engine"
-            for k in {**(extra_settings or {}), **settings}
-            if k not in ACTED_SETTINGS
-        ]
-        if df is None:
-            stats0 = {"result_rows": 0, "elapsed_ns": int(elapsed * 1e9)}
-            if warnings:
-                stats0["warnings"] = warnings
-            self._log_query(user, password, query, elapsed, 0, "QueryFinish", "")
-            return b"", use_fmt, stats0
-        res = QueryResult.from_dataframe(df, elapsed=elapsed)
-        res.elapsed = elapsed
-        res.totals = getattr(df, "_moospark_totals", None)
-        max_rows = None
-        if "max_result_rows" in merged:
-            try:
-                max_rows = int(merged["max_result_rows"])
-            except ValueError:
-                pass
-        # res.rows is a lazy iterator (toLocalIterator) — count rows
-        # as the serializer drains it, without materializing
-        counted = {"n": 0}
-
-        def _counting(it):
-            for r in it:
-                counted["n"] += 1
-                yield r
-
-        res.rows = _counting(res.rows)
+        res, use_fmt, merged, stats = self.execute_collect(
+            query, fmt, user, password, database,
+            extra_settings=extra_settings, params=params, session_id=session_id,
+        )
+        if res is None:
+            return b"", use_fmt, stats
         try:
             body = serialize(
-                res, use_fmt, max_result_rows=max_rows,
+                res, use_fmt,
                 settings={**merged,
                           "__format_schema_path__": self.format_schema_dir},
             )
         except ValueError as e:
-            if "unknown format" in str(e).lower():
-                # CH code 73: UNKNOWN_FORMAT
-                raise EngineError(f"Unknown format {use_fmt}", 73) from e
             # schema-file format misuse (missing/invalid format_schema,
             # path escape, unknown message): CH BAD_ARGUMENTS
             raise EngineError(str(e), 36) from e
+        outfile = merged.get("__outfile__")
         if outfile:
             # INTO OUTFILE: result bytes go to the file; the wire body
             # is empty unless AND STDOUT was given (CH semantics —
@@ -523,27 +475,91 @@ class Engine:
             # client-side only and rejects it on the server).
             import os as _os
 
-            target = self._confine_outfile(outfile)
-            if outfile_mode == "error" and _os.path.exists(target):
+            path, mode, and_stdout = outfile
+            target = self._confine_outfile(path)
+            if mode == "error" and _os.path.exists(target):
                 raise EngineError(
-                    f"File '{outfile}' already exists "
+                    f"File '{path}' already exists "
                     "(use TRUNCATE or APPEND to overwrite)", code=76
                 )
-            with open(target, "ab" if outfile_mode == "append" else "wb") as f:
+            with open(target, "ab" if mode == "append" else "wb") as f:
                 f.write(body)
-            if not outfile_stdout:
+            if not and_stdout:
                 body = b""
-        stats = {
-            "result_rows": counted["n"],
-            "result_bytes": len(body),
-            "elapsed_ns": int(elapsed * 1e9),
-        }
+        stats["result_bytes"] = len(body)
+        return body, use_fmt, stats
+
+    def execute_collect(
+        self,
+        query: str,
+        fmt: Optional[str] = None,
+        user: str = "default",
+        password: str = "",
+        database: Optional[str] = None,
+        extra_settings: Optional[dict] = None,
+        params: Optional[dict] = None,
+        session_id: str = "",
+    ) -> tuple[Optional[QueryResult], str, dict, dict]:
+        """Run a query, collect its result once and write its one
+        ``system.query_log`` row; both wires answer from here.
+
+        Returns ``(result, format, settings, stats)``. ``result`` is
+        None for statements that return no rows; otherwise ``format``
+        (FORMAT clause > ``fmt`` > session SET > TSV) must be a known
+        one, checked before the collect. ``max_result_rows`` becomes a
+        Spark LIMIT before the collect. ``settings`` merges
+        session SET < ``extra_settings`` < statement SETTINGS, plus the
+        statement's ``__outfile__`` target."""
+        t_start = time.time()
+        try:
+            df, out_fmt, settings, _ = self.execute_to_df(
+                query, user, password, database, params=params, session_id=session_id
+            )
+            eng_warnings = settings.pop("__engine_warnings__", [])
+            outfile = settings.pop("__outfile__", None)
+            sess = self.get_session(user, password, session_id)
+            merged = {**sess.settings, **(extra_settings or {}), **settings}
+            use_fmt = out_fmt or fmt or merged.get("default_format") or "TSV"
+            res = None
+            if df is not None:
+                if use_fmt.lower() not in FORMATS:
+                    # CH code 73: UNKNOWN_FORMAT, before any Spark work
+                    raise EngineError(f"Unknown format {use_fmt}", 73)
+                totals = getattr(df, "_moospark_totals", None)
+                try:
+                    max_rows = int(merged.get("max_result_rows", 0))
+                except ValueError:
+                    max_rows = 0
+                if max_rows > 0:  # CH: 0 means no limit
+                    df = df.limit(max_rows)
+                res = QueryResult.from_dataframe(df)
+                res.totals = totals
+        except Exception as e:
+            self._log_query(user, password, query, time.time() - t_start, 0,
+                            "ExceptionWhileProcessing", _clean_spark_error(e))
+            raise
+        elapsed = time.time() - t_start
+        n_rows = len(res.rows) if res is not None else 0
+        self._log_query(user, password, query, elapsed, n_rows, "QueryFinish", "")
+        if res is not None:
+            res.elapsed = elapsed
+        stats = {"result_rows": n_rows, "elapsed_ns": int(elapsed * 1e9)}
+        # Warning channel (reference main.py:863-868: a query can succeed
+        # WITH non-fatal stderr text and still return 200).  Our analog:
+        # per-query settings the engine accepted but does not act on are
+        # reported as warnings in the stats dict; servers surface them
+        # without failing the query.  Session-level SET values don't
+        # re-warn on every subsequent statement.
+        warnings = eng_warnings + [
+            f"Setting '{k}' was accepted but is ignored by this engine"
+            for k in {**(extra_settings or {}), **settings}
+            if k not in ACTED_SETTINGS
+        ]
         if warnings:
             stats["warnings"] = warnings
-        self._log_query(
-            user, password, query, elapsed, counted["n"], "QueryFinish", ""
-        )
-        return body, use_fmt, stats
+        if outfile:
+            merged["__outfile__"] = outfile
+        return res, use_fmt, merged, stats
 
     def execute_to_df(
         self,
@@ -614,9 +630,9 @@ class Engine:
                 out_fmt = st.format or out_fmt
                 settings.update(st.settings)
                 if st.outfile:
-                    settings["__outfile__"] = st.outfile
-                    settings["__outfile_mode__"] = st.outfile_mode
-                    settings["__outfile_stdout__"] = st.outfile_and_stdout
+                    settings["__outfile__"] = (
+                        st.outfile, st.outfile_mode, st.outfile_and_stdout
+                    )
                 result_df = self._run_show(sess, st.spark_sql)
                 if result_df is None:
                     result_df = self._run_select(sess, st.spark_sql)

@@ -2,42 +2,44 @@
 
 The reference returns chDB's formatted bytes verbatim
 (main.py:190,205); we serialize collected Spark rows ourselves.
-Entry point: ``serialize(result, fmt) -> bytes``.
+Entry points: ``serialize(result, fmt) -> bytes`` and
+``content_type(fmt)``, both read from ``FORMATS``, the one table of
+format names and aliases.
 
-Large results stream through ``toLocalIterator()`` so the driver
-never materializes the full result (100 TB design, SURVEY §7G);
-``max_result_rows`` from query settings is enforced here as a cheap
-serializer-side LIMIT (the Play UI sends it, index.html:511-514).
+Every serializer builds its whole body in memory from the collected
+row list. The engine collects each result once and applies
+``max_result_rows`` before that as a Spark LIMIT (the Play UI sends it,
+index.html:511-514), so a serializer sees exactly the rows it writes.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-from typing import Iterable, Iterator, Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 
 from ..dialect.types import spark_type_to_ch
+from .avro import write_ocf
+from .native import encode_row_value, to_native, wire_type, write_varint, write_varstr
 from .render import csv_cell, json_value, plain_text, tsv_cell
 
 
 @dataclass
 class QueryResult:
-    """Schema + row iterator + execution statistics."""
+    """Schema + collected rows + execution statistics."""
 
     columns: list[str]
     ch_types: list[str]
-    rows: Iterable[tuple]
+    rows: list[tuple]
     elapsed: float = 0.0
     rows_read: int = 0
     bytes_read: int = 0
     totals: Optional[tuple] = None  # GROUP BY … WITH TOTALS row
 
     @classmethod
-    def from_dataframe(
-        cls, df: DataFrame, elapsed: float = 0.0, stream: bool = True
-    ) -> "QueryResult":
+    def from_dataframe(cls, df: DataFrame) -> "QueryResult":
         # CalendarIntervalType rows can't cross the Python converter
         # (toIntervalDay(2) projected bare) — render as Spark's
         # interval string instead of crashing the whole query
@@ -57,18 +59,7 @@ class QueryResult:
         schema = df.schema
         cols = [f.name for f in schema.fields]
         ch_types = [spark_type_to_ch(f.dataType, f.nullable) for f in schema.fields]
-        rows = df.toLocalIterator() if stream else iter(df.collect())
-        return cls(columns=cols, ch_types=ch_types, rows=rows)
-
-
-def _limited(rows: Iterable[tuple], limit: Optional[int]) -> Iterator[tuple]:
-    if limit is None:
-        yield from rows
-        return
-    for i, r in enumerate(rows):
-        if i >= limit:
-            return
-        yield r
+        return cls(columns=cols, ch_types=ch_types, rows=df.collect())
 
 
 def to_tsv(
@@ -76,7 +67,6 @@ def to_tsv(
     with_names: bool = False,
     with_types: bool = False,
     raw: bool = False,
-    limit: Optional[int] = None,
 ) -> bytes:
     out: list[str] = []
     if with_names:
@@ -84,7 +74,7 @@ def to_tsv(
         if with_types:
             out.append("\t".join(res.ch_types) + "\n")
     cell = plain_text if raw else tsv_cell  # Raw = no escaping (CH TSVRaw)
-    for row in _limited(res.rows, limit):
+    for row in res.rows:
         out.append("\t".join(cell(v) for v in row) + "\n")
     if res.totals is not None:
         # CH TSV WITH TOTALS: blank line, then the totals row
@@ -96,14 +86,13 @@ def to_csv(
     res: QueryResult,
     with_names: bool = False,
     with_types: bool = False,
-    limit: Optional[int] = None,
 ) -> bytes:
     out: list[str] = []
     if with_names:
         out.append(",".join('"' + c.replace('"', '""') + '"' for c in res.columns) + "\n")
         if with_types:
             out.append(",".join('"' + t.replace('"', '""') + '"' for t in res.ch_types) + "\n")
-    for row in _limited(res.rows, limit):
+    for row in res.rows:
         out.append(",".join(csv_cell(v) for v in row) + "\n")
     return "".join(out).encode("utf-8")
 
@@ -120,12 +109,12 @@ def _statistics(res: QueryResult) -> dict:
     }
 
 
-def to_json(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_json(res: QueryResult) -> bytes:
     """CH ``JSON`` envelope: meta/data/rows/statistics
     (Play UI consumes meta + statistics, index.html:579,707-712)."""
     data = [
         {c: json_value(v) for c, v in zip(res.columns, row)}
-        for row in _limited(res.rows, limit)
+        for row in res.rows
     ]
     doc = {
         "meta": _meta(res),
@@ -138,9 +127,9 @@ def to_json(res: QueryResult, limit: Optional[int] = None) -> bytes:
     return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode("utf-8")
 
 
-def to_json_compact(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_json_compact(res: QueryResult) -> bytes:
     data = [
-        [json_value(v) for v in row] for row in _limited(res.rows, limit)
+        [json_value(v) for v in row] for row in res.rows
     ]
     doc = {
         "meta": _meta(res),
@@ -153,28 +142,27 @@ def to_json_compact(res: QueryResult, limit: Optional[int] = None) -> bytes:
     return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode("utf-8")
 
 
-def to_json_compact_columns(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_json_compact_columns(res: QueryResult) -> bytes:
     """Array of column arrays (Play UI chart path, index.html:583-584)."""
-    rows = list(_limited(res.rows, limit))
-    cols = [[json_value(r[i]) for r in rows] for i in range(len(res.columns))]
+    cols = [[json_value(r[i]) for r in res.rows] for i in range(len(res.columns))]
     return (json.dumps(cols, ensure_ascii=False) + "\n").encode("utf-8")
 
 
-def to_json_each_row(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_json_each_row(res: QueryResult) -> bytes:
     out = [
         json.dumps({c: json_value(v) for c, v in zip(res.columns, row)}, ensure_ascii=False)
         + "\n"
-        for row in _limited(res.rows, limit)
+        for row in res.rows
     ]
     return "".join(out).encode("utf-8")
 
 
-def to_json_strings(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_json_strings(res: QueryResult) -> bytes:
     """CH ``JSONStrings``: the JSON envelope with every value rendered
     as a string."""
     data = [
         {c: plain_text(v) for c, v in zip(res.columns, row)}
-        for row in _limited(res.rows, limit)
+        for row in res.rows
     ]
     doc = {
         "meta": _meta(res),
@@ -185,31 +173,28 @@ def to_json_strings(res: QueryResult, limit: Optional[int] = None) -> bytes:
     return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode("utf-8")
 
 
-def to_json_columns(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_json_columns(res: QueryResult) -> bytes:
     """CH ``JSONColumns``: one object of column -> value array."""
-    rows = list(_limited(res.rows, limit))
     doc = {
-        c: [json_value(r[i]) for r in rows] for i, c in enumerate(res.columns)
+        c: [json_value(r[i]) for r in res.rows] for i, c in enumerate(res.columns)
     }
     return (json.dumps(doc, ensure_ascii=False) + "\n").encode("utf-8")
 
 
-def to_json_compact_each_row(
-    res: QueryResult, strings: bool = False, limit: Optional[int] = None
-) -> bytes:
+def to_json_compact_each_row(res: QueryResult, strings: bool = False) -> bytes:
     conv = plain_text if strings else json_value
     out = [
         json.dumps([conv(v) for v in row], ensure_ascii=False) + "\n"
-        for row in _limited(res.rows, limit)
+        for row in res.rows
     ]
     return "".join(out).encode("utf-8")
 
 
-def to_vertical(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_vertical(res: QueryResult) -> bytes:
     """CH ``Vertical`` (the clickhouse-client \\G layout)."""
     w = max((len(c) for c in res.columns), default=0)
     out = []
-    for i, row in enumerate(_limited(res.rows, limit), start=1):
+    for i, row in enumerate(res.rows, start=1):
         out.append(f"Row {i}:\n──────\n")
         for c, v in zip(res.columns, row):
             out.append(f"{c.rjust(w)}: {plain_text(v)}\n")
@@ -217,28 +202,28 @@ def to_vertical(res: QueryResult, limit: Optional[int] = None) -> bytes:
     return "".join(out).encode("utf-8")
 
 
-def to_markdown(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_markdown(res: QueryResult) -> bytes:
     out = ["| " + " | ".join(res.columns) + " |\n"]
     out.append("|" + "|".join("---" for _ in res.columns) + "|\n")
-    for row in _limited(res.rows, limit):
+    for row in res.rows:
         out.append(
             "| " + " | ".join(plain_text(v).replace("|", "\\|") for v in row) + " |\n"
         )
     return "".join(out).encode("utf-8")
 
 
-def to_values(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_values(res: QueryResult) -> bytes:
     def cell(v):
         if isinstance(v, str):
             return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
         return plain_text(v)
 
-    out = ["(" + ",".join(cell(v) for v in row) + ")" for row in _limited(res.rows, limit)]
+    out = ["(" + ",".join(cell(v) for v in row) + ")" for row in res.rows]
     return (",".join(out) + "\n").encode("utf-8")
 
 
-def to_pretty(res: QueryResult, limit: Optional[int] = None) -> bytes:
-    rows = [[plain_text(v) for v in row] for row in _limited(res.rows, limit)]
+def to_pretty(res: QueryResult) -> bytes:
+    rows = [[plain_text(v) for v in row] for row in res.rows]
     widths = [len(c) for c in res.columns]
     for r in rows:
         for i, cell in enumerate(r):
@@ -253,60 +238,59 @@ def to_pretty(res: QueryResult, limit: Optional[int] = None) -> bytes:
     return ("\n".join(out) + "\n").encode("utf-8")
 
 
-def _to_arrow_table(res: QueryResult, limit: Optional[int]):
+def _to_arrow_table(res: QueryResult):
     """Rows → pyarrow Table (column-name-keyed; schema inferred by
     Arrow from the Python values, which came out of Spark types)."""
     import pyarrow as pa
 
-    rows = list(_limited(res.rows, limit))
-    cols = {c: [r[i] for r in rows] for i, c in enumerate(res.columns)}
-    return pa.table(cols) if rows else pa.table(
+    cols = {c: [r[i] for r in res.rows] for i, c in enumerate(res.columns)}
+    return pa.table(cols) if res.rows else pa.table(
         {c: pa.array([], type=pa.string()) for c in res.columns}
     )
 
 
-def to_parquet(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_parquet(res: QueryResult) -> bytes:
     """CH ``FORMAT Parquet``: one parquet file in the response body."""
     import io
 
     import pyarrow.parquet as pq
 
     buf = io.BytesIO()
-    pq.write_table(_to_arrow_table(res, limit), buf)
+    pq.write_table(_to_arrow_table(res), buf)
     return buf.getvalue()
 
 
-def to_orc(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_orc(res: QueryResult) -> bytes:
     """CH ``FORMAT ORC``: one ORC file in the response body."""
     import io
 
     import pyarrow.orc as po
 
     buf = io.BytesIO()
-    po.write_table(_to_arrow_table(res, limit), buf)
+    po.write_table(_to_arrow_table(res), buf)
     return buf.getvalue()
 
 
-def to_arrow(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_arrow(res: QueryResult) -> bytes:
     """CH ``FORMAT Arrow``: Arrow IPC file format."""
     import io
 
     import pyarrow as pa
 
-    table = _to_arrow_table(res, limit)
+    table = _to_arrow_table(res)
     buf = io.BytesIO()
     with pa.ipc.new_file(buf, table.schema) as w:
         w.write_table(table)
     return buf.getvalue()
 
 
-def to_arrow_stream(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_arrow_stream(res: QueryResult) -> bytes:
     """CH ``FORMAT ArrowStream``: Arrow IPC streaming format."""
     import io
 
     import pyarrow as pa
 
-    table = _to_arrow_table(res, limit)
+    table = _to_arrow_table(res)
     buf = io.BytesIO()
     with pa.ipc.new_stream(buf, table.schema) as w:
         w.write_table(table)
@@ -317,13 +301,10 @@ def to_row_binary(
     res: QueryResult,
     with_names: bool = False,
     with_types: bool = False,
-    limit: Optional[int] = None,
 ) -> bytes:
     """RowBinary / RowBinaryWithNames / RowBinaryWithNamesAndTypes:
     optional varint-ncols + name/type header, then rows encoded
     value-by-value in wire order."""
-    from .native import encode_row_value, wire_type, write_varint, write_varstr
-
     wires = [wire_type(t) for t in res.ch_types]
     out = bytearray()
     if with_names:
@@ -333,18 +314,16 @@ def to_row_binary(
         if with_types:
             for w in wires:
                 out += write_varstr(w)
-    for r in _limited(res.rows, limit):
+    for r in res.rows:
         for w, v in zip(wires, r):
             out += encode_row_value(w, v)
     return bytes(out)
 
 
-
-
-def to_tskv(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_tskv(res: QueryResult) -> bytes:
     """CH ``TSKV``: name=value pairs, TSV-escaped, tab-separated."""
     out = []
-    for row in _limited(res.rows, limit):
+    for row in res.rows:
         out.append(
             "\t".join(
                 f"{c}={tsv_cell(v)}" for c, v in zip(res.columns, row)
@@ -354,25 +333,25 @@ def to_tskv(res: QueryResult, limit: Optional[int] = None) -> bytes:
     return "".join(out).encode("utf-8")
 
 
-def to_json_object_each_row(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_json_object_each_row(res: QueryResult) -> bytes:
     """CH ``JSONObjectEachRow``: one object keyed row_0001, row_0002…"""
     doc = {}
-    for i, row in enumerate(_limited(res.rows, limit), start=1):
+    for i, row in enumerate(res.rows, start=1):
         doc[f"row_{i}"] = {c: json_value(v) for c, v in zip(res.columns, row)}
     return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode("utf-8")
 
 
-def to_line_as_string(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_line_as_string(res: QueryResult) -> bytes:
     """CH ``LineAsString`` output: raw first-column text per line."""
     out = []
-    for row in _limited(res.rows, limit):
+    for row in res.rows:
         out.append(plain_text(row[0]) + "\n" if row else "\n")
     return "".join(out).encode("utf-8")
 
 
-def to_pretty_space(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_pretty_space(res: QueryResult) -> bytes:
     """CH ``PrettySpace``: header + space-aligned rows, no frame."""
-    rows = [tuple(plain_text(v) for v in row) for row in _limited(res.rows, limit)]
+    rows = [tuple(plain_text(v) for v in row) for row in res.rows]
     widths = [
         max([len(c)] + [len(r[i]) for r in rows])
         for i, c in enumerate(res.columns)
@@ -394,11 +373,11 @@ def _sql_literal(v) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def to_sql_insert(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_sql_insert(res: QueryResult) -> bytes:
     """CH ``SQLInsert``: INSERT INTO table (cols) VALUES (…) batches."""
     cols = ", ".join(f"`{c}`" for c in res.columns)
     out = []
-    for row in _limited(res.rows, limit):
+    for row in res.rows:
         vals = ", ".join(_sql_literal(v) for v in row)
         out.append(f"INSERT INTO table ({cols}) VALUES ({vals});\n")
     return "".join(out).encode("utf-8")
@@ -410,7 +389,7 @@ def _xml_escape(s: str) -> str:
     )
 
 
-def to_xml(res: QueryResult, limit: Optional[int] = None) -> bytes:
+def to_xml(res: QueryResult) -> bytes:
     """CH ``XML``: result envelope with meta + per-row field elements."""
     out = ["<?xml version='1.0' encoding='UTF-8' ?>\n<result>\n\t<meta>\n\t\t<columns>\n"]
     for c, t in zip(res.columns, res.ch_types):
@@ -420,7 +399,7 @@ def to_xml(res: QueryResult, limit: Optional[int] = None) -> bytes:
         )
     out.append("\t\t</columns>\n\t</meta>\n\t<data>\n")
     n = 0
-    for row in _limited(res.rows, limit):
+    for row in res.rows:
         n += 1
         out.append("\t\t<row>\n")
         for c, v in zip(res.columns, row):
@@ -434,181 +413,111 @@ def to_xml(res: QueryResult, limit: Optional[int] = None) -> bytes:
     return "".join(out).encode("utf-8")
 
 
-def serialize(
-    res: QueryResult,
-    fmt: str,
-    max_result_rows: Optional[int] = None,
-    settings: Optional[dict] = None,
-) -> bytes:
-    from .native import to_native
+def _schema_fields(settings: dict, fmt: str, example: str, resolve) -> list:
+    """Fields of the ``format_schema`` message, resolved inside the
+    server's schema directory."""
+    fs = settings.get("format_schema")
+    if not fs:
+        raise ValueError(
+            f"format {fmt} requires the format_schema setting ('{example}')"
+        )
+    sdir = settings.get("__format_schema_path__")
+    if not sdir:
+        raise ValueError("format_schema_path is not configured on this server")
+    return resolve(str(fs), str(sdir))[0]
 
-    f = fmt.lower()
-    if f in ("protobuf", "protobufsingle", "protobuflist"):
+
+def _protobuf(mode: str):
+    def encode(res: QueryResult, settings: dict) -> bytes:
         from .protobuf import encode_rows, resolve_schema
 
-        st = settings or {}
-        fs = st.get("format_schema")
-        if not fs:
-            raise ValueError(
-                "format Protobuf requires the format_schema setting "
-                "('file.proto:MessageName')"
-            )
-        sdir = st.get("__format_schema_path__")
-        if not sdir:
-            raise ValueError(
-                "format_schema_path is not configured on this server"
-            )
-        fields, _ = resolve_schema(str(fs), str(sdir))
-        mode = {"protobuf": "delimited", "protobufsingle": "single",
-                "protobuflist": "list"}[f]
-        return encode_rows(
-            fields, res.columns, res.ch_types, res.rows,
-            mode=mode, limit=max_result_rows,
-        )
-    if f == "capnproto":
-        from .capnp import encode_rows as _capnp_encode
-        from .capnp import resolve_schema as _capnp_resolve
+        fields = _schema_fields(settings, "Protobuf", "file.proto:MessageName", resolve_schema)
+        return encode_rows(fields, res.columns, res.ch_types, res.rows, mode=mode)
 
-        st = settings or {}
-        fs = st.get("format_schema")
-        if not fs:
-            raise ValueError(
-                "format CapnProto requires the format_schema setting "
-                "('file.capnp:StructName')"
-            )
-        sdir = st.get("__format_schema_path__")
-        if not sdir:
-            raise ValueError(
-                "format_schema_path is not configured on this server"
-            )
-        fields, _ = _capnp_resolve(str(fs), str(sdir))
-        return _capnp_encode(
-            fields, res.columns, res.ch_types, res.rows,
-            limit=max_result_rows,
-        )
-    if f == "parquet":
-        return to_parquet(res, limit=max_result_rows)
-    if f == "arrow":
-        return to_arrow(res, limit=max_result_rows)
-    if f == "arrowstream":
-        return to_arrow_stream(res, limit=max_result_rows)
-    if f == "orc":
-        return to_orc(res, limit=max_result_rows)
-    if f in ("tsv", "tabseparated"):
-        return to_tsv(res, limit=max_result_rows)
-    if f in ("tsvwithnames", "tabseparatedwithnames"):
-        return to_tsv(res, with_names=True, limit=max_result_rows)
-    if f in ("tsvwithnamesandtypes", "tabseparatedwithnamesandtypes"):
-        return to_tsv(res, with_names=True, with_types=True, limit=max_result_rows)
-    if f in ("tsvraw", "tabseparatedraw", "raw"):
-        return to_tsv(res, raw=True, limit=max_result_rows)
-    if f == "csvwithnamesandtypes":
-        return to_csv(res, with_names=True, with_types=True, limit=max_result_rows)
-    if f == "jsonstrings":
-        return to_json_strings(res, limit=max_result_rows)
-    if f == "jsoncolumns":
-        return to_json_columns(res, limit=max_result_rows)
-    if f == "jsoncompacteachrow":
-        return to_json_compact_each_row(res, limit=max_result_rows)
-    if f == "jsoncompactstringseachrow":
-        return to_json_compact_each_row(res, strings=True, limit=max_result_rows)
-    if f == "vertical":
-        return to_vertical(res, limit=max_result_rows)
-    if f == "markdown":
-        return to_markdown(res, limit=max_result_rows)
-    if f == "tskv":
-        return to_tskv(res, limit=max_result_rows)
-    if f == "jsonobjecteachrow":
-        return to_json_object_each_row(res, limit=max_result_rows)
-    if f in ("jsonlines", "ndjson"):
-        return to_json_each_row(res, limit=max_result_rows)
-    if f == "lineasstring":
-        return to_line_as_string(res, limit=max_result_rows)
-    if f in ("prettyspace", "prettyspacenoescapes"):
-        return to_pretty_space(res, limit=max_result_rows)
-    if f == "sqlinsert":
-        return to_sql_insert(res, limit=max_result_rows)
-    if f == "xml":
-        return to_xml(res, limit=max_result_rows)
-    if f == "customseparated":
-        # default CustomSeparated settings = Escaped rule, tab/newline
-        # separators — byte-identical to TSV
-        return to_tsv(res, limit=max_result_rows)
-    if f == "csv":
-        return to_csv(res, limit=max_result_rows)
-    if f == "csvwithnames":
-        return to_csv(res, with_names=True, limit=max_result_rows)
-    if f == "json":
-        return to_json(res, limit=max_result_rows)
-    if f == "jsoncompact":
-        return to_json_compact(res, limit=max_result_rows)
-    if f == "jsoncompactcolumns":
-        return to_json_compact_columns(res, limit=max_result_rows)
-    if f == "jsoneachrow":
-        return to_json_each_row(res, limit=max_result_rows)
-    if f == "values":
-        return to_values(res, limit=max_result_rows)
-    if f in (
-        "pretty", "prettycompact", "prettynoescapes",
-        "prettycompactnoescapes", "prettymonoblock",
-        "prettycompactmonoblock", "prettynoescapesmonoblock",
-        "prettycompactnoescapesmonoblock",
-    ):
-        return to_pretty(res, limit=max_result_rows)
-    if f == "native":
-        return to_native(res, limit=max_result_rows)
-    if f == "rowbinary":
-        return to_row_binary(res, limit=max_result_rows)
-    if f == "rowbinarywithnames":
-        return to_row_binary(res, with_names=True, limit=max_result_rows)
-    if f == "rowbinarywithnamesandtypes":
-        return to_row_binary(res, with_names=True, with_types=True, limit=max_result_rows)
-    if f == "avro":
-        from .avro import write_ocf
-
-        return write_ocf(res.columns, res.ch_types, res.rows, limit=max_result_rows)
-    if f == "null":
-        for _ in res.rows:
-            pass
-        return b""
-    raise ValueError(f"unknown format: {fmt}")
+    return encode
 
 
-CONTENT_TYPES = {
-    "tsv": "text/tab-separated-values; charset=UTF-8",
-    "tsvwithnames": "text/tab-separated-values; charset=UTF-8",
-    "tsvwithnamesandtypes": "text/tab-separated-values; charset=UTF-8",
-    "tsvraw": "text/tab-separated-values; charset=UTF-8",
-    "csvwithnamesandtypes": "text/csv; charset=UTF-8",
-    "jsonstrings": "application/json; charset=UTF-8",
-    "jsoncolumns": "application/json; charset=UTF-8",
-    "jsoncompacteachrow": "application/x-ndjson; charset=UTF-8",
-    "jsoncompactstringseachrow": "application/x-ndjson; charset=UTF-8",
-    "vertical": "text/plain; charset=UTF-8",
-    "markdown": "text/markdown; charset=UTF-8",
-    "csv": "text/csv; charset=UTF-8",
-    "csvwithnames": "text/csv; charset=UTF-8",
-    "json": "application/json; charset=UTF-8",
-    "jsoncompact": "application/json; charset=UTF-8",
-    "jsoncompactcolumns": "application/json; charset=UTF-8",
-    "jsoneachrow": "application/x-ndjson; charset=UTF-8",
-    "values": "text/plain; charset=UTF-8",
-    "pretty": "text/plain; charset=UTF-8",
-    "prettycompact": "text/plain; charset=UTF-8",
-    "native": "application/octet-stream",
-    "rowbinary": "application/octet-stream",
-    "rowbinarywithnames": "application/octet-stream",
-    "rowbinarywithnamesandtypes": "application/octet-stream",
-    "null": "text/plain; charset=UTF-8",
-    "parquet": "application/octet-stream",
-    "protobuf": "application/octet-stream",
-    "protobufsingle": "application/octet-stream",
-    "protobuflist": "application/octet-stream",
-    "capnproto": "application/octet-stream",
-    "arrow": "application/vnd.apache.arrow.file",
-    "arrowstream": "application/vnd.apache.arrow.stream",
+def _capnproto(res: QueryResult, settings: dict) -> bytes:
+    from .capnp import encode_rows, resolve_schema
+
+    fields = _schema_fields(settings, "CapnProto", "file.capnp:StructName", resolve_schema)
+    return encode_rows(fields, res.columns, res.ch_types, res.rows)
+
+
+_TSV = "text/tab-separated-values; charset=UTF-8"
+_CSV = "text/csv; charset=UTF-8"
+_JSON = "application/json; charset=UTF-8"
+_NDJSON = "application/x-ndjson; charset=UTF-8"
+_TEXT = "text/plain; charset=UTF-8"
+_BINARY = "application/octet-stream"
+
+Encoder = Callable[[QueryResult, dict], bytes]
+
+# Lower-case format name → (encoder, HTTP Content-Type). Each row lists
+# a format with its aliases, so an alias cannot drift from its format.
+FORMATS: dict[str, tuple[Encoder, str]] = {
+    name: (encode, ctype)
+    for names, encode, ctype in (
+        ("tsv tabseparated", lambda r, s: to_tsv(r), _TSV),
+        ("tsvwithnames tabseparatedwithnames",
+         lambda r, s: to_tsv(r, with_names=True), _TSV),
+        ("tsvwithnamesandtypes tabseparatedwithnamesandtypes",
+         lambda r, s: to_tsv(r, with_names=True, with_types=True), _TSV),
+        ("tsvraw tabseparatedraw raw", lambda r, s: to_tsv(r, raw=True), _TSV),
+        # CustomSeparated with default settings (Escaped rule,
+        # tab/newline separators) is byte-identical to TSV
+        ("customseparated", lambda r, s: to_tsv(r), _TEXT),
+        ("tskv", lambda r, s: to_tskv(r), _TEXT),
+        ("csv", lambda r, s: to_csv(r), _CSV),
+        ("csvwithnames", lambda r, s: to_csv(r, with_names=True), _CSV),
+        ("csvwithnamesandtypes",
+         lambda r, s: to_csv(r, with_names=True, with_types=True), _CSV),
+        ("json", lambda r, s: to_json(r), _JSON),
+        ("jsoncompact", lambda r, s: to_json_compact(r), _JSON),
+        ("jsoncompactcolumns", lambda r, s: to_json_compact_columns(r), _JSON),
+        ("jsonstrings", lambda r, s: to_json_strings(r), _JSON),
+        ("jsoncolumns", lambda r, s: to_json_columns(r), _JSON),
+        ("jsonobjecteachrow", lambda r, s: to_json_object_each_row(r), _JSON),
+        ("jsoneachrow jsonlines ndjson", lambda r, s: to_json_each_row(r), _NDJSON),
+        ("jsoncompacteachrow", lambda r, s: to_json_compact_each_row(r), _NDJSON),
+        ("jsoncompactstringseachrow",
+         lambda r, s: to_json_compact_each_row(r, strings=True), _NDJSON),
+        ("xml", lambda r, s: to_xml(r), "application/xml; charset=UTF-8"),
+        ("markdown", lambda r, s: to_markdown(r), "text/markdown; charset=UTF-8"),
+        ("vertical", lambda r, s: to_vertical(r), _TEXT),
+        ("values", lambda r, s: to_values(r), _TEXT),
+        ("pretty prettycompact prettynoescapes prettycompactnoescapes "
+         "prettymonoblock prettycompactmonoblock prettynoescapesmonoblock "
+         "prettycompactnoescapesmonoblock", lambda r, s: to_pretty(r), _TEXT),
+        ("prettyspace prettyspacenoescapes", lambda r, s: to_pretty_space(r), _TEXT),
+        ("lineasstring", lambda r, s: to_line_as_string(r), _TEXT),
+        ("sqlinsert", lambda r, s: to_sql_insert(r), _TEXT),
+        ("null", lambda r, s: b"", _TEXT),
+        ("native", lambda r, s: to_native(r), _BINARY),
+        ("rowbinary", lambda r, s: to_row_binary(r), _BINARY),
+        ("rowbinarywithnames", lambda r, s: to_row_binary(r, with_names=True), _BINARY),
+        ("rowbinarywithnamesandtypes",
+         lambda r, s: to_row_binary(r, with_names=True, with_types=True), _BINARY),
+        ("parquet", lambda r, s: to_parquet(r), _BINARY),
+        ("orc", lambda r, s: to_orc(r), _BINARY),
+        ("avro", lambda r, s: write_ocf(r.columns, r.ch_types, r.rows), _BINARY),
+        ("arrow", lambda r, s: to_arrow(r), "application/vnd.apache.arrow.file"),
+        ("arrowstream", lambda r, s: to_arrow_stream(r), "application/vnd.apache.arrow.stream"),
+        ("protobuf", _protobuf("delimited"), _BINARY),
+        ("protobufsingle", _protobuf("single"), _BINARY),
+        ("protobuflist", _protobuf("list"), _BINARY),
+        ("capnproto", _capnproto, _BINARY),
+    )
+    for name in names.split()
 }
 
 
+def serialize(res: QueryResult, fmt: str, settings: Optional[dict] = None) -> bytes:
+    entry = FORMATS.get(fmt.lower())
+    if entry is None:
+        raise ValueError(f"unknown format: {fmt}")
+    return entry[0](res, settings or {})
+
+
 def content_type(fmt: str) -> str:
-    return CONTENT_TYPES.get(fmt.lower(), "text/plain; charset=UTF-8")
+    return FORMATS.get(fmt.lower(), (None, _TEXT))[1]

@@ -24,7 +24,7 @@ import io
 import json
 import struct
 import zlib
-from typing import Any, Iterable, Optional
+from typing import Any, Iterable
 
 MAGIC = b"Obj\x01"
 _SYNC = bytes(range(16))  # deterministic sync marker
@@ -193,7 +193,6 @@ def write_ocf(
     columns: list[str],
     ch_types: list[str],
     rows: Iterable[tuple],
-    limit: Optional[int] = None,
 ) -> bytes:
     schema = record_schema(columns, ch_types)
     fields = [f["type"] for f in schema["fields"]]
@@ -211,9 +210,7 @@ def write_ocf(
     out.write(_SYNC)
     block = io.BytesIO()
     n = 0
-    for i, row in enumerate(rows):
-        if limit is not None and i >= limit:
-            break
+    for row in rows:
         for fs, v in zip(fields, row):
             _encode_value(block, fs, v)
         n += 1

@@ -37,7 +37,7 @@ import io
 import re
 import struct as _struct
 from dataclasses import dataclass
-from typing import Any, Iterable, Optional
+from typing import Any, Iterable
 
 # bit widths per scalar type; Text/Data/List are pointers
 _BITS = {
@@ -508,16 +508,11 @@ def encode_rows(
     columns: list[str],
     ch_types: list[str],
     rows: Iterable[tuple],
-    limit: Optional[int] = None,
 ) -> bytes:
     data_words, ptr_count = layout_struct(fields)
     fmap = {f.name.lower(): f for f in fields}
     out = io.BytesIO()
-    n = 0
     for row in rows:
-        if limit is not None and n >= limit:
-            break
-        n += 1
         values = {}
         for col, v in zip(columns, row):
             f = fmap.get(col.lower())

@@ -301,13 +301,9 @@ def encode_row_value(ch_type: str, v) -> bytes:
     return bytes(out)
 
 
-def to_native(res, limit: Optional[int] = None) -> bytes:
+def to_native(res) -> bytes:
     """Serialize a QueryResult as a single Native block."""
-    rows = []
-    for i, r in enumerate(res.rows):
-        if limit is not None and i >= limit:
-            break
-        rows.append(r)
+    rows = res.rows
     out = bytearray()
     out += write_varint(len(res.columns))
     out += write_varint(len(rows))

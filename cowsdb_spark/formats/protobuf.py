@@ -35,7 +35,7 @@ import io
 import re
 import struct
 from dataclasses import dataclass
-from typing import Any, Iterable, Optional
+from typing import Any, Iterable
 
 # ----------------------------------------------------------- proto parse
 
@@ -376,15 +376,10 @@ def encode_rows(
     ch_types: list[str],
     rows: Iterable[tuple],
     mode: str = "delimited",
-    limit: Optional[int] = None,
 ) -> bytes:
     out = io.BytesIO()
     fmap = {f.name.lower(): f for f in fields}
-    n = 0
     for row in rows:
-        if limit is not None and n >= limit:
-            break
-        n += 1
         values = {}
         for col, cht, v in zip(columns, ch_types, row):
             f = fmap.get(col.lower())

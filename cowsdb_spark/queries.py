@@ -2181,14 +2181,16 @@ def t23(spark, sf_dir):
     # DuckDB oracle: same 3-gram Jaccard edges as t08 thresholded at
     # 0.5, then the transitive closure via WITH RECURSIVE min-label
     # reachability — cluster = min doc_id reachable, size = members.
+    # e/eu are MATERIALIZED: DuckDB otherwise inlines them and re-runs
+    # the n-gram Jaccard join at every reference inside the recursion.
     "WITH RECURSIVE g AS (SELECT doc_id, list_distinct(list_transform("
     "  generate_series(1, greatest(length(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) - 2, 1)), "
     "  i -> substring(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), i, 3))) AS gr "
     "FROM documents), "
-    "e AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM g a "
+    "e AS MATERIALIZED (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM g a "
     "JOIN g b ON b.doc_id = a.doc_id + 1 "
     "WHERE ROUND(len(list_intersect(a.gr, b.gr)) * 1.0 / len(list_distinct(list_concat(a.gr, b.gr))), 4) >= 0.5), "
-    "eu AS (SELECT id_a AS a, id_b AS b FROM e "
+    "eu AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM e "
     "UNION SELECT id_b, id_a FROM e), "
     "r(id, comp) AS ("
     "  SELECT a, a FROM eu "
@@ -2395,15 +2397,16 @@ def t32(spark, sf_dir):
 @qdef(
     "t37_dedup_keep_one",
     # survivors = every doc except non-representative cluster members
-    # (same edge set + closure as t30; representative = min member id)
+    # (same edge set + closure as t30, e/eu MATERIALIZED likewise;
+    # representative = min member id)
     "WITH RECURSIVE g AS (SELECT doc_id, list_distinct(list_transform("
     "  generate_series(1, greatest(length(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) - 2, 1)), "
     "  i -> substring(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), i, 3))) AS gr "
     "FROM documents), "
-    "e AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM g a "
+    "e AS MATERIALIZED (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM g a "
     "JOIN g b ON b.doc_id = a.doc_id + 1 "
     "WHERE ROUND(len(list_intersect(a.gr, b.gr)) * 1.0 / len(list_distinct(list_concat(a.gr, b.gr))), 4) >= 0.5), "
-    "eu AS (SELECT id_a AS a, id_b AS b FROM e "
+    "eu AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM e "
     "UNION SELECT id_b, id_a FROM e), "
     "r(id, comp) AS ("
     "  SELECT a, a FROM eu "

@@ -66,6 +66,9 @@ _NON_SETTING_PARAMS = {
 class _Handler(BaseHTTPRequestHandler):
     engine: Engine  # injected by serve()
     protocol_version = "HTTP/1.1"
+    # TCP_NODELAY: headers and body are separate small writes, and with
+    # Nagle on the body waits for the client's delayed ACK (~40 ms)
+    disable_nagle_algorithm = True
 
     # -- helpers ----------------------------------------------------------
 
@@ -100,6 +103,13 @@ class _Handler(BaseHTTPRequestHandler):
         )
         return fmt, db
 
+    def _begin(self, code: int, cors: bool = False):
+        """Status line + the headers every response carries."""
+        self.send_response(code)
+        self.send_header("X-ClickHouse-Server-Display-Name", "moospark")
+        if cors:
+            self.send_header("Access-Control-Allow-Origin", "*")
+
     def _send(
         self,
         code: int,
@@ -107,15 +117,16 @@ class _Handler(BaseHTTPRequestHandler):
         ctype: str = "text/plain; charset=UTF-8",
         cors: bool = False,
         extra_headers: dict | None = None,
+        started: bool = False,
     ):
-        self.send_response(code)
+        """Finish a response. ``started``: the status line already went
+        out with the progress frames, so only the rest follows."""
+        if not started:
+            self._begin(code, cors)
         self.send_header("Content-Type", ctype)
         self.send_header("Content-Length", str(len(body)))
-        self.send_header("X-ClickHouse-Server-Display-Name", "moospark")
         for k, v in (extra_headers or {}).items():
             self.send_header(k, v)
-        if cors:
-            self.send_header("Access-Control-Allow-Origin", "*")
         self.end_headers()
         self.wfile.write(body)
 
@@ -239,12 +250,9 @@ class _Handler(BaseHTTPRequestHandler):
                     # commit 200 + start streaming headers (same
                     # contract as clickhouse-server: with progress
                     # headers on, a late failure arrives in-body)
-                    self.send_response(200)
-                    self.send_header("X-ClickHouse-Server-Display-Name", "moospark")
-                    for k, v in hdrs.items():
-                        self.send_header(k, v)
-                    if cors:
-                        self.send_header("Access-Control-Allow-Origin", "*")
+                    self._begin(200, cors)
+                    for k in list(hdrs):
+                        self.send_header(k, hdrs.pop(k))
                     started = True
                 self.send_header(
                     "X-ClickHouse-Progress",
@@ -299,41 +307,22 @@ class _Handler(BaseHTTPRequestHandler):
                 hdrs["Content-Encoding"] = encoding
             if want_progress:
                 # final progress frame (CH always sends one)
-                if started:
-                    self.send_header("X-ClickHouse-Progress", summary)
-                    self.send_header("X-ClickHouse-Format", used_fmt)
-                    self.send_header("X-ClickHouse-Summary", hdrs["X-ClickHouse-Summary"])
-                    if "X-ClickHouse-Warning" in hdrs:
-                        self.send_header("X-ClickHouse-Warning", hdrs["X-ClickHouse-Warning"])
-                    if encoding is not None:
-                        self.send_header("Content-Encoding", encoding)
-                    self.send_header("Content-Type", content_type(used_fmt))
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
-                    return
                 hdrs["X-ClickHouse-Progress"] = summary
-            self._send(200, body, content_type(used_fmt), cors=cors, extra_headers=hdrs)
+            self._send(
+                200, body, content_type(used_fmt), cors=cors,
+                extra_headers=hdrs, started=started,
+            )
         except EngineError as e:
-            err_body = (str(e) + "\n").encode("utf-8")
-            if started:  # status already committed; error goes in-body
-                self.send_header("X-ClickHouse-Exception-Code", str(e.code))
-                self.send_header("Content-Type", "text/plain; charset=UTF-8")
-                self.send_header("Content-Length", str(len(err_body)))
-                self.end_headers()
-                self.wfile.write(err_body)
-                return
+            # once progress frames went out the status is committed;
+            # the error goes in-body
             hdrs["X-ClickHouse-Exception-Code"] = str(e.code)
-            self._send(400, err_body, cors=cors, extra_headers=hdrs)
+            self._send(
+                400, (str(e) + "\n").encode("utf-8"), cors=cors,
+                extra_headers=hdrs, started=started,
+            )
         except Exception as e:  # engine bug → 500, not a hang
             err_body = (f"Code: 1000. Internal error: {e}\n").encode("utf-8")
-            if started:
-                self.send_header("Content-Type", "text/plain; charset=UTF-8")
-                self.send_header("Content-Length", str(len(err_body)))
-                self.end_headers()
-                self.wfile.write(err_body)
-                return
-            self._send(500, err_body)
+            self._send(500, err_body, started=started)
 
     # -- routes -----------------------------------------------------------
 

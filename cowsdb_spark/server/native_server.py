@@ -296,21 +296,23 @@ class NativeServer:
         return read_block(src, state["revision"] >= MIN_REV_CUSTOM_SERIALIZATION)
 
     def _handle_query(self, client: socket.socket, r: _Reader, state: dict):
-        query, _settings, qparams = self._read_query_packet(r, state)
+        query, settings, qparams = self._read_query_packet(r, state)
         m = _NATIVE_INSERT_RE.match(query)
         if m:
             self._handle_insert(client, r, state, m)
             return
         try:
-            df, _fmt, _settings2, elapsed = self.engine.execute_to_df(
+            # the same collect-once path as HTTP; INTO OUTFILE is
+            # ignored on this wire
+            res, _fmt, _merged, _stats = self.engine.execute_collect(
                 query,
                 user=state["user"],
                 password=state["password"],
                 database=state.get("database"),
+                extra_settings=settings or None,
                 params=qparams or None,
             )
-            if df is not None:
-                res = QueryResult.from_dataframe(df, elapsed=elapsed, stream=False)
+            if res is not None:
                 client.sendall(self._data_packet(res, state))
             client.sendall(write_varint(ServerPacket.END_OF_STREAM))
         except EngineError as e:
@@ -390,7 +392,7 @@ class NativeServer:
             )
 
     def _data_packet(self, res: QueryResult, state: dict) -> bytes:
-        rows = list(res.rows)
+        rows = res.rows
         block = bytearray()
         # BlockInfo (main.py:565-571 equivalent)
         block += write_varint(1)

@@ -48,6 +48,17 @@ class TestFormats:
         )
         assert out == b"0\n1\n2\n3\n4\n"
 
+    def test_max_result_rows_counts_returned_rows(self, engine):
+        # the stats, X-ClickHouse-Summary and system.query_log count
+        # the rows actually returned, not one more
+        _body, _fmt, stats = engine.execute_with_format(
+            "SELECT number FROM numbers(100) ORDER BY number SETTINGS max_result_rows=5",
+            user="mrr_count",
+        )
+        assert stats["result_rows"] == 5
+        logged = engine.execute("SELECT result_rows FROM system.query_log", user="mrr_count")
+        assert logged == b"5\n"
+
 
 class TestNumbers:
     def test_numbers_multirow(self, engine):

@@ -19,7 +19,7 @@ from cowsdb_spark.formats.native import parse_native, to_native, write_varint
 
 
 def res(columns, ch_types, rows):
-    return QueryResult(columns=columns, ch_types=ch_types, rows=iter(rows))
+    return QueryResult(columns=columns, ch_types=ch_types, rows=list(rows))
 
 
 class TestTSV:
@@ -155,10 +155,27 @@ class TestRowBinary:
         assert out.startswith(b"\x01\x01s")
 
 
-class TestMaxResultRows:
-    def test_serializer_limit(self):
-        out = to_tsv(res(["x"], ["Int64"], [(i,) for i in range(100)]), limit=3)
-        assert out == b"0\n1\n2\n"
+class TestContentType:
+    """Every alias answers its format's Content-Type: the format table
+    keys encoder and content type together."""
+
+    @pytest.mark.parametrize(
+        "fmt, ctype",
+        [
+            ("TSV", "text/tab-separated-values"),
+            ("TabSeparated", "text/tab-separated-values"),
+            ("TabSeparatedWithNames", "text/tab-separated-values"),
+            ("NDJSON", "application/x-ndjson"),
+            ("JSONLines", "application/x-ndjson"),
+            ("ORC", "application/octet-stream"),
+            ("Avro", "application/octet-stream"),
+            ("XML", "application/xml"),
+        ],
+    )
+    def test_alias_content_type(self, fmt, ctype):
+        from cowsdb_spark.formats import content_type
+
+        assert content_type(fmt).split(";")[0] == ctype
 
 
 class TestBinaryOutputFormats:

@@ -63,6 +63,33 @@ class TestBasics:
         assert status == 200 and b"html" in body.lower()
 
 
+def test_accepted_socket_has_nodelay():
+    """Headers and body leave as separate writes; without TCP_NODELAY
+    the body waits on the client's delayed ACK."""
+    import socket
+    import threading
+
+    from cowsdb_spark.server.http_server import make_server
+
+    srv = make_server(None, "127.0.0.1", 0)  # /ping needs no engine
+    seen = []
+
+    class Probe(srv.RequestHandlerClass):
+        def setup(self):
+            super().setup()
+            seen.append(self.connection.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+
+    srv.RequestHandlerClass = Probe
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        host, port = srv.server_address
+        assert get(f"http://{host}:{port}", path="/ping") == (200, b"Ok\n")
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert seen and seen[0] != 0
+
+
 class TestFormats:
     def test_default_format_param(self, http):
         status, body = get(http, "SELECT 1 AS num", default_format="JSONCompact")

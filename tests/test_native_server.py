@@ -105,7 +105,7 @@ class Client:
         self.sock.sendall(write_varint(4))
         return self.varint() == 4  # PONG
 
-    def query(self, sql: str, params: dict | None = None):
+    def query(self, sql: str, params: dict | None = None, settings: dict | None = None):
         pkt = (
             write_varint(1)  # QUERY
             + write_str("test-query-id")
@@ -123,6 +123,11 @@ class Client:
             + write_varint(REVISION)
             + write_str("")  # quota key
             + write_varint(0)  # distributed depth
+            # settings as strings: name, flags byte, value
+            + b"".join(
+                write_str(k) + bytes([0]) + write_str(v)
+                for k, v in (settings or {}).items()
+            )
             + write_str("")  # end of settings
             + write_str("")  # interserver secret
             + write_varint(2)  # stage: complete
@@ -378,6 +383,22 @@ class TestQueries:
             c2.query("SELECT x FROM iso_n")
         c1.close()
         c2.close()
+
+    def test_select_is_logged(self, native_port):
+        c = Client(native_port, user="nat_qlog")
+        c.query("SELECT 4242 AS v")
+        _, rows = c.query("SELECT type, query, result_rows FROM system.query_log")
+        assert rows == [("QueryFinish", "SELECT 4242 AS v", 1)]
+        c.close()
+
+    def test_query_settings_apply(self, native_port):
+        c = Client(native_port)
+        _, rows = c.query(
+            "SELECT number FROM numbers(100) ORDER BY number",
+            settings={"max_result_rows": "5"},
+        )
+        assert rows == [(i,) for i in range(5)]
+        c.close()
 
     def test_dates_and_timestamps(self, native_port):
         import datetime
