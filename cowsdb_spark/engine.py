@@ -11,12 +11,14 @@ serializers around ``spark.sql``.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import struct as _struct
 import threading
 import time
 from dataclasses import dataclass, field
+from types import SimpleNamespace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -537,7 +539,11 @@ class Engine:
         except Exception as e:
             self._log_query(user, password, query, time.time() - t_start, 0,
                             "ExceptionWhileProcessing", _clean_spark_error(e))
-            raise
+            if isinstance(e, EngineError):
+                raise
+            # execution-time Spark failures (collect) get a CH code too,
+            # so both wires answer with an error instead of dropping
+            raise EngineError(_clean_spark_error(e), _ch_error_code(str(e))) from e
         elapsed = time.time() - t_start
         n_rows = len(res.rows) if res is not None else 0
         self._log_query(user, password, query, elapsed, n_rows, "QueryFinish", "")
@@ -1472,7 +1478,10 @@ class Engine:
                     # verifiably re-running). Plans with broadcasts,
                     # subqueries, or cached relations stay out: those
                     # node types memoize their results inside the plan
-                    # object, which WOULD be result reuse.
+                    # object, which WOULD be result reuse. Single-task
+                    # plans (small scans, _single_task) have no shuffle
+                    # at all: nothing to reset, and re-collect re-runs
+                    # their one stage from the scan.
                     #
                     # WARM (everything else): rebuild a fresh Dataset
                     # from the cached optimized plan — new Exchange
@@ -1498,7 +1507,7 @@ class Engine:
                             self._reset_shuffle_outputs(hot["ids"])
                             return hit_df
                     return self._rebuild_from_cache(hit_df, width)
-            df, width = self._plan_select(prepared)
+            df, width = self._plan_select(prepared, engine_views=bool(created))
             if key is not None:
                 with self._lock:
                     self._plan_cache[key] = (
@@ -1528,16 +1537,33 @@ class Engine:
     # when the whole input fits in one or two partitions; the r4
     # interleaved min-of-3 A/B puts the crossover near this size:
     # 100k-row sample (6 MB): static 3.59s vs AQE 4.29s sweep total;
-    # 10M rows (590 MB): static 13.3s vs AQE 12.8s.  Above the
+    # 10M rows (590 MB): static 13.3s vs AQE 12.8s.  Under 16 MB the
+    # width is 1 and the plan runs as ONE task of one stage
+    # (_single_task) instead of a 2-task scan, a 1-partition shuffle
+    # and a 1-task final stage (~20 ms of fixed dispatch per stage):
+    # perfbench `dashboard`, 4 cores, 10 interleaved pairs, sweep
+    # 0.85 -> 0.63 s and p50 latency 231 -> 177 ms (medians), 3.7 ->
+    # 1.25 tasks per query.  Above the
     # threshold AQE keeps runtime coalescing + skew-join splitting —
     # the 100 TB story; any real table blows past this on its first
     # leaf.
     SMALL_SCAN_BYTES = 64 << 20
 
-    def _plan_select(self, prepared: str) -> tuple[DataFrame, Optional[int]]:
+    def _plan_select(
+        self, prepared: str, engine_views: bool = False
+    ) -> tuple[DataFrame, Optional[int]]:
         """Build + fast-path a statement; returns (df, width) where
         width is the static shuffle width the plan was forced to, or
-        None when it plans under the session conf (adaptive)."""
+        None when it plans under the session conf (adaptive).
+
+        Small scans plan statically at one shuffle partition per
+        ~16 MB of leaf bytes. When that width is 1 (leaf bytes under
+        16 MB) the catalog-table scans are also coalesced to one
+        partition, so the whole statement runs as one task of one
+        stage (_single_task), unless ``engine_views`` says the
+        statement reads views the engine made for it (pipeline table
+        functions, system tables, url()/file()): those operators keep
+        their parallel plan."""
         df = self.spark.sql(prepared)
         if "GROUP" in prepared.upper():
             # Drop GROUP BY keys that are deterministic expressions
@@ -1586,9 +1612,59 @@ class Engine:
             # at 32 made the static path a net LOSS (10.3s vs 6.7s
             # sweep); sizing it statically keeps both the no-barrier
             # win and the small-shuffle win.
-            return df, self._plan_static(df, (size >> 24) + 1)
+            cap = (size >> 24) + 1
+            if cap == 1 and not engine_views:
+                df = self._single_task(df)
+            return df, self._plan_static(df, cap)
         except Exception:  # noqa: BLE001 — fast path must never break a query
             return df, None
+
+    @functools.cached_property
+    def _jvm_plans(self) -> SimpleNamespace:
+        """JVM classes the plan rewrites call. Resolving a class by its
+        dotted path costs a py4j round trip per package segment (~10
+        ms), so each is looked up once per engine."""
+        jvm = self.spark._jvm  # noqa: SLF001
+        return SimpleNamespace(
+            Dataset=jvm.org.apache.spark.sql.classic.Dataset,
+            HashMap=jvm.java.util.HashMap,
+            Repartition=jvm.org.apache.spark.sql.catalyst.plans.logical.Repartition,
+            as_scala=jvm.scala.jdk.javaapi.CollectionConverters.asScala,
+            python_udf=jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PYTHON_UDF(),
+        )
+
+    def _single_task(self, df: DataFrame) -> DataFrame:
+        """``df`` with each catalog-table scan wrapped in a non-shuffle
+        ``Repartition(1)``. Spark plans that as ``CoalesceExec(1)``,
+        whose output is ``SinglePartition``, so EnsureRequirements adds
+        no exchange above it: aggregates (DISTINCT included), sorts,
+        TakeOrderedAndProject and windows run in the scan's one task.
+        Filters and column pruning still push through into the scan.
+
+        The analyzed plan is rewritten in place (``transformUp`` with a
+        leaf -> wrapped-leaf map as the rule) and marked analyzed, so
+        nothing is parsed or analyzed twice. Left as they are: plans
+        holding a Python UDF or Python map operator (their Arrow work
+        would collapse onto one core), and every leaf that is not a
+        catalog table: DataSourceV2 scans (coalescing one blocks the
+        parquet-footer MIN/MAX/COUNT pushdown), ``numbers()``, local
+        relations."""
+        t = self._jvm_plans
+        plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+        if plan.containsPattern(t.python_udf):
+            return df
+        leaves = plan.collectLeaves()
+        swap = t.HashMap()
+        for i in range(leaves.length()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "LogicalRelation" and leaf.catalogTable().isDefined():
+                swap.put(leaf, t.Repartition(1, False, leaf))
+        if swap.isEmpty():
+            return df
+        new = plan.transformUp(t.as_scala(swap))
+        new.setAnalyzed()
+        jdf = t.Dataset.ofRows(self.spark._jsparkSession, new)  # noqa: SLF001
+        return DataFrame(jdf, df.sparkSession)
 
     def _plan_static(self, df: DataFrame, cap: Optional[int] = None) -> int:
         """Force ``df``'s physical planning with AQE off, at the session
@@ -1721,8 +1797,8 @@ class Engine:
         """Fresh Dataset from a cached statement's optimized plan,
         re-applying its static-planning width. Execution state is
         untouched: the new QueryExecution's exchanges have never run."""
-        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(  # noqa: SLF001
-            self.spark._jsparkSession,
+        jdf = self._jvm_plans.Dataset.ofRows(
+            self.spark._jsparkSession,  # noqa: SLF001
             hit_df._jdf.queryExecution().optimizedPlan(),  # noqa: SLF001
         )
         df2 = DataFrame(jdf, hit_df.sparkSession)
@@ -3506,6 +3582,7 @@ _CH_ERROR_CODES = (
     ("WRONG_NUM_ARGS", 42),                # NUMBER_OF_ARGUMENTS_DOESNT_MATCH
     ("DATATYPE_MISMATCH", 43),             # ILLEGAL_TYPE_OF_ARGUMENT
     ("AMBIGUOUS_REFERENCE", 352),          # AMBIGUOUS_IDENTIFIER
+    ("USER_RAISED_EXCEPTION", 395),        # FUNCTION_THROW_IF_VALUE_IS_NON_ZERO
 )
 
 

@@ -1050,6 +1050,123 @@ class TestPlanCacheGuards:
         engine.execute("DROP TABLE pw_fact", **u)
 
 
+class TestSingleTaskSmallScans:
+    """Statements over catalog tables under 16 MB run as one task of
+    one stage: each table scan is coalesced to one partition, so the
+    aggregates, sorts and windows above it need no exchange."""
+
+    U = {"user": "stask"}
+    QUERIES = (
+        "SELECT k, count() AS c, sum(v) AS s FROM st_t WHERE v > 10 GROUP BY k ORDER BY k",
+        "SELECT k, v FROM st_t WHERE s <> '3' ORDER BY v DESC, k LIMIT 7",
+        "SELECT k, count(DISTINCT s) AS d FROM st_t GROUP BY k ORDER BY k",
+        "SELECT k, v, row_number() OVER (PARTITION BY k ORDER BY v DESC) AS r "
+        "FROM st_t WHERE v < 60 ORDER BY k, r",
+    )
+
+    @pytest.fixture(scope="class")
+    def tbl(self, engine):
+        engine.execute(
+            "CREATE TABLE st_t (k Int64, v Int64, s String) ENGINE=MergeTree ORDER BY k",
+            **self.U,
+        )
+        engine.execute(
+            "INSERT INTO st_t SELECT number % 5 AS k, number AS v, "
+            "toString(number % 7) AS s FROM numbers(3000)",
+            **self.U,
+        )
+        yield
+        engine.execute("DROP TABLE st_t", **self.U)
+
+    @staticmethod
+    def _plan(engine, sql, **u) -> str:
+        df = engine.execute_to_df(sql, **u)[0]
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    @staticmethod
+    def _tasks(engine, sql, **u) -> tuple[bytes, int]:
+        sc = engine.spark.sparkContext
+        sc.setJobGroup("stask-probe", sql)
+        try:
+            before = set(sc.statusTracker().getJobIdsForGroup("stask-probe"))
+            out = engine.execute(sql, **u)
+            jobs = set(sc.statusTracker().getJobIdsForGroup("stask-probe")) - before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+        return out, sum(st.getStageInfo(s).numTasks for s in stages)
+
+    def test_one_task_no_exchange_same_rows(self, engine, tbl, monkeypatch):
+        wide = {}
+        with monkeypatch.context() as m:
+            # reference: each text planned as a 16 MB scan (width 2,
+            # no coalesce)
+            m.setattr(engine, "_leaf_scan_bytes", lambda df: 16 << 20)
+            for sql in self.QUERIES:
+                assert "Coalesce" not in self._plan(engine, sql, **self.U)
+                wide[sql] = engine.execute(sql, **self.U)
+        engine._invalidate_plans()
+        for sql in self.QUERIES:
+            plan = self._plan(engine, sql, **self.U)
+            assert "Exchange" not in plan, plan
+            assert "Coalesce 1" in plan
+            for _ in range(2):  # the cached plan, then its HOT-tier hit
+                out, tasks = self._tasks(engine, sql, **self.U)
+                assert tasks == 1, sql
+                assert out == wide[sql], sql
+
+    def test_filter_and_pruning_reach_the_scan(self, engine, tbl):
+        plan = self._plan(engine, "SELECT sum(v) AS s FROM st_t WHERE k = 3", **self.U)
+        scan = next(line for line in plan.splitlines() if "FileScan" in line)
+        assert "EqualTo(k,3)" in scan
+        assert "ReadSchema: struct<k:bigint,v:bigint>" in scan
+
+    def test_width_one_boundary(self, engine, tbl, monkeypatch):
+        sql = "SELECT k, count() AS c FROM st_t WHERE v <> {} GROUP BY k"
+        monkeypatch.setattr(engine, "_leaf_scan_bytes", lambda df: (16 << 20) - 1)
+        plan = self._plan(engine, sql.format(1), **self.U)
+        assert "Coalesce 1" in plan and "Exchange" not in plan
+        monkeypatch.setattr(engine, "_leaf_scan_bytes", lambda df: 16 << 20)
+        plan = self._plan(engine, sql.format(2), **self.U)
+        assert "Coalesce" not in plan and "Exchange hashpartitioning(k#" in plan
+
+    def test_insert_after_hot_hit_is_visible(self, engine, tbl, monkeypatch):
+        u = {"user": "stask_ins"}
+        engine.execute("CREATE TABLE st_i (x Int64) ENGINE=MergeTree ORDER BY x", **u)
+        engine.execute("INSERT INTO st_i VALUES (1), (2)", **u)
+        resets = []
+        orig = engine._reset_shuffle_outputs
+        monkeypatch.setattr(
+            engine, "_reset_shuffle_outputs", lambda ids: (resets.append(ids), orig(ids))
+        )
+        sql = "SELECT count() AS c, sum(x) AS s FROM st_i"
+        assert engine.execute(sql, **u) == b"2\t3\n"
+        assert engine.execute(sql, **u) == b"2\t3\n"
+        assert resets == [[]], "second run was not a HOT hit of a shuffle-free plan"
+        engine.execute("INSERT INTO st_i VALUES (10)", **u)
+        assert engine.execute(sql, **u) == b"3\t13\n"
+        engine.execute("DROP TABLE st_i", **u)
+
+    def test_python_and_non_catalog_leaves_keep_their_plan(self, engine, tbl, tmp_path):
+        u = {"user": "stask_py"}
+        engine.execute("CREATE TABLE st_docs (doc_id Int64, text String) ENGINE=Memory", **u)
+        engine.execute("INSERT INTO st_docs VALUES (1, 'a b c'), (2, 'a b c'), (3, 'd e f')", **u)
+        for sql in (
+            "SELECT count() AS c FROM exactDedup(st_docs)",  # pipeline table function
+            "SELECT sum(intHash32(doc_id)) AS h FROM st_docs",  # Python UDF
+            "SELECT number % 3 AS k, count() AS c FROM numbers(100) GROUP BY k",
+        ):
+            assert "Coalesce" not in self._plan(engine, sql, **u), sql
+        assert engine.execute("SELECT count() AS c FROM exactDedup(st_docs)", **u) == b"2\n"
+        engine.spark.range(50).write.parquet(str(tmp_path / "v2"))
+        engine.spark.read.parquet(str(tmp_path / "v2")).createOrReplaceTempView("st_v2")
+        plan = self._plan(engine, "SELECT id % 3 AS k, count() AS c FROM st_v2 GROUP BY k")
+        assert "BatchScan" in plan and "Coalesce" not in plan
+        engine.spark.catalog.dropTempView("st_v2")
+        engine.execute("DROP TABLE st_docs", **u)
+
+
 class TestAttachDetach:
     """DETACH TABLE hides a table (data kept, invisible to queries
     and listings); ATTACH TABLE restores it — the CH metadata pair."""

@@ -131,6 +131,14 @@ class TestErrorsAndSessions:
         assert ei.value.code == 400
         assert b"Code:" in ei.value.read()
 
+    def test_execution_error_has_ch_code(self, http):
+        # fails inside collect(), after analysis succeeded
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            get(http, "SELECT raise_error('boom') AS x FROM numbers(3)")
+        assert ei.value.code == 400
+        assert ei.value.headers["X-ClickHouse-Exception-Code"] == "395"
+        assert ei.value.read().startswith(b"Code: 395.")
+
     def test_database_param(self, http):
         get(http, "CREATE DATABASE IF NOT EXISTS dbp")
         get(http, "CREATE TABLE IF NOT EXISTS t (x Int64) ENGINE=Memory", database="dbp")

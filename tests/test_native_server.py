@@ -372,6 +372,15 @@ class TestQueries:
         assert rows == [(2,)]
         c.close()
 
+    def test_execution_error_is_exception_packet(self, native_port):
+        # the query analyzes fine and fails inside collect()
+        c = Client(native_port)
+        with pytest.raises(RuntimeError, match="Code: 395"):
+            c.query("SELECT raise_error('boom') AS x FROM numbers(3)")
+        _, rows = c.query("SELECT 1 AS x")
+        assert rows == [(1,)]
+        c.close()
+
     def test_sessions_by_credentials(self, native_port):
         c1 = Client(native_port, user="nat1", password="p1")
         c1.query("CREATE TABLE iso_n (x Int64) ENGINE=Memory")
