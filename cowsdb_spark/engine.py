@@ -243,21 +243,22 @@ class Engine:
         # per-Spark-db table-name sets for lock-free qualification of
         # unqualified refs on the read path; cleared on any DDL
         self._tables_cache: dict[str, set] = {}
-        # analyzed-plan cache for repeated SELECT statements (a real
-        # server feature: dashboards and benches re-issue identical
-        # text; Spark analysis of a 100-column view costs ~0.1 s per
+        # plan cache for repeated SELECT statements (a real server
+        # feature: dashboards and benches re-issue identical text;
+        # Spark analysis of a 100-column view costs ~0.1 s per
         # statement — measured 0.31s -> 0.05s per repeated ClickBench
-        # aggregate at 10M rows). Invalidated wholesale on any
-        # DDL/insert/mutation through this engine (the generation
-        # counter) and skipped for non-deterministic queries. Bounded
-        # LRU; holds plans only — no data is pinned. Known limit:
-        # replacing a TEMP VIEW directly on the SparkSession (outside
-        # the engine's DDL path) is invisible to the generation
-        # counter; external writers must use a fresh Engine or its
-        # DDL surface.
+        # aggregate at 10M rows). Each entry is (planned Dataset,
+        # static width or None, temp-view guards, HOT-tier state): a
+        # hit either re-runs that same Dataset (HOT tier) or builds a
+        # fresh one from its optimized plan (WARM tier); see
+        # _run_select. Invalidated wholesale on any DDL/insert/mutation
+        # through this engine (the generation counter) and skipped for
+        # non-deterministic queries. Bounded LRU; no result data is
+        # pinned. Replacing a TEMP VIEW directly on the SparkSession is
+        # caught by the semanticHash guards.
         from collections import OrderedDict as _OD
 
-        self._plan_cache: "_OD[str, DataFrame]" = _OD()
+        self._plan_cache: "_OD[str, tuple[DataFrame, Optional[int], dict, dict]]" = _OD()
         self._plan_cache_max = 128
         self._catalog_gen = 0
         self._dbs_ensured: set = set()
@@ -527,15 +528,16 @@ class Engine:
                 if use_fmt.lower() not in FORMATS:
                     # CH code 73: UNKNOWN_FORMAT, before any Spark work
                     raise EngineError(f"Unknown format {use_fmt}", 73)
-                totals = getattr(df, "_moospark_totals", None)
                 try:
                     max_rows = int(merged.get("max_result_rows", 0))
                 except ValueError:
                     max_rows = 0
-                if max_rows > 0:  # CH: 0 means no limit
-                    df = df.limit(max_rows)
-                res = QueryResult.from_dataframe(df)
-                res.totals = totals
+                if getattr(df, "_moospark_with_totals", False):
+                    res = self._collect_with_totals(df, max_rows)
+                else:
+                    if max_rows > 0:  # CH: 0 means no limit
+                        df = df.limit(max_rows)
+                    res = QueryResult.from_dataframe(df)
         except Exception as e:
             self._log_query(user, password, query, time.time() - t_start, 0,
                             "ExceptionWhileProcessing", _clean_spark_error(e))
@@ -652,33 +654,42 @@ class Engine:
                 if st.with_fill:
                     result_df = self._apply_with_fill(result_df, st.with_fill)
                 if st.with_totals:
-                    result_df = self._split_totals(result_df)
+                    # carried to execute_collect, which splits the rows
+                    result_df._moospark_with_totals = True  # noqa: SLF001
         return result_df, out_fmt, settings, time.time() - t0
 
-    def _split_totals(self, df: DataFrame) -> DataFrame:
-        """Separate the GROUPING SETS totals row (WITH TOTALS rewrite,
-        dialect `_rewrite_with_totals`): detail rows keep the result
-        schema; the gid!=0 row is attached as ``_moospark_totals``
-        with NULL group keys replaced by CH default values."""
-        from pyspark.sql import functions as F
+    @staticmethod
+    def _collect_with_totals(df: DataFrame, max_rows: int) -> QueryResult:
+        """Collect a WITH TOTALS result (dialect `_rewrite_with_totals`:
+        GROUPING SETS plus a hidden ``__ch_gid`` column) once and split
+        it on ``__ch_gid``: gid 0 rows are the detail rows, in order,
+        at most ``max_rows`` of them when it is positive; the gid != 0
+        row becomes ``totals``, with NULL group keys replaced by CH
+        default values. ``__ch_gid`` is dropped from the result."""
         from pyspark.sql import types as T
 
-        gid = "__ch_gid"
-        detail = df.filter(F.col(gid) == 0).drop(gid)
-        tot_rows = df.filter(F.col(gid) != 0).drop(gid).collect()
-        totals = None
-        if tot_rows:
-            vals = []
-            for fld, v in zip(detail.schema.fields, tot_rows[0]):
-                if v is None:
-                    if isinstance(fld.dataType, T.NumericType):
-                        v = 0
-                    elif isinstance(fld.dataType, T.StringType):
-                        v = ""
-                vals.append(v)
-            totals = tuple(vals)
-        detail._moospark_totals = totals  # noqa: SLF001 — carried to serializer
-        return detail
+        res = QueryResult.from_dataframe(df)
+        g = res.columns.index("__ch_gid")
+        keep = [i for i in range(len(res.columns)) if i != g]
+        types = [df.schema.fields[i].dataType for i in keep]
+        detail, totals = [], None
+        for r in res.rows:
+            row = tuple(r[i] for i in keep)
+            if r[g] == 0:
+                detail.append(row)
+            elif totals is None:
+                totals = tuple(
+                    v if v is not None
+                    else 0 if isinstance(t, T.NumericType)
+                    else "" if isinstance(t, T.StringType)
+                    else None
+                    for t, v in zip(types, row)
+                )
+        res.columns = [res.columns[i] for i in keep]
+        res.ch_types = [res.ch_types[i] for i in keep]
+        res.rows = detail[:max_rows] if max_rows > 0 else detail
+        res.totals = totals
+        return res
 
 
     # ------------------------------------------------------------ statements
@@ -1487,12 +1498,14 @@ class Engine:
                     # from the cached optimized plan — new Exchange
                     # nodes whose shuffle dependencies have never run.
                     # Starting from optimizedPlan() (not analyzed())
-                    # skips the optimizer fixpoint re-run (measured
-                    # ~23 ms/query at 10M). Returning the cached
-                    # DataFrame without the map-output reset would let
-                    # Spark skip completed shuffle stages on re-collect
-                    # — result caching in disguise, which would fake
-                    # hot-run benchmarks and serve stale data.
+                    # leaves the re-run optimizer nothing to rewrite
+                    # (measured ~23 ms/query at 10M), and Spark marks
+                    # that plan analyzed, so the analyzer is skipped.
+                    # Returning the cached DataFrame without the
+                    # map-output reset would let Spark skip completed
+                    # shuffle stages on re-collect — result caching in
+                    # disguise, which would fake hot-run benchmarks
+                    # and serve stale data.
                     #
                     # Staleness is covered by the same guards for both
                     # tiers: the cache key carries _catalog_gen
@@ -1565,22 +1578,6 @@ class Engine:
         functions, system tables, url()/file()): those operators keep
         their parallel plan."""
         df = self.spark.sql(prepared)
-        if "GROUP" in prepared.upper():
-            # Drop GROUP BY keys that are deterministic expressions
-            # over the remaining simple keys (plans/agg_split.py;
-            # grouping by (k, f(k)) ≡ grouping by (k); narrower shuffle
-            # rows, fewer hashed exprs — cb35 14.5 → 10.9 s at 100M,
-            # PROBE_AGGSPLIT_100M.json). A conservative single-block
-            # shape match that falls back to the original plan on any
-            # analysis error.
-            try:
-                from .plans.agg_split import reduce_group_keys
-
-                red = reduce_group_keys(prepared)
-                if red is not None:
-                    df = self.spark.sql(red)
-            except Exception:  # noqa: BLE001
-                pass
         try:
             if self.spark.conf.get("spark.sql.adaptive.enabled") != "true":
                 return df, None
@@ -1796,7 +1793,9 @@ class Engine:
     ) -> DataFrame:
         """Fresh Dataset from a cached statement's optimized plan,
         re-applying its static-planning width. Execution state is
-        untouched: the new QueryExecution's exchanges have never run."""
+        untouched: the new QueryExecution's exchanges have never run.
+        Spark marks an optimized plan analyzed, so the analyzer does not
+        run over it again."""
         jdf = self._jvm_plans.Dataset.ofRows(
             self.spark._jsparkSession,  # noqa: SLF001
             hit_df._jdf.queryExecution().optimizedPlan(),  # noqa: SLF001

@@ -880,7 +880,33 @@ class TestRound3ArrayBreadth:
 
 class TestGroupByFdeps:
     """Functional-dependency GROUP BY key elimination (ClickBench Q35
-    family: derived arithmetic keys widen the shuffle row for nothing)."""
+    family: derived arithmetic keys widen the shuffle row for nothing).
+    The translator is the only layer that drops GROUP BY keys."""
+
+    @pytest.fixture(scope="class")
+    def eng(self, spark):
+        from cowsdb_spark.engine import Engine
+        from cowsdb_spark.localdf import local_df
+
+        rows = [
+            ("a", "u1", 1, "mm"),
+            ("a", "u2", 2, "zz"),
+            ("b", "u1", 3, "aa"),
+            (None, "u3", 4, "(where group"),  # NULL group key
+            (None, "u3", 5, "order by"),
+            ("b", None, 6, "group by"),
+        ]
+        local_df(spark, rows, "k string, s string, n long, v string").createOrReplaceTempView(
+            "fdep_kv"
+        )
+        spark.range(0, 1000, 1, 8).selectExpr("id % 10 AS k").createOrReplaceTempView(
+            "fdep_nd"
+        )
+        return Engine(spark)
+
+    @staticmethod
+    def _rows(df):
+        return sorted(map(tuple, df.collect()), key=str)
 
     def test_derived_keys_dropped(self):
         st = one(
@@ -919,6 +945,96 @@ class TestGroupByFdeps:
             "GROUP BY ClientIP, ClientIP - 1 ORDER BY c DESC, ClientIP LIMIT 5"
         ).collect()
         assert got == want
+
+    def test_cb35_through_engine_matches(self, spark):
+        # cb35 on the hits table: grouping runs on ClientIP alone, and
+        # the rows equal raw Spark's
+        from cowsdb_spark.engine import Engine
+
+        from tools.gen_hits import ensure_hits
+
+        spark.read.parquet(ensure_hits()).createOrReplaceTempView("hits")
+        eng = Engine(spark)
+        sql = (
+            "SELECT ClientIP, ClientIP - 1 AS m1, ClientIP - 2 AS m2, "
+            "ClientIP - 3 AS m3, COUNT(*) AS c FROM hits GROUP BY ClientIP, "
+            "ClientIP - 1, ClientIP - 2, ClientIP - 3 "
+            "ORDER BY c DESC, ClientIP LIMIT 10"
+        )
+        df = eng.execute_to_df(sql)[0]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "hashpartitioning(ClientIP" in plan
+        assert "ClientIP - 1" not in plan.split("Exchange")[1].split("\n")[0]
+        base = [tuple(r) for r in spark.sql(sql).collect()]
+        assert [tuple(r) for r in df.collect()] == base
+
+    @pytest.mark.parametrize(
+        "sql",
+        [
+            # a '(' or clause keyword inside a literal
+            "SELECT k, k || 'x' AS kx, COUNT(*) AS c "
+            "FROM fdep_kv WHERE v <> '(from group' GROUP BY k, k || 'x'",
+            # a NULL group key next to a function of it
+            "SELECT k, upper(k) AS ku, COUNT(*) AS c, COUNT(DISTINCT s) AS u "
+            "FROM fdep_kv GROUP BY k, upper(k) ORDER BY k",
+            # an ordinal next to plain and derived keys
+            "SELECT k, s, concat(k, s) AS ks, MIN(v) AS mv, "
+            "COUNT(DISTINCT n) AS u FROM fdep_kv "
+            "GROUP BY 1, s, concat(k, s) ORDER BY k, s",
+            # a per-row nondeterministic key must not merge groups
+            "SELECT k, k + spark_partition_id() AS p, COUNT(*) AS c "
+            "FROM fdep_nd GROUP BY k, k + spark_partition_id()",
+        ],
+        ids=["literal_parens", "null_key", "ordinal", "partition_id"],
+    )
+    def test_engine_rows_match_spark(self, spark, eng, sql):
+        got = eng.execute_to_df(sql)[0]
+        assert self._rows(got) == self._rows(spark.sql(sql))
+
+    @staticmethod
+    def _perturb(sql, rng):
+        import re as _re
+
+        out = []
+        for tok in _re.split(r"(\s+|'[^']*')", sql):
+            if tok.startswith("'"):
+                out.append(tok)
+            elif tok.isspace():
+                out.append(" " * rng.randint(1, 3) if rng.random() < 0.5 else tok)
+            elif rng.random() < 0.4:
+                out.append(
+                    "".join(
+                        c.upper() if rng.random() < 0.5 else c.lower()
+                        for c in tok
+                    )
+                )
+            else:
+                out.append(tok)
+        return "".join(out)
+
+    def test_fuzzed_shapes_match_base(self, spark, eng):
+        # random keyword casing, whitespace, alias spellings and
+        # clause-keyword-bearing string literals never change the
+        # translated statement's rows
+        import random
+
+        templates = [
+            "SELECT k, MIN(v) AS mv, COUNT(*) AS c, COUNT(DISTINCT s) AS u "
+            "FROM fdep_kv GROUP BY k ORDER BY k",
+            "SELECT k, n % 2 AS parity, MIN(v) AS mv, COUNT(DISTINCT s) AS u "
+            "FROM fdep_kv GROUP BY k, n % 2 ORDER BY k, parity",
+            "SELECT k, k AS k2, COUNT(*) AS c FROM fdep_kv "
+            "WHERE v <> 'group by' GROUP BY k, k ORDER BY k",
+            "SELECT n, n + 1 AS np, n + 2 AS np2, COUNT(*) AS c "
+            "FROM fdep_kv GROUP BY n, n + 1, n + 2 ORDER BY n",
+        ]
+        rng = random.Random(42)
+        for base_sql in templates:
+            base = self._rows(spark.sql(base_sql))
+            for _ in range(6):
+                fuzzed = self._perturb(base_sql, rng)
+                got = self._rows(eng.execute_to_df(fuzzed)[0])
+                assert got == base, fuzzed
 
 
 class TestSmallScanFastPath:
