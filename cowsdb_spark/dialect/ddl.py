@@ -19,7 +19,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Optional
 
-from .tokenizer import Tok, tokenize
+from .tokenizer import Tok, depth_delta, find_close, split_args, tokenize
 from .types import ch_type_to_spark
 from pyspark.sql import types as T
 
@@ -333,17 +333,14 @@ def _parse_alter(toks: list[Tok]):
         depth = 0
         wh = None
         for k in range(j, len(toks)):
-            if toks[k].text == "(":
-                depth += 1
-            elif toks[k].text == ")":
-                depth -= 1
-            elif depth == 0 and toks[k].kind == "ident" and toks[k].text.upper() == "WHERE":
+            depth += depth_delta(toks[k])
+            if depth == 0 and toks[k].kind == "ident" and toks[k].text.upper() == "WHERE":
                 wh = k
                 break
         if wh is None:
             return None
         assigns = []
-        for grp in _split_tok_groups(toks[j:wh]):
+        for grp in split_args(toks[j:wh]):
             if len(grp) >= 3 and grp[1].text == "=":
                 assigns.append((_ident(grp[0]), _expr_text(grp[2:])))
         return AlterMutation(
@@ -470,11 +467,8 @@ def _parse_create_view(
     depth = 0
     while i < len(toks):
         t = toks[i]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "ident":
+        depth += depth_delta(t)
+        if depth == 0 and t.kind == "ident":
             up = t.text.upper()
             if up == "POPULATE":
                 populate = True
@@ -493,21 +487,6 @@ def _parse_create_view(
                 )
         i += 1
     return None
-
-
-def _split_tok_groups(toks: list[Tok]) -> list[list[Tok]]:
-    groups: list[list[Tok]] = [[]]
-    depth = 0
-    for t in toks:
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        if t.text == "," and depth == 0:
-            groups.append([])
-        else:
-            groups[-1].append(t)
-    return [g for g in groups if g]
 
 
 def _parse_create_table(sql: str, toks: list[Tok]) -> Optional[CreateTable]:
@@ -534,19 +513,10 @@ def _parse_create_table(sql: str, toks: list[Tok]) -> Optional[CreateTable]:
     # optional column list (absent for the CTAS / clone forms)
     cols: list[ColumnDef] = []
     if i < len(toks) and toks[i].text == "(":
-        depth = 0
-        start = i
-        for j in range(i, len(toks)):
-            if toks[j].text == "(":
-                depth += 1
-            elif toks[j].text == ")":
-                depth -= 1
-                if depth == 0:
-                    end = j
-                    break
-        else:
+        end = find_close(toks, i)
+        if end == -1:
             return None
-        cols = _parse_columns(toks[start + 1 : end])
+        cols = _parse_columns(toks[i + 1 : end])
         rest = toks[end + 1 :]
     else:
         rest = toks[i:]
@@ -556,11 +526,8 @@ def _parse_create_table(sql: str, toks: list[Tok]) -> Optional[CreateTable]:
     as_select = None
     depth = 0
     for j, t in enumerate(rest):
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "ident" and t.text.upper() == "AS":
+        depth += depth_delta(t)
+        if depth == 0 and t.kind == "ident" and t.text.upper() == "AS":
             tail = rest[j + 1 :]
             if not tail:
                 break
@@ -584,20 +551,8 @@ def _parse_create_table(sql: str, toks: list[Tok]) -> Optional[CreateTable]:
 
 
 def _parse_columns(toks: list[Tok]) -> list[ColumnDef]:
-    # split on top-level commas
-    groups: list[list[Tok]] = [[]]
-    depth = 0
-    for t in toks:
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        if t.text == "," and depth == 0:
-            groups.append([])
-        else:
-            groups[-1].append(t)
     cols: list[ColumnDef] = []
-    for g in groups:
+    for g in split_args(toks):
         if not g:
             continue
         cname = _ident(g[0])
@@ -666,10 +621,7 @@ def _parse_table_clauses(toks: list[Tok], ct: CreateTable) -> None:
         depth = 0
         while j < n:
             t = toks[j]
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
+            depth += depth_delta(t)
             if (
                 depth == 0
                 and t.kind == "ident"
@@ -691,22 +643,11 @@ def _parse_table_clauses(toks: list[Tok], ct: CreateTable) -> None:
                 ct.engine = toks[i].text
                 i += 1
                 if i < n and toks[i].text == "(":
-                    depth = 0
-                    args: list[str] = []
-                    while i < n:
-                        if toks[i].text == "(":
-                            depth += 1
-                            if depth == 1:
-                                i += 1
-                                continue
-                        elif toks[i].text == ")":
-                            depth -= 1
-                            if depth == 0:
-                                i += 1
-                                break
-                        args.append(toks[i].text)
-                        i += 1
-                    ct.engine_args = "".join(args).strip()
+                    close = find_close(toks, i)
+                    if close == -1:
+                        close = n
+                    ct.engine_args = "".join(t.text for t in toks[i + 1 : close]).strip()
+                    i = close + 1
         elif kw in ("PARTITION", "ORDER", "PRIMARY", "SAMPLE") and i + 1 < n and toks[
             i + 1
         ].text.upper() == "BY":

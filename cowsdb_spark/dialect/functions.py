@@ -16,6 +16,8 @@ row here and the dialect accepts another CH spelling.
 
 from __future__ import annotations
 
+from .tokenizer import split_text
+
 # Case-insensitive CH name → Spark name. Call shape unchanged.
 RENAMES: dict[str, str] = {
     # type conversions (Spark cast-shorthand functions)
@@ -1411,28 +1413,10 @@ def _fn_map_apply(args: list[str]) -> str | None:
     mt = _re.match(r"(?s)^(?:tuple\s*)?\((.*)\)$", body)
     if not mt:
         return None
-    # split the tuple body on the top-level comma
-    inner = mt.group(1)
-    depth = 0
-    split_at = -1
-    in_str: str | None = None
-    for i, c in enumerate(inner):
-        if in_str:
-            if c == in_str:
-                in_str = None
-            continue
-        if c in "'\"":
-            in_str = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            split_at = i
-            break
-    if split_at < 0:
+    parts = split_text(mt.group(1))
+    if len(parts) != 2:
         return None
-    ke, ve = inner[:split_at].strip(), inner[split_at + 1 :].strip()
+    ke, ve = parts
     for name, repl in ((kname, "__e.key"), (vname, "__e.value")):
         ke = _rename_ident(ke, name, repl)
         ve = _rename_ident(ve, name, repl)
@@ -1513,10 +1497,10 @@ def _fn_values_table(args: list[str]) -> str | None:
     # shape has tuple rows and Capitalized CH type names
     if not all(a.strip().startswith("(") for a in args[1:]):
         return None
-    from .types import _split_args, ch_type_to_spark
+    from .types import ch_type_to_spark
 
     cols = []
-    for part in _split_args(schema):
+    for part in split_text(schema):
         bits = part.strip().split(None, 1)
         if len(bits) != 2 or not bits[1][:1].isupper():
             return None
@@ -3164,21 +3148,7 @@ def _tuple_elems(arg: str) -> list[str] | None:
             s = s[1:-1]
         else:
             return None
-    parts: list[str] = []
-    depth = 0
-    cur = ""
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append(cur.strip())
-            cur = ""
-        else:
-            cur += ch
-    if cur.strip():
-        parts.append(cur.strip())
+    parts = split_text(s)
     return parts if len(parts) >= 2 else None
 
 

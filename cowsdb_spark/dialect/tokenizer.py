@@ -60,3 +60,67 @@ def render(toks: list[Tok]) -> str:
 def significant(toks: list[Tok]) -> list[int]:
     """Indices of non-whitespace, non-comment tokens."""
     return [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
+
+
+_DELTA = {"(": 1, "[": 1, "{": 1, ")": -1, "]": -1, "}": -1}
+_NO_NESTING = frozenset(("ws", "string", "bquote", "dquote", "comment"))
+
+
+def depth_delta(t: Tok) -> int:
+    """Net openers ``(``/``[``/``{`` minus closers ``)``/``]``/``}`` a
+    token adds to the nesting depth: the one nesting rule every scan
+    shares. Text an earlier rewrite put into one token ("array(",
+    "element_at(x") counts; quoted text and comments never do."""
+    if t.kind in _NO_NESTING:
+        return 0
+    s = t.text
+    if len(s) == 1:
+        return _DELTA.get(s, 0)
+    if s.isidentifier():
+        return 0
+    if "'" in s or '"' in s or "`" in s:
+        return sum(depth_delta(x) for x in tokenize(s))
+    return (
+        s.count("(") + s.count("[") + s.count("{")
+        - s.count(")") - s.count("]") - s.count("}")
+    )
+
+
+def find_close(toks: list[Tok], open_idx: int) -> int:
+    """Index of the token that closes the bracket ``toks[open_idx]``
+    opens, or -1."""
+    depth = 0
+    for i in range(open_idx, len(toks)):
+        depth += depth_delta(toks[i])
+        if depth <= 0:
+            return i if i > open_idx else -1
+    return -1
+
+
+def split_args(toks: list[Tok]) -> list[list[Tok]]:
+    """Split a token range on commas at nesting depth 0: one token list
+    per argument. Literals are single tokens, so commas and brackets
+    inside quotes never split. A blank last argument (empty range,
+    trailing comma) is dropped."""
+    args: list[list[Tok]] = [[]]
+    depth = 0
+    for t in toks:
+        if depth == 0 and t.kind == "op" and t.text == ",":
+            args.append([])
+            continue
+        depth += depth_delta(t)
+        args[-1].append(t)
+    if not render(args[-1]).strip():
+        args.pop()
+    return args
+
+
+def arg_texts(toks: list[Tok]) -> list[str]:
+    """``split_args`` rendered: one stripped string per argument."""
+    return [render(a).strip() for a in split_args(toks)]
+
+
+def split_text(s: str) -> list[str]:
+    """``arg_texts`` for callers holding a string: a type's parameters,
+    a key list, an attribute list."""
+    return arg_texts(tokenize(s))

@@ -26,7 +26,16 @@ from .functions import (
     expand_combinator,
     parse_combinator,
 )
-from .tokenizer import Tok, tokenize
+from .tokenizer import (
+    Tok,
+    arg_texts,
+    depth_delta,
+    find_close,
+    significant,
+    split_args,
+    split_text,
+    tokenize,
+)
 
 # Formats the serializer layer knows (formats/__init__.py registry
 # keys; checked case-insensitively but emitted canonically).
@@ -144,7 +153,7 @@ def _strip_trailing_format(toks: list[Tok]) -> tuple[list[Tok], Optional[str]]:
             depth = 0
             for i in range(a):
                 if toks[i].kind == "op":
-                    depth += toks[i].text.count("(") - toks[i].text.count(")")
+                    depth += depth_delta(toks[i])
             if depth == 0:
                 # unknown names strip too and pass through verbatim —
                 # the serializer raises CH code 73 (Unknown format),
@@ -168,7 +177,7 @@ def _strip_trailing_outfile(
     for si, i in enumerate(sig):
         t = toks[i]
         if t.kind == "op":
-            depth += t.text.count("(") - t.text.count(")")
+            depth += depth_delta(t)
         if (
             depth == 0
             and t.kind == "ident"
@@ -207,7 +216,7 @@ def _strip_trailing_settings(toks: list[Tok]) -> tuple[list[Tok], dict[str, str]
     settings_at = None
     for i, t in enumerate(toks):
         if t.kind == "op":
-            depth += t.text.count("(") - t.text.count(")")
+            depth += depth_delta(t)
         if t.kind == "ident" and t.text.upper() == "SETTINGS" and depth == 0:
             # `system.settings` is a table reference, not the clause
             prev = next(
@@ -241,42 +250,6 @@ def _strip_trailing_settings(toks: list[Tok]) -> tuple[list[Tok], dict[str, str]
         return toks, {}  # not a parseable settings clause; leave untouched
     _ = sig  # (kept for symmetry with _strip_trailing_format)
     return toks[:settings_at], settings
-
-
-def _find_call_close(toks: list[Tok], open_idx: int) -> int:
-    """Index of the ')' matching toks[open_idx] == '('."""
-    depth = 0
-    for i in range(open_idx, len(toks)):
-        if toks[i].kind == "op":
-            if toks[i].text == "(":
-                depth += 1
-            elif toks[i].text == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-    return -1
-
-
-def _split_call_args(toks: list[Tok]) -> list[str]:
-    """Split tokens between '(' and ')' on top-level commas → arg strings."""
-    args: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    for t in toks:
-        if t.kind == "op":
-            if t.text in "([":
-                depth += 1
-            elif t.text in ")]":
-                depth -= 1
-        if t.kind == "op" and t.text == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(t.text)
-    last = "".join(cur).strip()
-    if last:
-        args.append(last)
-    return args
 
 
 def _apply_template(template: str, args: list[str], params: list[str] | None = None) -> str:
@@ -320,7 +293,7 @@ def _generate_random(args: list[str]) -> str:
     """
     from pyspark.sql import types as T
 
-    from .types import _split_args, ch_type_to_spark
+    from .types import ch_type_to_spark
 
     schema = args[0].strip() if args else "'x Int64'"
     if schema and schema[0] in "'\"":
@@ -358,7 +331,7 @@ def _generate_random(args: list[str]) -> str:
         return f"substring(md5(CAST({r} AS STRING)), 1, 10)"  # String & rest
 
     cols = []
-    for k, part in enumerate(_split_args(schema)):
+    for k, part in enumerate(split_text(schema)):
         bits = part.split(None, 1)
         name = bits[0].strip("`")
         dtype = ch_type_to_spark(bits[1]) if len(bits) == 2 else T.LongType()
@@ -467,12 +440,12 @@ def _rewrite_functions(sql: str) -> str:
                     or lname in _SPECIAL_FNS
                     or parse_combinator(lname) is not None
                 ):
-                    close = _find_call_close(toks, j)
+                    close = find_close(toks, j)
                     if close == -1:
                         out.append(t.text)
                         i += 1
                         continue
-                    args = _split_call_args(toks[j + 1 : close])
+                    args = arg_texts(toks[j + 1 : close])
                     # parameterized combinator: name(params)(args)
                     k = close + 1
                     while k < len(toks) and toks[k].kind in ("ws", "comment"):
@@ -483,9 +456,9 @@ def _rewrite_functions(sql: str) -> str:
                         and toks[k].kind == "op"
                         and toks[k].text == "("
                     ):
-                        close2 = _find_call_close(toks, k)
+                        close2 = find_close(toks, k)
                         if close2 != -1:
-                            real_args = _split_call_args(toks[k + 1 : close2])
+                            real_args = arg_texts(toks[k + 1 : close2])
                             entry = PARAMETERIZED[lname]
                             res = (
                                 entry(real_args, args)
@@ -780,14 +753,10 @@ def _rewrite_ternary(sql: str) -> str:
         q_idx = None
         depth = 0
         for i, t in enumerate(toks):
-            if t.kind == "op":
-                if t.text in "([":
-                    depth += 1
-                elif t.text in ")]":
-                    depth -= 1
-                elif t.text == "?" and q_idx is None:
-                    q_idx = i
-                    q_depth = depth
+            depth += depth_delta(t)
+            if t.kind == "op" and t.text == "?" and q_idx is None:
+                q_idx = i
+                q_depth = depth
         if q_idx is None:
             return sql
         # left boundary: scan back at q_depth
@@ -795,18 +764,15 @@ def _rewrite_ternary(sql: str) -> str:
         left = 0
         for i in range(q_idx - 1, -1, -1):
             t = toks[i]
-            if t.kind == "op":
-                if t.text in ")]":
-                    depth += 1
-                elif t.text in "([":
-                    if depth == q_depth:
-                        left = i + 1
-                        break
-                    depth -= 1
-                elif t.text in _TERNARY_LEFT_STOP and depth == q_depth:
-                    left = i + 1
-                    break
-            if t.kind == "ident" and t.text.upper() in _TERNARY_LEFT_STOP_KW and depth == q_depth:
+            d = depth_delta(t)
+            if d > 0 and depth == q_depth:
+                left = i + 1
+                break
+            depth -= d
+            if d == 0 and depth == q_depth and (
+                (t.kind == "op" and t.text in _TERNARY_LEFT_STOP)
+                or (t.kind == "ident" and t.text.upper() in _TERNARY_LEFT_STOP_KW)
+            ):
                 left = i + 1
                 break
         # find matching ':' then right boundary of else-branch
@@ -815,20 +781,16 @@ def _rewrite_ternary(sql: str) -> str:
         nested = 0
         for i in range(q_idx + 1, len(toks)):
             t = toks[i]
-            if t.kind == "op":
-                if t.text in "([":
-                    depth += 1
-                elif t.text in ")]":
-                    if depth == q_depth:
-                        break
-                    depth -= 1
-                elif t.text == "?" and depth == q_depth:
-                    nested += 1
-                elif t.text == ":" and depth == q_depth:
-                    if nested == 0:
-                        colon = i
-                        break
-                    nested -= 1
+            depth += depth_delta(t)
+            if depth < q_depth:
+                break
+            if t.kind == "op" and t.text == "?" and depth == q_depth:
+                nested += 1
+            elif t.kind == "op" and t.text == ":" and depth == q_depth:
+                if nested == 0:
+                    colon = i
+                    break
+                nested -= 1
         if colon is None:
             return sql  # not a ternary (e.g. cast '::'), leave as-is
         # right boundary: to nearest top-level comma/close-paren/keyword
@@ -836,17 +798,10 @@ def _rewrite_ternary(sql: str) -> str:
         depth = q_depth
         for i in range(colon + 1, len(toks)):
             t = toks[i]
-            if t.kind == "op":
-                if t.text in "([":
-                    depth += 1
-                elif t.text in ")]":
-                    if depth == q_depth:
-                        right = i
-                        break
-                    depth -= 1
-                elif t.text == "," and depth == q_depth:
-                    right = i
-                    break
+            depth += depth_delta(t)
+            if depth < q_depth or (t.kind == "op" and t.text == "," and depth == q_depth):
+                right = i
+                break
             if (
                 t.kind == "ident"
                 and t.text.upper() in ("AS", "FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "END")
@@ -932,7 +887,7 @@ def _rewrite_sample(toks: list[Tok]) -> None:
     depth = 0
     for si, i in enumerate(sig):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         # any depth: SAMPLE also appears inside subqueries; the
         # [ident|)] SAMPLE <number> shape doesn't occur elsewhere
         if (
@@ -963,7 +918,7 @@ def _rewrite_limit_by(toks: list[Tok]) -> list[Tok]:
     order_at = limit_at = None
     for si, i in enumerate(sig):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth != 0 or t.kind != "ident":
             continue
         up = t.text.upper()
@@ -985,13 +940,11 @@ def _rewrite_limit_by(toks: list[Tok]) -> list[Tok]:
     depth = 0
     for si in range(limit_at + 3, len(sig)):
         t = toks[sig[si]]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth == 0 and t.kind == "ident" and t.text.upper() == "LIMIT":
             by_end = si
             break
-    by_list = "".join(
-        toks[j].text for j in range(sig[limit_at + 3], sig[by_end - 1] + 1)
-    ).strip()
+    by_exprs = arg_texts(toks[sig[limit_at + 3] : sig[by_end - 1] + 1])
     tail = (
         "".join(toks[j].text for j in range(sig[by_end], len(toks)))
         if by_end < len(sig)
@@ -999,23 +952,17 @@ def _rewrite_limit_by(toks: list[Tok]) -> list[Tok]:
     )
     if order_at is not None:
         core = "".join(toks[j].text for j in range(sig[order_at])).strip()
-        order_list = "".join(
-            toks[j].text for j in range(sig[order_at + 2], sig[limit_at])
-        ).strip()
+        order_items = [
+            _order_item(x) for x in arg_texts(toks[sig[order_at + 2] : sig[limit_at]])
+        ]
     else:
         core = "".join(toks[j].text for j in range(sig[limit_at])).strip()
-        order_list = None
+        order_items = []
     # BY and ORDER keys may not be in the projection (CH allows both
     # over any source column): splice every key into the inner select
     # under a synthetic alias, window over the aliases, and drop them
     # in the outer select (ORDER BY may still reference them — sort
     # resolves against the subquery output, not the projection).
-    by_exprs = _split_top_level_text(by_list)
-    order_items = (
-        [_order_item(x) for x in _split_top_level_text(order_list)]
-        if order_list is not None
-        else []
-    )
     alias_of: dict[str, str] = {}
     for e in by_exprs + [e for e, _ in order_items]:
         alias_of.setdefault(e, f"__ch_lb_k{len(alias_of)}")
@@ -1052,23 +999,6 @@ def _order_item(item: str) -> tuple[str, str]:
     return m.group(1).strip(), (m.group(2) or "").strip()
 
 
-def _split_top_level_text(s: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-    return [p for p in parts if p]
-
-
 def _append_select_items(core: str, items: list[str]) -> str:
     """Append projection items to a SELECT's list (before its
     top-level FROM). No FROM → returned unchanged."""
@@ -1077,7 +1007,7 @@ def _append_select_items(core: str, items: list[str]) -> str:
     toks = tokenize(core)
     depth = 0
     for i, t in enumerate(toks):
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth == 0 and t.kind == "ident" and t.text.upper() == "FROM":
             return (
                 "".join(x.text for x in toks[:i])
@@ -1104,7 +1034,7 @@ def _rewrite_qualify(toks: list[Tok]) -> list[Tok]:
     for si, i in enumerate(sig):
         t = toks[i]
         if t.kind == "op":
-            depth += t.text.count("(") - t.text.count(")")
+            depth += depth_delta(t)
         elif depth == 0 and t.kind == "ident" and t.text.upper() == "QUALIFY":
             q_at = si
             break
@@ -1115,7 +1045,7 @@ def _rewrite_qualify(toks: list[Tok]) -> list[Tok]:
     for sj in range(q_at + 1, len(sig)):
         t = toks[sig[sj]]
         if t.kind == "op":
-            depth += t.text.count("(") - t.text.count(")")
+            depth += depth_delta(t)
         elif depth == 0 and t.kind == "ident" and t.text.upper() in (
             "ORDER",
             "LIMIT",
@@ -1158,30 +1088,33 @@ def _rewrite_where_alias(toks: list[Tok]) -> list[Tok]:
     for si in range(1, len(sig)):
         t = toks[sig[si]]
         if t.kind == "op":
-            depth += t.text.count("(") - t.text.count(")")
+            depth += depth_delta(t)
         elif depth == 0 and t.kind == "ident" and t.text.upper() == "FROM":
             from_at = si
             break
     if from_at is None:
         return toks
-    sel_list = "".join(
-        toks[j].text for j in range(sig[1], sig[from_at])
-    )
-    aliases: dict[str, str] = {}
-    for item in _split_top_level_text(sel_list):
-        m = re.match(r"(?is)^(.*\S)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$", item.strip())
-        if m:
-            aliases[m.group(2).lower()] = m.group(1).strip()
+    # alias → its expression's tokens; split the projection's own
+    # token range rather than render and re-tokenize it
+    aliases: dict[str, list[Tok]] = {}
+    for item in split_args(toks[sig[1] : sig[from_at]]):
+        isig = significant(item)
+        if (
+            len(isig) >= 3
+            and item[isig[-2]].upper == "AS"
+            and item[isig[-1]].kind == "ident"
+        ):
+            aliases[item[isig[-1]].text.lower()] = item[isig[0] : isig[-3] + 1]
     if not aliases:
         return toks
     # Substitute in the top-level WHERE/HAVING clause ranges at ANY
-    # paren depth — ``WHERE abs(y) > 1`` and ``WHERE (y > 3)`` must
+    # nesting depth — ``WHERE abs(y) > 1`` and ``WHERE (y > 3)`` must
     # resolve like bare ``WHERE y > 3`` does. Skipped frames: a
     # subquery ``(SELECT …)`` keeps its own alias scope, and a frame
     # containing a lambda ``->`` may bind the same name as a lambda
     # parameter (``arrayExists(y -> y > 1, a)``).
-    out: list[Tok] = list(toks)
-    stack: list[bool] = []  # per open paren: True = do-not-substitute frame
+    subst: dict[int, list[Tok]] = {}
+    stack: list[bool] = []  # per open frame: True = do-not-substitute frame
     in_clause = False
 
     def _frame_blocked(open_si: int) -> bool:
@@ -1190,28 +1123,19 @@ def _rewrite_where_alias(toks: list[Tok]) -> list[Tok]:
         nxt = toks[sig[open_si + 1]] if open_si + 1 < len(sig) else None
         if nxt is not None and nxt.upper == "SELECT":
             return True
-        d = 0
-        for sj in range(open_si, len(sig)):
-            tx = toks[sig[sj]].text
-            if tx == "(":
-                d += 1
-            elif tx == ")":
-                d -= 1
-                if d == 0:
-                    return False
-            elif tx == "->":
-                return True
-        return False
+        close = find_close(toks, sig[open_si])
+        end = close if close != -1 else len(toks)
+        return any(t.text == "->" for t in toks[sig[open_si] : end])
 
     for si in range(from_at, len(sig)):
         i = sig[si]
         t = toks[i]
-        if t.text == "(":
-            stack.append(_frame_blocked(si))
+        d = depth_delta(t)
+        if d > 0:
+            stack.extend([_frame_blocked(si)] * d)
             continue
-        if t.text == ")":
-            if stack:
-                stack.pop()
+        if d < 0:
+            del stack[d:]
             continue
         if t.kind == "ident":
             up = t.text.upper()
@@ -1233,7 +1157,13 @@ def _rewrite_where_alias(toks: list[Tok]) -> list[Tok]:
                 if (nxt is None or nxt.text not in ("(",)) and (
                     prv is None or prv.text != "."
                 ) and (nxt is None or nxt.text != "."):
-                    out[i] = Tok("ident", f"({aliases[t.text.lower()]})")
+                    expr = [Tok(x.kind, x.text) for x in aliases[t.text.lower()]]
+                    subst[i] = [Tok("op", "("), *expr, Tok("op", ")")]
+    if not subst:
+        return toks
+    out: list[Tok] = []
+    for i, t in enumerate(toks):
+        out.extend(subst.get(i, (t,)))
     return out
 
 
@@ -1353,13 +1283,12 @@ def _rewrite_truthy_filters(toks: list[Tok]) -> list[Tok]:
     sig = _sig(toks)
     sig_index = {i: si for si, i in enumerate(sig)}
     for i, t in enumerate(toks):
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-            out.append(t)
-            continue
-        if t.kind == "op" and t.text == ")":
-            close_ge(depth)  # clause ran to the enclosing paren
-            depth -= 1
+        d = depth_delta(t)
+        if d:
+            for _ in range(-d):
+                close_ge(depth)  # clause ran to the enclosing bracket
+                depth -= 1
+            depth += max(d, 0)
             out.append(t)
             continue
         if t.kind == "ident":
@@ -1400,7 +1329,7 @@ def _rewrite_limit_with_ties(toks: list[Tok]) -> list[Tok]:
     for si, i in enumerate(sig):
         t = toks[i]
         if t.kind == "op":
-            depth += t.text.count("(") - t.text.count(")")
+            depth += depth_delta(t)
         elif depth == 0 and t.kind == "ident":
             up = t.text.upper()
             if up == "ORDER" and si + 1 < len(sig) and toks[sig[si + 1]].text.upper() == "BY":
@@ -1510,7 +1439,7 @@ def _rewrite_limit_comma(toks: list[Tok]) -> list[Tok]:
     depth = 0
     for si, i in enumerate(sig):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if (
             depth == 0
             and t.kind == "ident"
@@ -1542,23 +1471,10 @@ def _rewrite_star_replace(toks: list[Tok]) -> list[Tok]:
             and toks[sig[si + 1]].text.upper() == "REPLACE"
             and toks[sig[si + 2]].text == "("
         ):
-            depth = 0
-            close = None
-            for sj in range(si + 2, len(sig)):
-                tx = toks[sig[sj]].text
-                if tx == "(":
-                    depth += 1
-                elif tx == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = sj
-                        break
-            if close is None:
+            close = find_close(toks, sig[si + 2])
+            if close == -1:
                 return toks
-            inner = " ".join(
-                toks[sig[k]].text for k in range(si + 3, close)
-            ).strip()
-            items = _split_top_level_text(inner)
+            items = arg_texts(toks[sig[si + 2] + 1 : close])
             cols = []
             for it in items:
                 m = re.search(r"(?is)\s+AS\s+(`[^`]+`|\w+)\s*$", it)
@@ -1568,8 +1484,8 @@ def _rewrite_star_replace(toks: list[Tok]) -> list[Tok]:
             toks[i].text = (
                 f"* EXCEPT ({', '.join(cols)}), {', '.join(items)}"
             )
-            for k in range(si + 1, close + 1):
-                toks[sig[k]].text = ""
+            for k in range(i + 1, close + 1):
+                toks[k].text = ""
             break
     return toks
 
@@ -1630,19 +1546,15 @@ def _rewrite_group_by_fdeps(toks: list[Tok]) -> list[Tok]:
         end = len(sig)
         k = si + 2
         while k < len(sig):
-            tx = toks[sig[k]].text
-            up = toks[sig[k]].upper
-            if tx == "(":
-                depth += 1
-            elif tx == ")":
-                if depth == 0:
-                    end = k
-                    break
-                depth -= 1
-            elif depth == 0 and (up in _GB_STOP or tx == ";"):
+            t = toks[sig[k]]
+            depth += depth_delta(t)
+            if depth < 0:  # the enclosing group's closer
                 end = k
                 break
-            elif depth == 0 and tx == ",":
+            if depth == 0 and (t.upper in _GB_STOP or t.text == ";"):
+                end = k
+                break
+            if depth == 0 and t.text == ",":
                 items.append((start, k))
                 start = k + 1
             k += 1
@@ -1706,24 +1618,11 @@ def _rewrite_distinct_on(toks: list[Tok]) -> list[Tok]:
         and toks[sig[3]].text == "("
     ):
         return toks
-    # matching close paren of the key list
-    depth = 0
-    close = None
-    for si in range(3, len(sig)):
-        tx = toks[sig[si]].text
-        if tx == "(":
-            depth += 1
-        elif tx == ")":
-            depth -= 1
-            if depth == 0:
-                close = si
-                break
-    if close is None:
+    close = find_close(toks, sig[3])  # of the key list
+    if close == -1:
         return toks
-    keys = "".join(
-        toks[j].text for j in range(sig[3] + 1, sig[close])
-    ).strip()
-    rest = "".join(toks[j].text for j in range(sig[close] + 1, len(toks)))
+    keys = "".join(toks[j].text for j in range(sig[3] + 1, close)).strip()
+    rest = "".join(toks[j].text for j in range(close + 1, len(toks)))
     # insert LIMIT 1 BY before a final top-level LIMIT, else append
     rest_toks = tokenize(rest)
     rsig = _sig(rest_toks)
@@ -1731,7 +1630,7 @@ def _rewrite_distinct_on(toks: list[Tok]) -> list[Tok]:
     cut = None
     for si, i in enumerate(rsig):
         t = rest_toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if (
             depth == 0
             and t.kind == "ident"
@@ -1790,21 +1689,13 @@ def _subscript_base_start(toks: list[Tok], oi: int) -> int:
                     continue
             break
         if t.text in (")", "]") or any(c in t.text for c in ")]"):
-            # scan char-aware backward to the matching opener (it may
-            # be embedded mid-token after an earlier rewrite)
+            # scan backward to the matching opener (it may be embedded
+            # mid-token after an earlier rewrite)
             depth = 0
-            found = False
             while j >= 0:
-                for ch in reversed(toks[j].text):
-                    if ch in ")]":
-                        depth += 1
-                    elif ch in "([":
-                        depth -= 1
-                        if depth == 0:
-                            found = True
-                            break
+                depth -= depth_delta(toks[j])
                 start = j
-                if found:
+                if depth <= 0:
                     break
                 j = prev_sig(j)
             if j < 0:
@@ -1889,7 +1780,7 @@ def _rewrite_array_join(toks: list[Tok]) -> list[Tok]:
     from_at = array_at = None
     for si, i in enumerate(sig):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth != 0 or t.kind != "ident":
             continue
         up = t.text.upper()
@@ -2021,21 +1912,8 @@ def _any_join_dedup(toks: list[Tok], sig: list[int], si: int) -> bool:
         return False
     if j + 1 >= len(sig) or toks[sig[j + 1]].text != "(":
         return False
-    # cols up to matching close
-    depth = 0
-    cols_toks = []
-    for k in range(j + 1, len(sig)):
-        tx = toks[sig[k]].text
-        if tx == "(":
-            depth += 1
-            if depth == 1:
-                continue
-        elif tx == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        cols_toks.append(tx)
-    cols = " ".join(cols_toks).strip()
+    close = find_close(toks, sig[j + 1])
+    cols = ", ".join(arg_texts(toks[sig[j + 1] + 1 : close])) if close != -1 else ""
     if not cols:
         return False
     ref_text = "".join(toks[i].text for i in ref_idx)
@@ -2070,7 +1948,7 @@ def _rewrite_ch_modifiers(toks: list[Tok]) -> list[Tok]:
     pre_at = where_at = None
     for si, i in enumerate(sig):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth != 0 or t.kind != "ident":
             continue
         up = t.text.upper()
@@ -2095,7 +1973,7 @@ def _rewrite_ch_modifiers(toks: list[Tok]) -> list[Tok]:
     depth = 0
     for si in range(where_at + 1, len(sig)):
         t = toks[sig[si]]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth == 0 and t.kind == "ident" and t.text.upper() in _CLAUSE_KW:
             end = sig[si]
             break
@@ -2128,7 +2006,7 @@ def _rewrite_scalar_with(toks: list[Tok]) -> list[Tok]:
         if depth == 0 and t.kind == "ident" and t.text.upper() == "SELECT":
             select_at = si
             break
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth == 0 and t.text == ",":
             items.append([])
         else:
@@ -2157,34 +2035,6 @@ def _rewrite_scalar_with(toks: list[Tok]) -> list[Tok]:
     return out_toks
 
 
-def _split_top_level_commas(s: str) -> list[str]:
-    """Split on commas not nested inside parens or quotes."""
-    parts, depth, cur, q = [], 0, [], None
-    for ch in s:
-        if q:
-            cur.append(ch)
-            if ch == q:
-                q = None
-            continue
-        if ch in "'\"":
-            q = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
 def _rewrite_with_fill(toks: list[Tok]) -> tuple[list[Tok], Optional[dict]]:
     """Strip ``ORDER BY col [ASC|DESC] WITH FILL [FROM a] [TO b]
     [STEP s]`` and return the fill spec; the engine materializes the
@@ -2196,7 +2046,7 @@ def _rewrite_with_fill(toks: list[Tok]) -> tuple[list[Tok], Optional[dict]]:
     col = None
     for si, i in enumerate(sig):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if (
             depth == 0
             and t.kind == "ident"
@@ -2232,24 +2082,11 @@ def _rewrite_with_fill(toks: list[Tok]) -> tuple[list[Tok], Optional[dict]]:
         k = sig[j] + 1
         while k < len(toks) and toks[k].text != "(":
             k += 1
-        depth2 = 0
-        body = []
-        k2 = k
-        while k2 < len(toks):
-            txt = toks[k2].text
-            depth2 += txt.count("(") - txt.count(")")
-            body.append(txt)
-            if depth2 == 0 and ")" in txt:
-                break
-            k2 += 1
-        inner = "".join(body).strip()
-        if inner.startswith("("):
-            inner = inner[1:]
-        if inner.endswith(")"):
-            inner = inner[:-1]
+        k2 = find_close(toks, k)
+        if k2 == -1:
+            k2 = len(toks) - 1
         items = []
-        for part in _split_top_level_commas(inner):
-            part = part.strip()
+        for part in arg_texts(toks[k + 1 : k2]):
             m2 = re.match(r"^(`[^`]+`|\w+)\s+AS\s+(.+)$", part, re.IGNORECASE | re.DOTALL)
             if m2:
                 items.append((m2.group(1).strip("`"), m2.group(2).strip()))
@@ -2276,7 +2113,7 @@ def _rewrite_with_totals(toks: list[Tok]) -> tuple[list[Tok], bool]:
     group_at = by_at = with_at = None
     for si, i in enumerate(sig):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth != 0 or t.kind != "ident":
             continue
         up = t.text.upper()
@@ -2301,7 +2138,7 @@ def _rewrite_with_totals(toks: list[Tok]) -> tuple[list[Tok], bool]:
     depth = 0
     for si, i in enumerate(sig[:group_at]):
         t = toks[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth == 0 and t.kind == "ident" and t.text.upper() == "FROM":
             from_i = i
     if from_i is None:
@@ -2362,7 +2199,7 @@ def _rewrite_cast_types(toks: list[Tok]) -> list[Tok]:
         as_at = close = None
         for k in range(i + 1, len(sig)):
             tx = toks[sig[k]].text
-            # count parens inside composite tokens too — earlier
+            # depth_delta counts composite tokens too — earlier
             # rewrites emit tokens like "array(" (bracket literals)
             if (
                 depth == 1
@@ -2371,7 +2208,7 @@ def _rewrite_cast_types(toks: list[Tok]) -> list[Tok]:
             ):
                 as_at = k
                 continue
-            depth += tx.count("(") - tx.count(")")
+            depth += depth_delta(toks[sig[k]])
             if depth == 0 and ")" in tx:
                 close = k
                 break
@@ -2404,21 +2241,16 @@ def _rewrite_map_literals(toks: list[Tok]) -> list[Tok]:
         if k + 1 >= len(sig) or toks[sig[k + 1]].kind not in ("string", "number"):
             continue
         depth = 0
-        close = None
-        for j in range(k, len(sig)):
-            tx = toks[sig[j]].text
-            if tx in ("{", "(", "["):
-                depth += 1
-            elif tx in ("}", ")", "]"):
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-            elif tx == ":" and depth == 1:
-                toks[sig[j]].text = ","
-        if close is not None and toks[sig[close]].text == "}":
-            toks[sig[k]].text = "map("
-            toks[sig[close]].text = ")"
+        for j in range(sig[k], len(toks)):
+            t = toks[j]
+            depth += depth_delta(t)
+            if depth == 0:
+                if t.text == "}":
+                    toks[sig[k]].text = "map("
+                    t.text = ")"
+                break
+            if depth == 1 and t.kind == "op" and t.text == ":":
+                t.text = ","
     return toks
 
 
@@ -2434,35 +2266,22 @@ def _structify_group(toks: list[Tok], sig: list[int], start: int) -> None:
     because Spark's struct() derives field names from the expressions
     and IN/= on structs is field-NAME-sensitive.  No-op unless the
     group has a top-level comma (i.e. actually is a tuple)."""
-    depth = 0
-    has_comma = False
-    for j in range(start, len(sig)):
-        tx = toks[sig[j]].text
-        if tx == "(":
-            depth += 1
-        elif tx == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        elif depth == 1 and tx == ",":
-            has_comma = True
-    if not has_comma:
+    open_i = sig[start]
+    close = find_close(toks, open_i)
+    if close == -1:
         return
+    commas: list[int] = []
     depth = 0
-    n = 1
-    for j in range(start, len(sig)):
-        tx = toks[sig[j]].text
-        if tx == "(":
-            depth += 1
-        elif tx == ")":
-            depth -= 1
-            if depth == 0:
-                toks[sig[j]].text = f" AS __t{n})"
-                break
-        elif depth == 1 and tx == ",":
-            toks[sig[j]].text = f" AS __t{n},"
-            n += 1
-    toks[sig[start]].text = "struct("
+    for j in range(open_i + 1, close):
+        if depth == 0 and toks[j].kind == "op" and toks[j].text == ",":
+            commas.append(j)
+        depth += depth_delta(toks[j])
+    if not commas:
+        return
+    for n, j in enumerate(commas, 1):
+        toks[j].text = f" AS __t{n},"
+    toks[close].text = f" AS __t{len(commas) + 1})"
+    toks[open_i].text = "struct("
 
 
 def _rewrite_tuple_in(toks: list[Tok]) -> list[Tok]:
@@ -2490,16 +2309,13 @@ def _rewrite_tuple_in(toks: list[Tok]) -> list[Tok]:
             start = None
             has_comma = False
             for j in range(k - 1, -1, -1):
-                tx = toks[sig[j]].text
-                if tx == ")":
-                    depth += 1
-                elif tx == "(":
-                    depth -= 1
-                    if depth == 0:
-                        start = j
-                        break
-                elif depth == 1 and tx == ",":
+                t = toks[sig[j]]
+                if depth == 1 and t.text == ",":
                     has_comma = True
+                depth -= depth_delta(t)
+                if depth == 0:
+                    start = j
+                    break
             if start is not None and has_comma:
                 prev = toks[sig[start - 1]] if start > 0 else None
                 # an identifier directly before "(" is a function call —
@@ -2514,17 +2330,16 @@ def _rewrite_tuple_in(toks: list[Tok]) -> list[Tok]:
                     depth = 0
                     tuple_starts = []
                     for j in range(k + 1, len(sig)):
-                        tx = toks[sig[j]].text
-                        if tx == "(":
-                            depth += 1
-                            if depth == 2:
-                                pj = toks[sig[j - 1]]
-                                if pj.kind not in ("ident", "bquote"):
-                                    tuple_starts.append(j)
-                        elif tx == ")":
-                            depth -= 1
-                            if depth == 0:
-                                break
+                        t = toks[sig[j]]
+                        depth += depth_delta(t)
+                        if depth == 0:
+                            break
+                        if (
+                            depth == 2
+                            and t.text == "("
+                            and toks[sig[j - 1]].kind not in ("ident", "bquote")
+                        ):
+                            tuple_starts.append(j)
                     for j in tuple_starts:
                         _structify_group(toks, sig, j)
                     _structify_group(toks, sig, start)
@@ -2556,23 +2371,12 @@ def _rewrite_quantified(toks: list[Tok]) -> list[Tok]:
         quant = t.upper
         if (op, quant) in _QUANT_AGG:
             agg = _QUANT_AGG[(op, quant)]
-            # find matching close of the subquery group
-            depth = 0
-            close = None
-            for j in range(k + 1, len(sig)):
-                tx = toks[sig[j]].text
-                if tx == "(":
-                    depth += 1
-                elif tx == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-            if close is None:
+            close = find_close(toks, sig[k + 1])  # of the subquery
+            if close == -1:
                 continue
             t.text = ""  # drop the quantifier keyword
             toks[sig[k + 1]].text = f"(SELECT {agg}(__chq.__v) FROM ("
-            toks[sig[close]].text = ") AS __chq(__v))"
+            toks[close].text = ") AS __chq(__v))"
         elif op in ("=", "==") and quant == "ANY":
             toks[sig[k - 1]].text = "IN"
             t.text = ""
@@ -2712,7 +2516,7 @@ def _rewrite_nested_explode(body: str) -> str:
         j = sig[si + 1]
         end = None
         for k in range(j, len(toks)):
-            depth += toks[k].text.count("(") - toks[k].text.count(")")
+            depth += depth_delta(toks[k])
             if depth == 0:
                 end = k
                 break
@@ -2761,7 +2565,7 @@ def _rewrite_nested_explode(body: str) -> str:
     depth = 0
     for i in sig2:
         t = toks2[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth == 0 and t.kind == "ident" and t.text.upper() == "FROM":
             from_at = i
             break
@@ -2777,7 +2581,7 @@ def _rewrite_nested_explode(body: str) -> str:
         if i <= from_at:
             continue
         t = toks2[i]
-        depth += t.text.count("(") - t.text.count(")")
+        depth += depth_delta(t)
         if depth < 0:
             ins = i
             break
@@ -2814,11 +2618,8 @@ def _rewrite_values_tuples(sql: str) -> str:
     depth = 0
     for k, i in enumerate(sig):
         t = toks[i]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.upper == "VALUES":
+        depth += depth_delta(t)
+        if depth == 0 and t.upper == "VALUES":
             values_at = k
             break
     if values_at is None:
@@ -2831,35 +2632,21 @@ def _rewrite_values_tuples(sql: str) -> str:
     for k in range(values_at + 1, len(sig)):
         i = sig[k]
         t = toks[i]
+        d = depth_delta(t)
         if t.text == "(":
             if depth == 0:
                 row_opens.append(i)
-            else:
-                prev = toks[sig[k - 1]]
-                if prev.kind not in ("ident", "bquote"):
-                    # scan this group for a top-level comma
-                    d, has_comma = 0, False
-                    for j in range(k, len(sig)):
-                        txt = toks[sig[j]].text
-                        if txt == "(":
-                            d += 1
-                        elif txt == ")":
-                            d -= 1
-                            if d == 0:
-                                break
-                        elif txt == "," and d == 1:
-                            has_comma = True
-                    if has_comma:
-                        # kind "op" so a directly-following nested
-                        # tuple's prev check doesn't see a call
-                        toks[i] = Tok("op", "struct(")
-                        changed = True
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-            if depth == 0:
-                row_closes.append(i)
-        elif t.text == "," and depth == 0:
+            elif toks[sig[k - 1]].kind not in ("ident", "bquote"):
+                close = find_close(toks, i)
+                if close != -1 and len(split_args(toks[i + 1 : close])) > 1:
+                    # kind "op" so a directly-following nested
+                    # tuple's prev check doesn't see a call
+                    toks[i] = Tok("op", "struct(")
+                    changed = True
+        depth += d
+        if d < 0 and depth == 0:
+            row_closes.append(i)
+        elif d == 0 and depth == 0 and t.text == ",":
             row_commas.append(i)
     if changed and row_opens:
         # VALUES (r1), (r2) → SELECT r1 UNION ALL SELECT r2

@@ -12,6 +12,8 @@ import re
 
 from pyspark.sql import types as T
 
+from .tokenizer import split_text
+
 # CH base type name (upper) → Spark type. Unsigned types widen one
 # size so the full unsigned range fits (SURVEY §1.2 hazards).
 _CH_TO_SPARK: dict[str, T.DataType] = {
@@ -42,24 +44,6 @@ _WRAPPER_RE = re.compile(r"^(Nullable|LowCardinality)\s*\((.*)\)$", re.IGNORECAS
 _PARAM_RE = re.compile(r"^([A-Za-z0-9]+)\s*\((.*)\)$", re.DOTALL)
 
 
-def _split_args(s: str) -> list[str]:
-    """Split 'a, b(c, d), e' on top-level commas."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out
-
-
 def ch_type_to_spark(ch: str) -> T.DataType:
     """Parse a ClickHouse type string into a Spark DataType."""
     s = ch.strip()
@@ -75,11 +59,11 @@ def ch_type_to_spark(ch: str) -> T.DataType:
         if name == "ARRAY":
             return T.ArrayType(ch_type_to_spark(args))
         if name == "MAP":
-            k, v = _split_args(args)
+            k, v = split_text(args)
             return T.MapType(ch_type_to_spark(k), ch_type_to_spark(v))
         if name == "TUPLE":
             fields = []
-            for i, a in enumerate(_split_args(args)):
+            for i, a in enumerate(split_text(args)):
                 parts = a.split(None, 1)
                 if len(parts) == 2 and _looks_like_type(parts[1]):
                     fields.append(T.StructField(parts[0], ch_type_to_spark(parts[1])))
@@ -89,7 +73,7 @@ def ch_type_to_spark(ch: str) -> T.DataType:
         if name == "FIXEDSTRING":
             return T.StringType()
         if name == "DECIMAL":
-            ps = _split_args(args)
+            ps = split_text(args)
             if len(ps) == 2:
                 return T.DecimalType(int(ps[0]), int(ps[1]))
             return T.DecimalType(38, int(ps[0]))
@@ -106,7 +90,7 @@ def ch_type_to_spark(ch: str) -> T.DataType:
             # CH Nested ≡ parallel arrays per subfield (SURVEY §1.2);
             # we model it as array<struct> for a single column.
             fields = []
-            for a in _split_args(args):
+            for a in split_text(args):
                 fname, ftype = a.split(None, 1)
                 fields.append(T.StructField(fname, ch_type_to_spark(ftype)))
             return T.ArrayType(T.StructType(fields))

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import importlib
 import os
 import struct as _struct
 import threading
@@ -38,6 +39,15 @@ from .dialect.ddl import (
     TruncateTable,
     parse_ddl,
 )
+from .dialect.tokenizer import (
+    arg_texts,
+    find_close,
+    render,
+    significant,
+    split_args,
+    split_text,
+    tokenize,
+)
 from .formats import FORMATS, QueryResult, serialize
 from .functions.ch_hashes import register_all as _register_hashes
 from .functions.codecs import register_all as _register_codecs
@@ -57,25 +67,118 @@ from .system_tables import materialize as _materialize_system
 # consumed by the server before the engine sees them.
 ACTED_SETTINGS = frozenset({"default_format", "max_result_rows", "format_schema"})
 
+
+def _operator(path: str):
+    """``module.fn`` under ``operators/`` as ``call(df, **kwargs)``,
+    imported on first call (the operator modules load models and
+    register UDFs)."""
+    mod, fn = path.rsplit(".", 1)
+
+    def call(df: DataFrame, **kwargs) -> DataFrame:
+        return getattr(importlib.import_module(f".operators.{mod}", __package__), fn)(df, **kwargs)
+
+    return call
+
+
+def _bm25(docs: DataFrame, query: str, **kwargs) -> DataFrame:
+    from .operators.retrieval import bm25_topk
+
+    q = local_df(docs.sparkSession, [(0, query)], "query_id long, qtext string")
+    return bm25_topk(docs, q, **kwargs).drop("query_id")
+
+
 # SQL-callable pipeline table functions (SURVEY §7 Phase G): name →
-# usage string. Expanded by Engine._expand_pipeline_fns into operator
+# (usage, literal parameters, operator). A parameter is (keyword,
+# kind, required); "cols" is a string literal naming comma-separated
+# columns. An omitted optional literal leaves the operator's own
+# default. Expanded by Engine._expand_pipeline_fns into operator
 # DataFrames registered as per-statement temp views.
+_GROUPS = ("group_cols", "cols", True)
+_VALUE = ("value_col", "str", True)
+_SCRUB = (("n", "int", False), ("min_docs", "int", False))
 _PIPELINE_FNS = {
-    "exactdedup": "exactDedup(table)",
-    "minhashpairs": "minhashPairs(table[, min_jaccard])",
-    "qualityscore": "qualityScore(table)",
-    "langid": "langId(table)",
-    "scrubdupspans": "scrubDupSpans(table[, n[, min_docs]])",
-    "rewritescrub": "rewriteScrub(table[, n[, min_docs]])",
-    "hllpresketch": "hllPresketch(table, 'group_col[,group_col]', 'value_col')",
-    "hllrollup": "hllRollup(sketch_table, 'group_col[,group_col]' | '')",
-    "histpresketch": "histPresketch(table, 'group_cols', 'value_col', lo, hi[, bins])",
-    "histrollup": "histRollup(sketch_table, 'group_col[,group_col]' | '')",
-    "cmspresketch": "cmsPresketch(table, 'group_cols', 'value_col'[, width[, depth]])",
-    "cmsrollup": "cmsRollup(sketch_table, 'group_col[,group_col]' | '')",
-    "hashedembedding": "hashedEmbedding(table[, dim])",
-    "bm25": "bm25(table, 'query text'[, k])",
+    "exactdedup": ("exactDedup(table)", (), _operator("dedup.exact_dedup")),
+    "minhashpairs": (
+        "minhashPairs(table[, min_jaccard])",
+        (("min_jaccard", "float", False),),
+        _operator("dedup.minhash_lsh_pairs"),
+    ),
+    "qualityscore": ("qualityScore(table)", (), _operator("text.quality_score")),
+    "langid": ("langId(table)", (), _operator("text.lang_id")),
+    "scrubdupspans": (
+        "scrubDupSpans(table[, n[, min_docs]])", _SCRUB, _operator("text.scrub_dup_spans"),
+    ),
+    # the rewritten CORPUS: original columns, text replaced by the
+    # scrubbed version; composes with every other fn: bm25(rewriteScrub(t))
+    "rewritescrub": (
+        "rewriteScrub(table[, n[, min_docs]])", _SCRUB, _operator("text.rewrite_scrubbed"),
+    ),
+    "hllpresketch": (
+        "hllPresketch(table, 'group_col[,group_col]', 'value_col')",
+        (_GROUPS, _VALUE),
+        _operator("sketches.hll_presketch"),
+    ),
+    "hllrollup": (
+        "hllRollup(sketch_table, 'group_col[,group_col]' | '')",
+        (_GROUPS,),
+        _operator("sketches.hll_rollup"),
+    ),
+    "histpresketch": (
+        "histPresketch(table, 'group_cols', 'value_col', lo, hi[, bins])",
+        (_GROUPS, _VALUE, ("lo", "float", True), ("hi", "float", True), ("bins", "int", False)),
+        _operator("sketches.hist_presketch"),
+    ),
+    "histrollup": (
+        "histRollup(sketch_table, 'group_col[,group_col]' | '')",
+        (_GROUPS,),
+        _operator("sketches.hist_rollup"),
+    ),
+    "cmspresketch": (
+        "cmsPresketch(table, 'group_cols', 'value_col'[, width[, depth]])",
+        (_GROUPS, _VALUE, ("width", "int", False), ("depth", "int", False)),
+        _operator("sketches.cms_presketch"),
+    ),
+    "cmsrollup": (
+        "cmsRollup(sketch_table, 'group_col[,group_col]' | '')",
+        (_GROUPS,),
+        _operator("sketches.cms_rollup"),
+    ),
+    "hashedembedding": (
+        "hashedEmbedding(table[, dim])",
+        (("dim", "int", False),),
+        _operator("embeddings.hashed_embedding"),
+    ),
+    "bm25": ("bm25(table, 'query text'[, k])", (("query", "str", True), ("k", "int", False)), _bm25),
 }
+# literal kind → (literal type, conversion)
+_LITERAL_KINDS = {
+    "str": (str, str),
+    "cols": (str, lambda v: [c.strip() for c in v.split(",") if c.strip()]),
+    "int": (float, int),
+    "float": (float, float),
+}
+
+
+def _pipeline_literal(toks: list) -> "str | float | None":
+    """A pipeline-fn argument's value: a string literal, or a number
+    with an optional sign; None when the argument is not a literal.
+    The dialect front-end suffixes numeric literals (0.4D, 3L) before
+    the expansion runs, so the suffix is folded back."""
+    sign = ""
+    if len(toks) > 1 and toks[0].kind == "op" and toks[0].text in ("-", "+"):
+        sign, toks = toks[0].text, toks[1:]
+    if len(toks) == 2 and toks[0].kind == "number" and toks[1].upper in ("D", "L"):
+        toks = toks[:1]
+    if len(toks) != 1:
+        return None
+    t = toks[0]
+    if t.kind == "number":
+        return float(sign + t.text)
+    if t.kind == "string" and not sign:
+        return t.text[1:-1].replace("\\'", "'").replace("''", "'")
+    return None
+
+
 import re as _pipeline_re
 
 _PIPELINE_FN_RE = _pipeline_re.compile(
@@ -155,7 +258,6 @@ def bind_query_params(sql: str, params: dict[str, str]) -> str:
     parameters (CH parses placeholders as AST nodes).  Values bind as
     ``CAST('v' AS type)`` — never raw splicing, so a value can't
     inject SQL — with ``from_json`` for composite types."""
-    from .dialect.tokenizer import tokenize
     from .dialect.types import ch_type_to_spark
 
     toks = tokenize(sql)
@@ -759,8 +861,6 @@ class Engine:
         (EXTRACT/substring/trim ... FROM x) does NOT open table
         context — subquery parens re-detect their own FROM.
         """
-        from .dialect.tokenizer import tokenize
-
         toks = tokenize(sql)
         sig = [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
         cte = self._cte_names(toks, sig)
@@ -904,8 +1004,6 @@ class Engine:
         untyped ``_c0…`` strings (reference CI load, test.yml:50).
         Returns None when the statement is not such an INSERT or the
         target does not (yet) exist — plain SELECTs keep inference."""
-        from .dialect.tokenizer import tokenize
-
         toks = [t for t in tokenize(sql) if t.kind not in ("ws", "comment")]
         if len(toks) < 4 or toks[0].text.upper() != "INSERT" or toks[1].text.upper() != "INTO":
             return None
@@ -924,17 +1022,9 @@ class Engine:
             )
         col_list: list[str] = []
         if i < len(toks) and toks[i].text == "(":
-            depth = 0
-            while i < len(toks):
-                if toks[i].text == "(":
-                    depth += 1
-                elif toks[i].text == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                elif depth == 1 and toks[i].kind in ("ident", "bquote"):
-                    col_list.append(toks[i].text.strip("`"))
-                i += 1
+            close = find_close(toks, i)
+            if close != -1:
+                col_list = [c.strip("`") for c in arg_texts(toks[i + 1 : close])]
         try:
             schema = self.spark.table(qual).schema
         except Exception:
@@ -961,8 +1051,6 @@ class Engine:
         key — at cluster scale that is a single hash-partitioned
         shuffle on the primary key, the same cost ClickHouse pays for
         a FINAL read's merge pass."""
-        from .dialect.tokenizer import tokenize
-
         toks = tokenize(sql)
         sig = [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
         # Clause-context scan: FINAL is a table modifier ONLY in
@@ -1055,7 +1143,7 @@ class Engine:
         if not keys_txt:
             return None
         raw = keys_txt[1:-1] if keys_txt.startswith("(") and keys_txt.endswith(")") else keys_txt
-        parts = [p.strip() for p in _split_top_level(raw) if p.strip()]
+        parts = [p for p in split_text(raw) if p]
         if not parts:
             return None
 
@@ -1070,7 +1158,7 @@ class Engine:
 
         keys = ", ".join(key_sql(p) for p in parts)
         args_raw = (props.get("engine_args") or "").strip()
-        ver = _split_top_level(args_raw)[0].strip() if args_raw else ""
+        ver = split_text(args_raw)[0] if args_raw else ""
         order = f"`{ver.strip('`')}` DESC" if ver else keys
         return keys, order
 
@@ -1097,8 +1185,6 @@ class Engine:
         The source table must carry the operators' default columns
         (doc_id, text) — the resolution error names the table if not.
         """
-        from .dialect.tokenizer import tokenize
-
         toks = tokenize(sql)
         out: list[str] = []
         i = 0
@@ -1114,25 +1200,16 @@ class Engine:
                 j = i + 1
                 while j < len(toks) and toks[j].kind in ("ws", "comment"):
                     j += 1
-                if j < len(toks) and toks[j].text == "(":
-                    depth, k = 0, j
-                    while k < len(toks):
-                        if toks[k].text == "(":
-                            depth += 1
-                        elif toks[k].text == ")":
-                            depth -= 1
-                            if depth == 0:
-                                break
-                        k += 1
-                    if k < len(toks):
-                        view = self._pipeline_fn_view(
-                            sess, t.text.lower(), toks[j + 1 : k],
-                            created_views,
+                k = find_close(toks, j) if j < len(toks) and toks[j].text == "(" else -1
+                if k != -1:
+                    out.append(
+                        self._pipeline_fn_view(
+                            sess, t.text.lower(), toks[j + 1 : k], created_views
                         )
-                        out.append(view)
-                        i = k + 1
-                        changed = True
-                        continue
+                    )
+                    i = k + 1
+                    changed = True
+                    continue
             out.append(t.text)
             if t.kind not in ("ws", "comment"):
                 prev_sig = t.text.lower()
@@ -1143,64 +1220,30 @@ class Engine:
         self, sess: UserSession, name: str, arg_toks,
         created_views: Optional[list] = None,
     ) -> str:
-        # split on top-level commas
-        args: list = []
-        cur: list = []
-        depth = 0
-        for tk in arg_toks:
-            if tk.text == "(":
-                depth += 1
-            elif tk.text == ")":
-                depth -= 1
-            if tk.kind == "op" and tk.text == "," and depth == 0:
-                args.append(cur)
-                cur = []
-            else:
-                cur.append(tk)
-        if cur:
-            args.append(cur)
-        sig = _PIPELINE_FNS[name]
-        if not args or not [t for t in args[0] if t.kind not in ("ws", "comment")]:
-            raise EngineError(f"{name}: usage {sig}", 42)
-        ref = "".join(
-            t.text for t in args[0] if t.kind not in ("ws", "comment")
-        )
-        lits: list = []
-        for a in args[1:]:
-            vals = [t for t in a if t.kind not in ("ws", "comment")]
-            # the dialect front-end suffixes numeric literals (0.4D,
-            # 3L) before this expansion runs — fold the suffix back
-            if (
-                len(vals) == 2
-                and vals[0].kind == "number"
-                and vals[1].kind == "ident"
-                and vals[1].text.upper() in ("D", "L")
-            ):
-                vals = vals[:1]
-            if len(vals) != 1 or vals[0].kind not in ("string", "number"):
-                raise EngineError(
-                    f"{name}: literal arguments only — usage {sig}", 42
-                )
-            tk = vals[0]
-            if tk.kind == "string":
-                lits.append(tk.text[1:-1].replace("\\'", "'").replace("''", "'"))
-            else:
-                try:
-                    lits.append(
-                        float(tk.text)
-                        if ("." in tk.text or "e" in tk.text.lower())
-                        else int(tk.text)
-                    )
-                except ValueError as e:
-                    raise EngineError(
-                        f"{name}: bad numeric literal '{tk.text}' — "
-                        f"usage {sig}",
-                        42,
-                    ) from e
+        usage, params, operator = _PIPELINE_FNS[name]
+        args = [
+            [t for t in a if t.kind not in ("ws", "comment")]
+            for a in split_args(arg_toks)
+        ]
+        lits = [_pipeline_literal(a) for a in args[1:]]
+        if (
+            not args
+            or not args[0]
+            or len(lits) > len(params)
+            or any(required for _, _, required in params[len(lits):])
+        ):
+            raise EngineError(f"{name}: usage {usage}", 42)
+        kwargs = {}
+        for (key, kind, _), v in zip(params, lits):
+            typ, conv = _LITERAL_KINDS[kind]
+            if not isinstance(v, typ):
+                raise EngineError(f"{name}: {key} must be a {kind} literal — usage {usage}", 42)
+            kwargs[key] = conv(v)
         # nested composition: the table argument may itself be a
         # pipeline fn — bm25(exactDedup(t), 'q', 5) — resolved
         # depth-first into its own (per-statement, dropped-later) view
-        head = [t for t in args[0] if t.kind not in ("ws", "comment")]
+        head = args[0]
+        ref = "".join(t.text for t in head)
         if (
             len(head) >= 3
             and head[0].kind == "ident"
@@ -1237,129 +1280,7 @@ class Engine:
                     f"{name}: unknown table '{ref}': {e}", 60
                 ) from e
         try:
-            if name == "bm25":
-                if not lits or not isinstance(lits[0], str):
-                    raise EngineError(f"bm25: usage {sig}", 42)
-                from .localdf import local_df
-                from .operators.retrieval import bm25_topk
-
-                q = local_df(
-                    self.spark,
-                    [(0, lits[0])],
-                    "query_id long, qtext string",
-                )
-                res = bm25_topk(
-                    df, q, k=int(lits[1]) if len(lits) > 1 else 10
-                ).drop("query_id")
-            elif name == "exactdedup":
-                from .operators.dedup import exact_dedup
-
-                res = exact_dedup(df)
-            elif name == "minhashpairs":
-                from .operators.dedup import minhash_lsh_pairs
-
-                res = minhash_lsh_pairs(
-                    df,
-                    min_jaccard=float(lits[0]) if lits else 0.5,
-                )
-            elif name == "qualityscore":
-                from .operators.text import quality_score
-
-                res = quality_score(df)
-            elif name == "langid":
-                from .operators.text import lang_id
-
-                res = lang_id(df)
-            elif name == "scrubdupspans":
-                from .operators.text import scrub_dup_spans
-
-                res = scrub_dup_spans(
-                    df,
-                    n=int(lits[0]) if lits else 6,
-                    min_docs=int(lits[1]) if len(lits) > 1 else 2,
-                )
-            elif name == "rewritescrub":
-                # the rewritten CORPUS: original columns, text
-                # replaced by the scrubbed version; only docs scrubbed
-                # TO empty drop (untouched empties pass through) —
-                # composes with every other fn: bm25(rewriteScrub(t))
-                from .operators.text import rewrite_scrubbed
-
-                res = rewrite_scrubbed(
-                    df,
-                    n=int(lits[0]) if lits else 6,
-                    min_docs=int(lits[1]) if len(lits) > 1 else 2,
-                )
-            elif name == "hllpresketch":
-                if len(lits) < 2 or not all(
-                    isinstance(x, str) for x in lits[:2]
-                ):
-                    raise EngineError(f"hllpresketch: usage {sig}", 42)
-                from .operators.sketches import hll_presketch
-
-                groups = [c.strip() for c in lits[0].split(",") if c.strip()]
-                res = hll_presketch(df, groups, lits[1])
-            elif name == "histpresketch":
-                if (
-                    len(lits) < 4
-                    or not all(isinstance(x, str) for x in lits[:2])
-                    or not all(
-                        isinstance(x, (int, float)) for x in lits[2:4]
-                    )
-                ):
-                    raise EngineError(f"histpresketch: usage {sig}", 42)
-                from .operators.sketches import hist_presketch
-
-                groups = [c.strip() for c in lits[0].split(",") if c.strip()]
-                res = hist_presketch(
-                    df,
-                    groups,
-                    lits[1],
-                    float(lits[2]),
-                    float(lits[3]),
-                    bins=int(lits[4]) if len(lits) > 4 else 64,
-                )
-            elif name == "histrollup" or name == "cmsrollup":
-                if not lits or not isinstance(lits[0], str):
-                    raise EngineError(f"{name}: usage {sig}", 42)
-                from .operators.sketches import cms_rollup, hist_rollup
-
-                groups = [c.strip() for c in lits[0].split(",") if c.strip()]
-                res = (
-                    hist_rollup(df, groups)
-                    if name == "histrollup"
-                    else cms_rollup(df, groups)
-                )
-            elif name == "hashedembedding":
-                from .operators.embeddings import hashed_embedding
-
-                res = hashed_embedding(
-                    df, dim=int(lits[0]) if lits else 256
-                )
-            elif name == "cmspresketch":
-                if len(lits) < 2 or not all(
-                    isinstance(x, str) for x in lits[:2]
-                ):
-                    raise EngineError(f"cmspresketch: usage {sig}", 42)
-                from .operators.sketches import cms_presketch
-
-                groups = [c.strip() for c in lits[0].split(",") if c.strip()]
-                res = cms_presketch(
-                    df,
-                    groups,
-                    lits[1],
-                    width=int(lits[2]) if len(lits) > 2 else 1024,
-                    depth=int(lits[3]) if len(lits) > 3 else 4,
-                )
-            else:  # hllrollup
-                if not lits or not isinstance(lits[0], str):
-                    raise EngineError(f"hllrollup: usage {sig}", 42)
-                from .operators.sketches import hll_rollup
-
-                groups = [c.strip() for c in lits[0].split(",") if c.strip()]
-                res = hll_rollup(df, groups)
-        except EngineError:
-            raise
+            res = operator(df, **kwargs)
         except Exception as e:
             raise EngineError(f"{name} over '{ref}' failed: {e}", 36) from e
         import uuid as _uuid
@@ -1590,16 +1511,11 @@ class Engine:
                     # AQE contributes only partition coalescing to such
                     # a plan — its skew handling is join-only — and
                     # that coalesce costs a materialize+re-plan barrier
-                    # per exchange on every run.  Global aggs shuffle
-                    # one partial row per map task (cb01 0.31->0.15s at
-                    # 10M); grouped aggs shuffle the partial-agg rows
-                    # (cb32 1.18->1.00s, cb35 0.82->0.70s); the
-                    # COUNT(DISTINCT) family pays 2-3 barriers and wins
-                    # the most (cb04 0.33->0.20s, cb22 1.36->0.40s,
-                    # min-of-5 under ParallelGC — see
-                    # _is_single_shuffle_agg).  Shuffle width stays at
-                    # the session default, the same width AQE starts
-                    # from.
+                    # per exchange on every run; short aggregates pay
+                    # it most (4-core A/B, see _is_single_shuffle_agg:
+                    # cb00 0.067 s here vs 0.151 s under AQE, cb07
+                    # 0.265 vs 0.373 s).  Shuffle width stays at the
+                    # session default, the same width AQE starts from.
                     return df, self._plan_static(df)
                 return df, None
             # Static planning loses AQE's partition coalescing, so pick
@@ -1743,13 +1659,19 @@ class Engine:
         COUNT(DISTINCT) plans (one analyzed Aggregate whose expression
         carries the distinct flag; RewriteDistinctAggregates splits it
         at optimization) qualify too: they compile to 2-3 chained
-        exchanges, and submitting them as ONE DAGScheduler job beats
-        AQE's per-stage materialize barriers — 10M-row min-of-5 A/B
-        under ParallelGC: cb04 0.33->0.20s, cb22 1.36->0.40s, cb09
-        0.40->0.32s, worst case cb08 +0.02s. (Under the earlier G1
-        profile the same family measured the other way; the barrier
-        cost only dominates once GC pauses stop inflating every
-        stage.)
+        exchanges, submitted as ONE DAGScheduler job instead of AQE's
+        per-stage materialize barriers.
+
+        Measured in-process on 4 cores over the 10M-row
+        tools/gen_hits.py view (arms interleaved per query, 6
+        plan-cache-hit samples each): planning these adaptively, with
+        the HOT-tier shuffle reset deleted too, took the 33 ClickBench
+        queries that reach this path from 46.2 to 48.2 s (summed
+        medians; slower on 25 of 33). A second, three-arm run over the
+        27 queries that took the path there read 30.8 s as is, 31.5 s
+        with only the reset deleted and 32.4 s with both deleted. The
+        gain is in short aggregates; cb22 reads the same either way at
+        this width (1.42 vs 1.43 s).
         """
         try:
             node = df._jdf.queryExecution().analyzed()  # noqa: SLF001
@@ -1886,8 +1808,6 @@ class Engine:
 
     def _insert_target(self, sess: UserSession, prepared: str) -> Optional[str]:
         """Fully-qualified target of an INSERT statement, or None."""
-        from .dialect.tokenizer import tokenize
-
         toks = [t for t in tokenize(prepared) if t.kind not in ("ws", "comment")]
         if len(toks) < 3 or toks[0].text.upper() != "INSERT" or toks[1].text.upper() != "INTO":
             return None
@@ -1904,24 +1824,20 @@ class Engine:
         MergeTree sort, then fan it out through each MV's SELECT."""
         from pyspark.sql import functions as F
 
-        from .dialect.tokenizer import tokenize
-
         toks = [t for t in tokenize(prepared) if t.kind not in ("ws", "comment")]
         col_list: list[str] = []
         body_at = None
         i = 2
-        depth = 0
         while i < len(toks):
-            up = toks[i].text.upper()
-            if depth == 0 and up in ("SELECT", "VALUES", "WITH"):
+            if toks[i].text.upper() in ("SELECT", "VALUES", "WITH"):
                 body_at = i
                 break
-            if toks[i].text == "(":
-                depth += 1
-            elif toks[i].text == ")":
-                depth -= 1
-            elif depth == 1 and toks[i].kind in ("ident", "bquote"):
-                col_list.append(toks[i].text.strip("`"))
+            if toks[i].text == "(":  # the column list
+                close = find_close(toks, i)
+                if close == -1:
+                    break
+                col_list = [c.strip("`") for c in arg_texts(toks[i + 1 : close])]
+                i = close
             i += 1
         if body_at is None:
             self.spark.sql(prepared)  # not a shape we can split; run as-is
@@ -1942,14 +1858,7 @@ class Engine:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         delta = delta.select(*cols).cache()
         try:
-            out = delta
-            order_by = self._table_order_by(target_qual)
-            if order_by:
-                exprs = [
-                    self._translate_expr(e.strip())
-                    for e in _split_top_level(order_by.strip().strip("()"))
-                ]
-                out = out.sortWithinPartitions(*[F.expr(e) for e in exprs])
+            out = self._sort_for_write(delta, self._table_order_by(target_qual))
             out.write.insertInto(target_qual)
             self._propagate_mvs(sess, target_qual, delta)
         finally:
@@ -2047,16 +1956,7 @@ class Engine:
                     else:
                         out_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
                 df = src.select(*out_cols)
-                order_by = self._table_order_by(tbl)
-                out = df
-                if order_by:
-                    from .dialect.translate import translate_select
-
-                    exprs = [
-                        translate_select(f"SELECT {e.strip()}").spark_sql[len("SELECT "):]
-                        for e in _split_top_level(order_by.strip().strip("()"))
-                    ]
-                    out = df.sortWithinPartitions(*[F.expr(e) for e in exprs])
+                out = self._sort_for_write(df, self._table_order_by(tbl))
                 out.write.insertInto(tbl)
                 self._propagate_mvs(sess, tbl, df)
             except EngineError:
@@ -2090,8 +1990,6 @@ class Engine:
         (SURVEY §4.2). Per-partition sort — no global shuffle added.
 
         Returns True if handled; False → caller runs plain SQL."""
-        from .dialect.tokenizer import tokenize
-
         toks = [t for t in tokenize(sql) if t.kind not in ("ws", "comment")]
         if len(toks) < 4 or toks[0].text.upper() != "INSERT" or toks[1].text.upper() != "INTO":
             return False
@@ -2112,23 +2010,30 @@ class Engine:
         select_sql = "".join(
             t.text + " " for t in toks[i:]
         )
-        from pyspark.sql import functions as F
-
         tgt_cols = self.spark.table(tbl).columns
         df = self.spark.sql(select_sql)
         if len(df.columns) != len(tgt_cols):
             return False  # let Spark produce the proper error
-        from .dialect.translate import translate_select
-
-        exprs = [e.strip() for e in _split_top_level(order_by.strip().strip("()"))]
-        # order keys may use CH spellings (intHash32 is a registered
-        # UDF; toYYYYMM etc. go through the dialect rewrite)
-        exprs = [
-            translate_select(f"SELECT {e}").spark_sql[len("SELECT "):] for e in exprs
-        ]
-        df = df.toDF(*tgt_cols).sortWithinPartitions(*[F.expr(e) for e in exprs])
-        df.write.insertInto(tbl)
+        self._sort_for_write(df.toDF(*tgt_cols), order_by).write.insertInto(tbl)
         return True
+
+    def _sort_for_write(self, df: DataFrame, order_by: Optional[str]) -> DataFrame:
+        """``df`` sorted within partitions on a table's declared ORDER BY
+        keys. ``a, f(b)``, ``(a, f(b))`` and ``tuple(a, f(b))`` name
+        the same keys; ``tuple()`` names none. Keys may use CH
+        spellings (toYYYYMM, intHash32), so each is translated."""
+        from pyspark.sql import functions as F
+
+        toks = tokenize(order_by or "")
+        sig = significant(toks)
+        if sig and toks[sig[0]].upper == "TUPLE":
+            sig = sig[1:]
+        if sig and toks[sig[0]].text == "(" and find_close(toks, sig[0]) == sig[-1]:
+            toks = toks[sig[0] + 1 : sig[-1]]
+        keys = arg_texts(toks)
+        if not keys:
+            return df
+        return df.sortWithinPartitions(*[F.expr(self._translate_expr(k)) for k in keys])
 
     _DICT_CREATE_RE = None  # compiled lazily below
 
@@ -2162,20 +2067,21 @@ class Engine:
         if dbm:
             source = f"{dbm.group('d')}.{source}"
         attrs: dict = {}
-        for a in _split_top_level(m.group("attrs")):
-            parts = a.strip().split()
-            if len(parts) < 2:
+        for a in split_args(tokenize(m.group("attrs"))):
+            # name type [DEFAULT v] [EXPRESSION e] [HIERARCHICAL] [INJECTIVE]
+            sig = significant(a)
+            if len(sig) < 2:
                 continue
-            aname = parts[0].strip("`\"")
-            atype = parts[1]
+            marks = [
+                i for i in sig[1:]
+                if a[i].upper in ("DEFAULT", "EXPRESSION", "HIERARCHICAL", "INJECTIVE")
+            ] + [len(a)]
             default = None
-            low = [p.upper() for p in parts]
-            if "DEFAULT" in low:
-                default = " ".join(parts[low.index("DEFAULT") + 1 :])
-                for stop in ("EXPRESSION", "HIERARCHICAL", "INJECTIVE"):
-                    if stop in default.upper():
-                        default = default[: default.upper().index(stop)].strip()
-            attrs[aname] = (atype, default)
+            for lo, hi in zip(marks, marks[1:]):
+                if a[lo].upper == "DEFAULT":
+                    default = render(a[lo + 1 : hi]).strip()
+            atype = render(a[sig[0] + 1 : marks[0]]).strip()
+            attrs[a[sig[0]].text.strip("`\"")] = (atype, default)
         ine = _re.search(r"(?i)IF\s+NOT\s+EXISTS", sql)
         if name in sess.dictionaries and ine:
             return
@@ -2207,10 +2113,7 @@ class Engine:
         """dictGet family → correlated scalar subquery over the source
         table (Catalyst: RewriteCorrelatedScalarSubquery → left join,
         broadcast for dictionary-sized sources)."""
-        from .dialect.tokenizer import tokenize as _tok
-        from .dialect.types import ch_type_to_spark
-
-        toks = _tok(sql)
+        toks = tokenize(sql)
         out: list[str] = []
         i = 0
         n = len(toks)
@@ -2218,34 +2121,12 @@ class Engine:
             t = toks[i]
             low = t.text.lower() if t.kind == "ident" else ""
             if low.startswith(("dictget", "dicthas")):
-                # find "(" then split balanced args
                 j = i + 1
                 while j < n and toks[j].kind in ("ws", "comment"):
                     j += 1
-                if j < n and toks[j].text == "(":
-                    depth = 0
-                    args: list[str] = []
-                    cur: list[str] = []
-                    k = j
-                    while k < n:
-                        tx = toks[k].text
-                        if tx == "(":
-                            depth += 1
-                            if depth > 1:
-                                cur.append(tx)
-                        elif tx == ")":
-                            depth -= 1
-                            if depth == 0:
-                                args.append("".join(cur).strip())
-                                break
-                            cur.append(tx)
-                        elif tx == "," and depth == 1:
-                            args.append("".join(cur).strip())
-                            cur = []
-                        else:
-                            cur.append(tx)
-                        k += 1
-                    expanded = self._dict_call(sess, low, [a for a in args if a])
+                k = find_close(toks, j) if j < n and toks[j].text == "(" else -1
+                if k != -1:
+                    expanded = self._dict_call(sess, low, arg_texts(toks[j + 1 : k]))
                     if expanded is not None:
                         out.append(expanded)
                         i = k + 1
@@ -2520,19 +2401,11 @@ class Engine:
                     _clean_spark_error(e), _ch_error_code(str(e))
                 ) from e
         if src_df is not None:
-            from pyspark.sql import functions as F
-
             # MergeTree sort-on-write analog for the CTAS payload
-            # (tuple() = the explicit no-order spelling)
-            writer = src_df
-            ob = (ct.order_by or "").replace(" ", "")
-            if ob and ob.lower() != "tuple()":
-                try:
-                    writer = writer.sortWithinPartitions(
-                        F.expr(self._translate_expr(ct.order_by))
-                    )
-                except Exception:  # noqa: BLE001 — unsortable expr: keep data
-                    pass
+            try:
+                writer = self._sort_for_write(src_df, ct.order_by)
+            except Exception:  # noqa: BLE001 — unsortable expr: keep data
+                writer = src_df
             try:
                 writer.write.insertInto(tbl)
             except Exception as e:
@@ -2679,8 +2552,6 @@ class Engine:
     def _substitute_ident(expr: str, name: str, repl: str) -> str:
         """Replace bare identifier ``name`` in a CH expression with
         ``repl``, skipping function-call names and quoted strings."""
-        from .dialect.tokenizer import tokenize
-
         toks = [t for t in tokenize(expr)]
         sig = [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
         for si, i in enumerate(sig):
@@ -2703,7 +2574,6 @@ class Engine:
         sees only its own catalog, main.py:140-173)."""
         from pyspark.sql import functions as F
 
-        from .dialect.tokenizer import tokenize
         from .system_tables import system_databases, system_tables
 
         toks = [t for t in tokenize(sql) if t.kind not in ("ws", "comment")]
@@ -3109,8 +2979,6 @@ class Engine:
         moospark.* TBLPROPERTIES and the MergeTree sort-on-write; at
         cluster scale this is one distributed write + two catalog ops,
         no driver-side data movement."""
-        from pyspark.sql import functions as F
-
         spark_db = sess.spark_db(db)
         tbl = f"`{spark_db}`.`{name}`"
         stage = f"`{spark_db}`.`{name}__moospark_stage`"
@@ -3121,13 +2989,7 @@ class Engine:
                     props[r["key"]] = r["value"]
         except Exception:
             pass
-        order_by = props.get("moospark.order_by")
-        if order_by:
-            exprs = [
-                self._translate_expr(e.strip())
-                for e in _split_top_level(order_by.strip().strip("()"))
-            ]
-            df = df.sortWithinPartitions(*[F.expr(e) for e in exprs])
+        df = self._sort_for_write(df, props.get("moospark.order_by"))
         self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
         df.createOrReplaceTempView("__moospark_mutation_src")
         try:
@@ -3303,8 +3165,6 @@ class Engine:
         (already db-remapped) SELECT body with the session's current
         database. Returns (body, qualified_ref or None). The MV
         trigger substitutes this exact text with the insert delta."""
-        from .dialect.tokenizer import tokenize
-
         toks = tokenize(body)
         sig = [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
         out = [t.text for t in toks]
@@ -3448,14 +3308,7 @@ class Engine:
                     else:
                         cols.append(F.lit(None).cast(f.dataType).alias(f.name))
                 aligned = out.select(*cols)
-                writer = aligned
-                order_by = self._table_order_by(storage)
-                if order_by:
-                    exprs = [
-                        self._translate_expr(e.strip())
-                        for e in _split_top_level(order_by.strip().strip("()"))
-                    ]
-                    writer = aligned.sortWithinPartitions(*[F.expr(e) for e in exprs])
+                writer = self._sort_for_write(aligned, self._table_order_by(storage))
                 writer.write.insertInto(storage)
                 self._propagate_mvs(sess, storage, aligned, _depth + 1)
         finally:
@@ -3470,8 +3323,6 @@ class Engine:
 
 def _parse_set(stmt: str) -> dict:
     """``SET k = v[, k2 = v2]`` → {k: v} (values unquoted)."""
-    from .dialect.tokenizer import tokenize
-
     toks = [t for t in tokenize(stmt) if t.kind not in ("ws", "comment")]
     out: dict = {}
     i = 1  # skip SET
@@ -3540,24 +3391,6 @@ def _tsv_field(v: str, raw: bool) -> Optional[str]:
         .replace("\\'", "'")
         .replace("\\\\", "\\")
     )
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas not nested inside parentheses."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return [p for p in parts if p.strip()]
 
 
 def _esc(s: str) -> str:

@@ -30,11 +30,13 @@ garbage).
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import re as _re
 import struct
 from decimal import Decimal as _Decimal
 from typing import Optional
 
+from ..dialect.tokenizer import split_text
 from .render import plain_text
 
 _EPOCH_DATE = _dt.date(1970, 1, 1)
@@ -85,24 +87,6 @@ def _dt64_precision(ch_type: str) -> int:
 # ---------------------------------------------------------------- type names
 
 
-def split_top_level(s: str) -> list[str]:
-    """Split a CH composite type argument list on top-level commas."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def _strip_nullable(t: str) -> tuple[str, bool]:
     if t.startswith("Nullable(") and t.endswith(")"):
         return t[len("Nullable(") : -1], True
@@ -111,6 +95,13 @@ def _strip_nullable(t: str) -> tuple[str, bool]:
 
 def _inner(t: str, wrapper: str) -> str:
     return t[len(wrapper) + 1 : -1].strip()
+
+
+@functools.lru_cache(maxsize=256)
+def _params(t: str, wrapper: str) -> tuple[str, ...]:
+    """Top-level parameters of the ``wrapper(...)`` type ``t``. Cached
+    because RowBinary encodes value by value and asks once per row."""
+    return tuple(split_text(_inner(t, wrapper)))
 
 
 def _decimal_width(precision: int) -> int:
@@ -123,7 +114,7 @@ def _decimal_width(precision: int) -> int:
 
 def _parse_decimal(t: str) -> Optional[tuple[int, int]]:
     if t.startswith("Decimal(") and t.endswith(")"):
-        args = split_top_level(_inner(t, "Decimal"))
+        args = _params(t, "Decimal")
         if len(args) == 2:
             return int(args[0]), int(args[1])
     return None
@@ -132,7 +123,7 @@ def _parse_decimal(t: str) -> Optional[tuple[int, int]]:
 def _tuple_elems(t: str) -> list[tuple[Optional[str], str]]:
     """Tuple arg list → [(name|None, type)]. Named form: "a Int64"."""
     elems = []
-    for part in split_top_level(_inner(t, "Tuple")):
+    for part in _params(t, "Tuple"):
         bits = part.split(None, 1)
         if len(bits) == 2 and "(" not in bits[0] and not bits[0][0].isdigit():
             elems.append((bits[0].strip("`"), bits[1]))
@@ -150,7 +141,7 @@ def wire_type(t: str) -> str:
     elif inner.startswith("Array(") and inner.endswith(")"):
         wire = f"Array({wire_type(_inner(inner, 'Array'))})"
     elif inner.startswith("Map(") and inner.endswith(")"):
-        k, v = split_top_level(_inner(inner, "Map"))
+        k, v = _params(inner, "Map")
         wire = f"Map({wire_type(k)}, {wire_type(v)})"
     elif inner.startswith("Tuple(") and inner.endswith(")"):
         parts = []
@@ -236,7 +227,7 @@ def encode_column(ch_type: str, values: list) -> bytes:
                 flat.extend(v)
         out += encode_column(elem_t, flat)
     elif inner.startswith("Map(") and inner.endswith(")"):
-        k_t, v_t = split_top_level(_inner(inner, "Map"))
+        k_t, v_t = _params(inner, "Map")
         keys: list = []
         vals: list = []
         offset = 0
@@ -286,7 +277,7 @@ def encode_row_value(ch_type: str, v) -> bytes:
         for e in items:
             out += encode_row_value(elem_t, e)
     elif inner.startswith("Map(") and inner.endswith(")"):
-        k_t, v_t = split_top_level(_inner(inner, "Map"))
+        k_t, v_t = _params(inner, "Map")
         items = list(v.items()) if v is not None else []
         out += write_varint(len(items))
         for k, x in items:
@@ -413,7 +404,7 @@ def decode_column(ch_type: str, n_rows: int, r) -> list:
             vals.append(flat[prev:off])
             prev = off
     elif inner.startswith("Map(") and inner.endswith(")"):
-        k_t, v_t = split_top_level(_inner(inner, "Map"))
+        k_t, v_t = _params(inner, "Map")
         offsets = [struct.unpack("<Q", r._need(8))[0] for _ in range(n_rows)]
         total = offsets[-1] if offsets else 0
         keys = decode_column(k_t, total, r)

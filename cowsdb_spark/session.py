@@ -13,17 +13,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-def _cpus_as_int(default: int = 32) -> int:
-    """SPARK_GRAFT_CPUS may be ``*`` (all cores — the container image
-    default) or a number; shuffle width needs the numeric value."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", str(default))
-    try:
-        return int(raw)
-    except ValueError:
-        return os.cpu_count() or default
 
-
-DEFAULT_SHUFFLE_PARTITIONS = _cpus_as_int()
+def host_cpus() -> int:
+    """Cores the engine runs on: ``SPARK_GRAFT_CPUS`` when it is a
+    number; unset or ``*`` (the container image default) means every
+    core this process may run on."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "*").strip()
+    return len(os.sched_getaffinity(0)) if raw == "*" else int(raw)
 
 
 def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -39,8 +35,8 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
       operators) is Arrow-batched, never row-at-a-time pickling.
     - ANSI off (Spark default): ClickHouse-style permissive casts.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    cpus = host_cpus()
+    sp = shuffle_partitions or cpus
     # Per-process warehouse under /tmp (reference keeps per-credential
     # catalogs under /tmp/cowsdb, main.py:29); keeps the repo clean and
     # session state process-scoped like the reference's.
@@ -68,11 +64,11 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
         # Throughput collector over G1: the analytics hot path churns
         # short-lived UnsafeRow/string garbage across 32 task threads,
         # and G1's mixed-collection pauses land mid-query — measured on
-        # the variance-prone 10M subset (tools/probe_gc.py, 7 reps,
-        # fresh JVM per config): G1 median-total 6.51s with cb23
-        # swinging 0.42-3.10s vs ParallelGC 4.93s with cb23 at
-        # 0.34-0.65s; GC time 4.0s -> 2.4s. ZGC and G1+pause-target
-        # landed between. Cluster analog: executor GC choice is a
+        # the variance-prone 10M subset (7 reps, fresh JVM per
+        # config): G1 median-total 6.51s with cb23 swinging
+        # 0.42-3.10s vs ParallelGC 4.93s with cb23 at 0.34-0.65s;
+        # GC time 4.0s -> 2.4s. ZGC and G1+pause-target landed
+        # between. Cluster analog: executor GC choice is a
         # per-deployment JVM flag, same lever.
         # 512m code cache (JDK default 240m): every distinct query
         # JIT-compiles whole-stage-codegen classes, and a long serving
@@ -115,10 +111,10 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
         # stage too (default is partial-only), with the vectorized
         # row-batch variant: the high-cardinality GROUP BY family is
         # final-agg-bound once the partial pass stops reducing.
-        # Measured (tools/probe_ab_10m.py, heavy-8 ClickBench subset
-        # at 10M rows, fresh-JVM interleaved cells, median of 3
-        # rounds): base 6.21 s -> 5.30 s, better in every round;
-        # scan-split 16 MB and shuffle-width 64 variants were noise.
+        # Measured (heavy-8 ClickBench subset at 10M rows, fresh-JVM
+        # interleaved cells, median of 3 rounds): base 6.21 s ->
+        # 5.30 s, better in every round; scan-split 16 MB and
+        # shuffle-width 64 variants were noise.
         .config("spark.sql.codegen.aggregate.map.twolevel.partialOnly", "false")
         .config("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
         # Long-lived-session hygiene (r6): shuffle files and broadcast
@@ -154,10 +150,10 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
     # Shuffle/spill scratch on RAM-backed tmpfs when available: local
     # mode writes every exchange to spark.local.dir, and /tmp here is
     # spinning-VM block storage. Interleaved A/B at 10M rows
-    # (tools/probe_ab_10m.py, min-of-3 medians over 3 rounds): heavy
-    # agg subset 8.12s (/tmp) -> 7.07s (/dev/shm), uniform across the
-    # shuffle-bound queries; compression stays ON (lz4 off was a wash
-    # at best, 2x worse tail at worst). Cluster analog: point
+    # (min-of-3 medians over 3 rounds): heavy agg subset 8.12s
+    # (/tmp) -> 7.07s (/dev/shm), uniform across the shuffle-bound
+    # queries; compression stays ON (lz4 off was a wash at best, 2x
+    # worse tail at worst). Cluster analog: point
     # spark.local.dir at NVMe, which every managed Spark already does.
     shm = "/dev/shm/moospark-local"
     try:
@@ -169,7 +165,7 @@ def get_spark(app_name: str = "moospark", shuffle_partitions: int | None = None)
         builder = builder.config("spark.local.dir", shm)
     except OSError:
         pass  # no tmpfs (or read-only) — Spark's default scratch dir
-    # Ad-hoc conf overrides for A/B perf probing (tools/probe_*.py):
+    # Ad-hoc conf overrides for one-off A/B runs:
     # MOOSPARK_EXTRA_CONF="spark.local.dir=/dev/shm/x;spark.shuffle.compress=false"
     extra = os.environ.get("MOOSPARK_EXTRA_CONF", "")
     for pair in filter(None, extra.split(";")):

@@ -22,7 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..dialect.tokenizer import Tok, tokenize
+from ..dialect.tokenizer import arg_texts, find_close, split_text, tokenize
 
 _FORMAT_READERS = {
     "tsv": dict(fmt="csv", options={"sep": "\t", "nullValue": "\\N", "header": "false"}),
@@ -106,23 +106,8 @@ def _to_spark_schema(structure: str):
     from ..dialect.types import ch_type_to_spark
 
     fields = []
-    depth = 0
-    cur = ""
-    parts: list[str] = []
-    for ch in structure:
-        if ch in "(<[":
-            depth += 1
-        elif ch in ")>]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append(cur)
-            cur = ""
-        else:
-            cur += ch
-    if cur.strip():
-        parts.append(cur)
-    for part in parts:
-        name, _, typ = part.strip().partition(" ")
+    for part in split_text(structure):
+        name, _, typ = part.partition(" ")
         fields.append(
             T.StructField(name.strip("`"), ch_type_to_spark(typ.strip()), True)
         )
@@ -181,41 +166,19 @@ def resolve_table_functions(
             while j < len(toks) and toks[j].kind in ("ws", "comment"):
                 j += 1
             if j < len(toks) and toks[j].text == "(":
-                depth = 0
-                k = j
-                while k < len(toks):
-                    if toks[k].text == "(":
-                        depth += 1
-                    elif toks[k].text == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k += 1
-                # split on TOP-LEVEL comma tokens only: a comma inside
+                k = find_close(toks, j)
+                if k == -1:
+                    k = len(toks)
+                # split on top-level comma tokens only: a comma inside
                 # a quoted URL or the 3-arg schema form
                 # file(p,'TSV','a Int64, b String') is part of its arg
-                # (string literals are single tokens here; nested
-                # parens tracked by depth) — str.split(',') on the
-                # joined text mis-split both (ADVICE r1)
-                arg_tok_groups: list[list[Tok]] = [[]]
-                adepth = 0
-                for x in toks[j + 1 : k]:
-                    if x.text == "(":
-                        adepth += 1
-                    elif x.text == ")":
-                        adepth -= 1
-                    if x.text == "," and adepth == 0:
-                        arg_tok_groups.append([])
-                    else:
-                        arg_tok_groups[-1].append(x)
-
-                def _arg(g: list[Tok]) -> str:
-                    s = "".join(x.text for x in g).strip()
+                # — str.split(',') on the joined text mis-split both
+                def _arg(s: str) -> str:
                     if len(s) >= 2 and s[0] == "'" and s[-1] == "'":
                         s = s[1:-1].replace("\\'", "'").replace("''", "'")
                     return s
 
-                args = [_arg(g) for g in arg_tok_groups if g]
+                args = [_arg(a) for a in arg_texts(toks[j + 1 : k])]
                 addr = args[0]
                 fmt = args[1] if len(args) > 1 else "TSV"
                 schema = args[2] if len(args) > 2 else default_schema

@@ -48,6 +48,49 @@ class TestStatements:
         assert len(split_statements("SELECT 'a;b' AS s")) == 1
 
 
+@pytest.mark.parametrize(
+    "text,args",
+    [
+        ("Map(String, Array(Int32))", ["Map(String, Array(Int32))"]),
+        ("String, Array(Int32)", ["String", "Array(Int32)"]),
+        ("18, 4", ["18", "4"]),
+        ("a String, b Nullable(Int32)", ["a String", "b Nullable(Int32)"]),
+        ("'a,b' = 1, 'c' = 2", ["'a,b' = 1", "'c' = 2"]),
+        ("[1, 2], x", ["[1, 2]", "x"]),
+        ("{'k': 1}, y", ["{'k': 1}", "y"]),
+        ("'x,y' AS s, '(' AS o, f(a, ')') AS c", ["'x,y' AS s", "'(' AS o", "f(a, ')') AS c"]),
+        ("`a,b` AS q, x -- c,d\n", ["`a,b` AS q", "x -- c,d"]),
+        ("a,", ["a"]),
+        ("", []),
+    ],
+)
+def test_split_top_level_args(text, args):
+    from cowsdb_spark.dialect.tokenizer import split_text
+
+    assert split_text(text) == args
+
+
+def test_nesting_counts_merged_tokens():
+    """Earlier rewrites leave "array(" and "element_at(x" as single
+    tokens; splitting and bracket matching count their brackets."""
+    from cowsdb_spark.dialect.tokenizer import Tok, arg_texts, find_close
+
+    toks = [
+        Tok("op", "array("), Tok("ident", "a"), Tok("op", ","), Tok("number", "1"),
+        Tok("op", ")"), Tok("op", ","), Tok("op", "element_at(x"), Tok("op", ","),
+        Tok("number", "1"), Tok("op", ")"),
+    ]
+    assert arg_texts(toks) == ["array(a,1)", "element_at(x,1)"]
+    assert find_close(toks, 0) == 4
+    assert find_close(toks, 6) == 9
+
+
+def test_interpolate_item_with_subscript():
+    st = one("SELECT n, v FROM t ORDER BY n WITH FILL INTERPOLATE (v AS v + arr[1], w)")
+    assert st.with_fill["interpolate"] == [("v", "v + element_at(arr,1)"), ("w", None)]
+    assert st.spark_sql == "SELECT n, v FROM t ORDER BY n"
+
+
 class TestRewrites:
     @pytest.mark.parametrize(
         "ch,expected_rows",
@@ -633,6 +676,54 @@ class TestQualifyAndAliasScope:
                 b"4\n",
             ),
             ("SELECT sum(number) AS s FROM numbers(10) HAVING s > 40", b"45\n"),
+            # commas and parens inside literals of the select list
+            ("SELECT 'x,y' AS s FROM numbers(2) WHERE s <> ''", b"x,y\nx,y\n"),
+            (
+                "SELECT '(' AS o, number AS n FROM numbers(3) WHERE n > 0",
+                b"(\t1\n(\t2\n",
+            ),
+            # a paren inside a literal opens no nesting level
+            (
+                "SELECT ')' AS o, number % 2 AS g FROM numbers(6) "
+                "ORDER BY number LIMIT 1 BY g",
+                b")\t0\n)\t1\n",
+            ),
+            ("SELECT '(' AS o, number FROM numbers(5) LIMIT 1, 2", b"(\t1\n(\t2\n"),
+            (
+                "SELECT '(' AS o, number FROM numbers(3) "
+                "QUALIFY row_number() OVER (ORDER BY number) <= 1",
+                b"(\t0\n",
+            ),
+            (
+                "SELECT '(' AS o, number % 2 AS g, count() AS c FROM numbers(4) "
+                "GROUP BY o, g WITH TOTALS ORDER BY g",
+                b"(\t0\t2\n(\t1\t2\n\n\t0\t4\n",
+            ),
+            # array and map literals and subscripts: earlier rewrites
+            # leave "array(", "map(" and "element_at(x" as one token
+            (
+                "SELECT [number, 1] AS a, number AS n FROM numbers(3) WHERE n > 0",
+                b"[1,1]\t1\n[2,1]\t2\n",
+            ),
+            (
+                "SELECT {'k': number} AS m, number AS n FROM numbers(3) WHERE n > 0",
+                b"{'k':1}\t1\n{'k':2}\t2\n",
+            ),
+            (
+                "SELECT number, [number % 2] AS arr FROM numbers(4) "
+                "ORDER BY number LIMIT 1 BY arr[1]",
+                b"0\t[0]\n1\t[1]\n",
+            ),
+            (
+                "SELECT number, [number % 2] AS arr FROM numbers(4) "
+                "ORDER BY arr[1], number LIMIT 1 BY arr[1]",
+                b"0\t[0]\n1\t[1]\n",
+            ),
+            ("SELECT * REPLACE ([number] AS number) FROM numbers(2)", b"[0]\n[1]\n"),
+            (
+                "SELECT number FROM numbers(6) WHERE (number, [1]) IN ((1, [1]), (4, [1]))",
+                b"1\n4\n",
+            ),
         ],
     )
     def test_value(self, eng, q, want):
@@ -1194,7 +1285,7 @@ class TestCombinatorAlgebra:
 class TestSweep9:
     """Round-4 sweep 9: URL family, simpleJSON aliases, UUID, tuple
     positional access, CH types in query-side CAST, server misc.
-    Found by tools/probe_sweep.py; each row is CH-documented behavior."""
+    Found by a probe sweep; each row is CH-documented behavior."""
 
     @pytest.fixture(scope="class")
     def eng(self, spark):

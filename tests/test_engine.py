@@ -159,6 +159,14 @@ class TestMergeTreeOrderBy:
         assert engine.execute("SELECT k FROM mtv ORDER BY k") == b"1\n2\n3\n"
         engine.execute("DROP TABLE mtv")
 
+    def test_insert_select_into_tuple_ordered_table(self, engine):
+        # ORDER BY tuple() declares no sort keys: nothing to sort on
+        engine.execute("DROP TABLE IF EXISTS mtt")
+        engine.execute("CREATE TABLE mtt (k Int64) ENGINE=MergeTree() ORDER BY tuple()")
+        engine.execute("INSERT INTO mtt SELECT 3 AS k")
+        assert engine.execute("SELECT k FROM mtt") == b"3\n"
+        engine.execute("DROP TABLE mtt")
+
 
 class TestChErrorCodes:
     """CH ErrorCodes parity: the reference surfaces chDB's numeric
@@ -843,6 +851,19 @@ class TestDictionaries:
 
         with pytest.raises(EngineError):
             eng.execute("SELECT dictGet('never_registered', 'v', 1) AS r")
+
+    def test_attribute_types_and_defaults_keep_their_text(self, eng):
+        eng.execute(
+            "CREATE DICTIONARY text_d (code UInt64, name String DEFAULT 'n/a,  none', "
+            "pop Decimal(18, 4)) PRIMARY KEY code "
+            "SOURCE(CLICKHOUSE(TABLE 'countries' DB 'dictdb')) LAYOUT(FLAT()) LIFETIME(0)"
+        )
+        try:
+            assert eng.execute("SELECT dictGet('text_d', 'name', 99) AS r") == b"n/a,  none\n"
+            # a miss on a Decimal(18, 4) attribute is that type's default
+            assert eng.execute("SELECT dictGet('text_d', 'pop', 99) = 0 AS r") == b"true\n"
+        finally:
+            eng.execute("DROP DICTIONARY text_d")
 
 
 class TestTemporaryTables:

@@ -165,6 +165,15 @@ class TestUrlFile:
         assert engine.execute("SELECT a, b FROM dst2") == b"7\tx\n"
         engine.execute("DROP TABLE dst2")
 
+    def test_structure_with_paren_in_enum_literal(self, engine, tmp_path):
+        engine.user_files_dir = str(tmp_path)
+        p = tmp_path / "enum.tsv"
+        p.write_text("(\t7\n")
+        out = engine.execute(
+            f"SELECT e, n FROM file('{p}', 'TSV', 'e Enum8(''('' = 1), n Int64')"
+        )
+        assert out == b"(\t7\n"
+
 
 class TestChHashes:
     def test_int_hash64_known_values(self, engine):

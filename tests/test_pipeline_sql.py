@@ -192,6 +192,33 @@ class TestPipelineSqlFns:
         )
         assert out == b"[1,2,1,1]\n"
 
+    def test_signed_numeric_literals(self, eng):
+        eng.execute("DROP TABLE IF EXISTS opfndb.signed")
+        eng.execute("CREATE TABLE opfndb.signed (g String, v Float64)")
+        eng.execute("INSERT INTO opfndb.signed VALUES ('a', -3.0), ('a', 4.0), ('b', 12.0)")
+        # -10 reaches the expansion as a sign token and a number;
+        # 2 bins over [-10, 10): array is [under, b1, b2, over]
+        out = eng.execute(
+            "SELECT g, hist FROM "
+            "histPresketch(opfndb.signed, 'g', 'v', -10, 10, 2) ORDER BY g"
+        )
+        assert out == b"a\t[0,1,1,0]\nb\t[0,0,0,1]\n"
+
+    @pytest.mark.parametrize(
+        "call",
+        [
+            "histPresketch(opfndb.docs, 'g', 'v', 'lo', 10)",  # wrong kind
+            "histPresketch(opfndb.docs, 'g', 'v', 0)",  # required hi missing
+            "exactDedup(opfndb.docs, 1)",  # more literals than parameters
+            "minhashPairs(opfndb.docs, doc_id)",  # not a literal
+        ],
+    )
+    def test_usage_errors_code_42(self, eng, call):
+        with pytest.raises(EngineError) as ei:
+            eng.execute(f"SELECT * FROM {call}")
+        assert ei.value.code == 42
+        assert "usage" in str(ei.value)
+
     def test_cms_sketch_fns(self, eng):
         eng.execute("DROP TABLE IF EXISTS opfndb.toks")
         eng.execute("CREATE TABLE opfndb.toks (g String, tok String)")

@@ -46,7 +46,7 @@ def main():
 
     from cowsdb_spark.clickbench import QUERIES
     from cowsdb_spark.engine import Engine
-    from cowsdb_spark.session import get_spark
+    from cowsdb_spark.session import get_spark, host_cpus
     from tools.gen_hits import ensure_hits_100m
 
     t0 = time.time()
@@ -58,7 +58,7 @@ def main():
     spark.read.parquet(path).createOrReplaceTempView("hits")
     eng = Engine(spark)
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {host_cpus()}")
     con.execute(f"CREATE VIEW hits AS SELECT * FROM read_parquet('{path}')")
 
     spark_raw: dict[str, list[float]] = {}

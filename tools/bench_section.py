@@ -77,7 +77,7 @@ def section_cb_10m(out: dict) -> None:
 
     from cowsdb_spark.clickbench import QUERIES
     from cowsdb_spark.engine import Engine
-    from cowsdb_spark.session import get_spark
+    from cowsdb_spark.session import get_spark, host_cpus
     from tools.gen_hits import ensure_hits_10m
 
     p10 = ensure_hits_10m()
@@ -85,7 +85,7 @@ def section_cb_10m(out: dict) -> None:
     spark.read.parquet(p10).createOrReplaceTempView("hits")
     eng = Engine(spark)
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {host_cpus()}")
     con.execute(f"CREATE VIEW hits AS SELECT * FROM read_parquet('{p10}')")
     # r7 protocol (mirrors tools/bench_100m.py): engines interleaved
     # PER QUERY so box state is identical for both sides of a ratio,

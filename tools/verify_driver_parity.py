@@ -30,6 +30,7 @@ sys.path.insert(0, _REPO)
 
 import duckdb  # noqa: E402
 
+from cowsdb_spark.session import host_cpus  # noqa: E402
 from tools.verify_local import canon, dtype_problems  # noqa: E402
 
 
@@ -44,9 +45,8 @@ def plain_session():
     """
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{host_cpus()}]")
         .appName("verify_driver_parity")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
