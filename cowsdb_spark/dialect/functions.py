@@ -80,13 +80,7 @@ RENAMES: dict[str, str] = {
     "argmax": "max_by",
     "grouparray": "collect_list",
     "groupuniqarray": "collect_set",
-    "stddevpop": "stddev_pop",
-    "stddevsamp": "stddev_samp",
-    "varpop": "var_pop",
-    "varsamp": "var_samp",
     "corr": "corr",
-    "covarpop": "covar_pop",
-    "covarsamp": "covar_samp",
     # conditionals / misc
     "ifnull": "ifnull",
     "nullif": "nullif",
@@ -106,7 +100,6 @@ RENAMES: dict[str, str] = {
 # CH name → Spark expression template.
 TEMPLATES: dict[str, str] = {
     "toyyyymm": "CAST(date_format({0}, 'yyyyMM') AS INT)",
-    "toyyyymmdd": "CAST(date_format({0}, 'yyyyMMdd') AS INT)",
     "tostartofminute": "date_trunc('minute', {0})",
     "tostartoffiveminute": "to_timestamp(floor(unix_timestamp({0}) / 300) * 300)",
     "tostartofhour": "date_trunc('hour', {0})",
@@ -138,7 +131,6 @@ TEMPLATES: dict[str, str] = {
     "splitbystring": "split({1}, {0})",
     "arraymap": "transform({1}, {0})",
     "arraysum": "aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)",
-    "arrayavg": "(aggregate({0}, CAST(0 AS DOUBLE), (acc, x) -> acc + x) / size({0}))",
     "arraystringconcat": "array_join({*})",
     "range": "sequence(0, {0} - 1)",
     "uniqexact": "count(DISTINCT {0})",
@@ -207,7 +199,6 @@ TEMPLATES["sha256"] = "sha2({0}, 256)"
 TEMPLATES["exp2"] = "power(2, {0})"
 TEMPLATES["exp10"] = "power(10, {0})"
 TEMPLATES["assumenotnull"] = "{0}"
-TEMPLATES["totypename"] = "typeof({0})"
 TEMPLATES["tuple"] = "struct({*})"
 TEMPLATES["arrayenumerate"] = "sequence(1, size({0}))"
 TEMPLATES["arrayelement"] = "element_at({0}, {1})"
@@ -274,7 +265,6 @@ TEMPLATES["tointervalyear"] = "make_interval({0})"
 # aggregate combinator breadth (gap-hunt round 3)
 TEMPLATES["anyif"] = "any_value(CASE WHEN {1} THEN {0} END, true)"
 TEMPLATES["uniqif"] = "approx_count_distinct(CASE WHEN {1} THEN {0} END)"
-TEMPLATES["uniqexactif"] = "count(DISTINCT CASE WHEN {1} THEN {0} END)"
 TEMPLATES["countdistinct"] = "count(DISTINCT {*})"
 RENAMES["uniqtheta"] = "approx_count_distinct"
 # -Array combinators fold the arrays into the aggregate's domain
@@ -289,27 +279,20 @@ TEMPLATES["maxarray"] = "max(array_max({0}))"
 TEMPLATES["countarray"] = "sum(size({0}))"
 
 # string search family
-TEMPLATES["splitbywhitespace"] = "split(trim({0}), '\\\\s+')"
 TEMPLATES["countsubstrings"] = (
     "CAST(CASE WHEN length({1}) = 0 THEN 0 ELSE "
     "(length({0}) - length(replace({0}, {1}, ''))) / length({1}) END AS BIGINT)"
 )
 TEMPLATES["multisearchany"] = "exists({1}, p -> contains({0}, p))"
-TEMPLATES["multisearchanycaseinsensitive"] = (
-    "exists({1}, p -> contains(lower({0}), lower(p)))"
-)
 
 # array predicates / constructors / misc (gap-hunt round 2)
 RENAMES["arrayzip"] = "arrays_zip"
 RENAMES["generateuuidv4"] = "uuid"
 RENAMES["randcanonical"] = "rand"
 RENAMES["isnan"] = "isnan"
-TEMPLATES["hasall"] = "(size(array_except({1}, {0})) = 0)"
-TEMPLATES["hasany"] = "arrays_overlap({0}, {1})"
 TEMPLATES["arrayfirstindex"] = "array_position(transform({1}, {0}), true)"
 TEMPLATES["isfinite"] = "(NOT isnan({0}) AND abs({0}) <> double('Infinity'))"
 TEMPLATES["isinfinite"] = "(abs({0}) = double('Infinity'))"
-TEMPLATES["now64"] = "current_timestamp()"
 TEMPLATES["rand"] = "CAST(floor(rand() * 4294967296) AS BIGINT)"  # CH UInt32
 TEMPLATES["rand64"] = "CAST(floor(rand() * 9.2233720368547758e18) AS BIGINT)"
 for _t, _s in (
@@ -375,10 +358,6 @@ TEMPLATES["domainwithoutwww"] = (
 )
 TEMPLATES["topleveldomain"] = (
     "regexp_extract(coalesce(parse_url({0}, 'HOST'), ''), '\\\\.([^.]+)$', 1)"
-)
-TEMPLATES["firstsignificantsubdomain"] = (
-    "element_at(split(regexp_replace(coalesce(parse_url({0}, 'HOST'), ''), "
-    "'\\\\.(com|net|org|co|biz|edu|gov)(\\\\.[a-z]{{2}})?$', ''), '\\\\.'), -1)"
 )
 TEMPLATES["path"] = "coalesce(parse_url({0}, 'PATH'), '')"
 TEMPLATES["pathfull"] = (
@@ -489,7 +468,6 @@ PARAMETERIZED["grouparraysample"] = "slice(shuffle(collect_list({0})), 1, {p0})"
 PARAMETERIZED["grouparray"] = "slice(collect_list({0}), 1, {p0})"  # groupArray(n)(x)
 
 # server-context spellings (third sweep)
-TEMPLATES["currentuser"] = "current_user()"
 TEMPLATES["fqdn"] = "'localhost'"    # single-node engine, like the ref
 TEMPLATES["hostname"] = "'localhost'"
 TEMPLATES["tomodifiedjulianday"] = "datediff(CAST({0} AS DATE), DATE'1858-11-17')"
@@ -569,7 +547,6 @@ TEMPLATES["ngrams"] = (
     "i -> substring({0}, i, {1})) END"
 )
 TEMPLATES["isvalidjson"] = "(get_json_object({0}, '$') IS NOT NULL)"
-TEMPLATES["bytesize"] = "octet_length(CAST({0} AS STRING))"
 TEMPLATES["todecimalstring"] = "replace(format_number(CAST({0} AS DOUBLE), {1}), ',', '')"
 # query-literal anonymizer: strings then bare numbers → ?
 TEMPLATES["normalizequery"] = (
@@ -652,7 +629,6 @@ TEMPLATES["randomprintableascii"] = (
 TEMPLATES["randconstant"] = "CAST(floor(rand(42) * 4294967296) AS BIGINT)"
 TEMPLATES["randuniform"] = "({0} + rand() * ({1} - {0}))"
 TEMPLATES["randnormal"] = "({0} + randn() * {1})"
-TEMPLATES["randexponential"] = "(-ln(1 - rand()) / {0})"
 
 # array family deep cuts (round-3 eighth sweep)
 RENAMES["arraymin"] = "array_min"
@@ -1324,36 +1300,6 @@ def _fn_extract_all(args: list[str]) -> str | None:
     return f"regexp_extract_all({args[0]}, {args[1]}, {idx})"
 
 
-def _fn_extract_groups(args: list[str]) -> str | None:
-    """extractGroups(h, 're') → array of the first match's groups."""
-    if len(args) != 2:
-        return None
-    pat = _lit_str(args[1])
-    if pat is None:
-        return None
-    n = _count_capture_groups(pat)
-    if n == 0:
-        return None
-    parts = ", ".join(f"regexp_extract({args[0]}, {args[1]}, {k})" for k in range(1, n + 1))
-    return f"array({parts})"
-
-
-def _fn_extract_all_groups_horizontal(args: list[str]) -> str | None:
-    """extractAllGroupsHorizontal → array per group of all its matches."""
-    if len(args) != 2:
-        return None
-    pat = _lit_str(args[1])
-    if pat is None:
-        return None
-    n = _count_capture_groups(pat)
-    if n == 0:
-        return None
-    parts = ", ".join(
-        f"regexp_extract_all({args[0]}, {args[1]}, {k})" for k in range(1, n + 1)
-    )
-    return f"array({parts})"
-
-
 def _fn_untuple(args: list[str]) -> str | None:
     """untuple(tuple(a, b, …)) → a, b, … (select-list expansion).
     Only the literal-tuple shape is statically expandable — arity of a
@@ -1365,27 +1311,6 @@ def _fn_untuple(args: list[str]) -> str | None:
     if not m:
         return None
     return m.group(1)
-
-
-def _fn_initialize_aggregation(args: list[str]) -> str | None:
-    """initializeAggregation('agg', v): the single-value aggregate state
-    for the scalar-state family (sum/min/max/any = the value itself)."""
-    if len(args) < 2:
-        return None
-    name = (_lit_str(args[0]) or "").lower()
-    if name in ("sum", "min", "max", "any", "anylast"):
-        return f"({args[1]})"
-    if name == "count":
-        return "1"
-    if name in ("grouparray", "groupuniqarray"):
-        return f"array({args[1]})"
-    return None
-
-
-def _fn_finalize_aggregation(args: list[str]) -> str | None:
-    if len(args) != 1:
-        return None
-    return f"({args[0]})"
 
 
 def _fn_neighbor(args: list[str]) -> str | None:
@@ -1516,11 +1441,7 @@ def _fn_values_table(args: list[str]) -> str | None:
 CODE_FNS: dict[str, "callable"] = {
     "arrayreduce": _fn_array_reduce,
     "extractall": _fn_extract_all,
-    "extractgroups": _fn_extract_groups,
-    "extractallgroupshorizontal": _fn_extract_all_groups_horizontal,
     "untuple": _fn_untuple,
-    "initializeaggregation": _fn_initialize_aggregation,
-    "finalizeaggregation": _fn_finalize_aggregation,
     "neighbor": _fn_neighbor,
     "mapapply": _fn_map_apply,
     "arrayshiftleft": _fn_array_shift(left=True),

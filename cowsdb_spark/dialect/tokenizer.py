@@ -37,20 +37,24 @@ class Tok:
         return self.text.upper() if self.kind == "ident" else self.text
 
 
-def tokenize(sql: str) -> list[Tok]:
-    toks: list[Tok] = []
+def iter_tokens(sql: str):
+    """The tokens of ``sql`` one at a time, so a reader that needs
+    only a statement's head never scans the rest. Tokens cover the
+    text without gaps: their lengths sum to an offset."""
     pos = 0
     while pos < len(sql):
         m = TOKEN_RE.match(sql, pos)
         if not m:
             # Unknown byte: keep it as an opaque op token rather than fail.
-            toks.append(Tok("op", sql[pos]))
+            yield Tok("op", sql[pos])
             pos += 1
             continue
-        kind = m.lastgroup or "op"
-        toks.append(Tok(kind, m.group(0)))
         pos = m.end()
-    return toks
+        yield Tok(m.lastgroup or "op", m.group(0))
+
+
+def tokenize(sql: str) -> list[Tok]:
+    return list(iter_tokens(sql))
 
 
 def render(toks: list[Tok]) -> str:

@@ -2571,7 +2571,7 @@ def _rewrite_nested_explode(body: str) -> str:
             break
     if from_at is None:
         # no FROM: synthesize a one-row source
-        m = _re_mod.search(r"(?is)WHERE|GROUP|ORDER|LIMIT|$", out)
+        m = re.search(r"(?is)WHERE|GROUP|ORDER|LIMIT|$", out)
         pos = m.start()
         return out[:pos] + f" FROM (SELECT 1 AS __ch_one){lateral} " + out[pos:]
     depth = 0
@@ -2596,68 +2596,6 @@ def _rewrite_nested_explode(body: str) -> str:
     prefix = "".join(t.text for t in toks2[:ins])
     suffix = "".join(t.text for t in toks2[ins:])
     return f"{prefix}{lateral} {suffix}"
-
-
-import re as _re_mod
-
-
-def _rewrite_values_tuples(sql: str) -> str:
-    """CH tuple literals inside INSERT … VALUES rows → ``struct(…)``.
-
-    ``INSERT INTO t VALUES ((1, 'x'))`` must store a Tuple column, but
-    Spark expands a struct column coming from a VALUES row into its
-    fields on insert (arity mismatch), while ``INSERT … SELECT
-    struct(…)`` coerces positionally. Detection: a ``(`` inside a row
-    whose previous significant token is not an identifier (so not a
-    function call) and whose group has a top-level comma. When any
-    rewrite fires, every row ``(…)`` becomes ``SELECT …`` chained
-    with UNION ALL."""
-    toks = tokenize(sql)
-    sig = _sig(toks)
-    values_at = None
-    depth = 0
-    for k, i in enumerate(sig):
-        t = toks[i]
-        depth += depth_delta(t)
-        if depth == 0 and t.upper == "VALUES":
-            values_at = k
-            break
-    if values_at is None:
-        return sql
-    changed = False
-    depth = 0
-    row_opens: list[int] = []  # token index of each row's '('
-    row_closes: list[int] = []
-    row_commas: list[int] = []  # commas BETWEEN rows
-    for k in range(values_at + 1, len(sig)):
-        i = sig[k]
-        t = toks[i]
-        d = depth_delta(t)
-        if t.text == "(":
-            if depth == 0:
-                row_opens.append(i)
-            elif toks[sig[k - 1]].kind not in ("ident", "bquote"):
-                close = find_close(toks, i)
-                if close != -1 and len(split_args(toks[i + 1 : close])) > 1:
-                    # kind "op" so a directly-following nested
-                    # tuple's prev check doesn't see a call
-                    toks[i] = Tok("op", "struct(")
-                    changed = True
-        depth += d
-        if d < 0 and depth == 0:
-            row_closes.append(i)
-        elif d == 0 and depth == 0 and t.text == ",":
-            row_commas.append(i)
-    if changed and row_opens:
-        # VALUES (r1), (r2) → SELECT r1 UNION ALL SELECT r2
-        toks[sig[values_at]] = Tok("ident", "")
-        for n, i in enumerate(row_opens):
-            toks[i] = Tok("op", "SELECT " if n == 0 else " SELECT ")
-        for i in row_closes:
-            toks[i] = Tok("op", "")
-        for i in row_commas:
-            toks[i] = Tok("op", " UNION ALL")
-    return "".join(t.text for t in toks)
 
 
 def translate(sql: str) -> list[Statement]:
@@ -2701,7 +2639,6 @@ def translate(sql: str) -> list[Statement]:
         elif first == "INSERT":
             s = translate_select(stmt)
             s.kind = "insert"
-            s.spark_sql = _rewrite_values_tuples(s.spark_sql)
             out.append(s)
         elif first == "SET":
             out.append(Statement(kind="set", original=stmt))

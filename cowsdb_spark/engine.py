@@ -39,6 +39,7 @@ from .dialect.ddl import (
     TruncateTable,
     parse_ddl,
 )
+from .dialect.insert import parse_insert, split_ref, values_query
 from .dialect.tokenizer import (
     arg_texts,
     find_close,
@@ -695,7 +696,6 @@ class Engine:
         data_insert = _match_insert_data(query)
         if data_insert is not None:
             ref, col_list, fmt_name, payload, ins_settings = data_insert
-            self._invalidate_plans()
             self._insert_formatted(
                 sess, ref, col_list, fmt_name, payload, ins_settings
             )
@@ -966,8 +966,16 @@ class Engine:
         return "".join(out)
 
     def _prepare_sql(
-        self, sess: UserSession, sql: str, created_views: Optional[list] = None
+        self,
+        sess: UserSession,
+        sql: str,
+        created_views: Optional[list] = None,
+        structure: Optional[str] = None,
     ) -> str:
+        """Engine-side rewrites of translated Spark SQL: table functions,
+        merge(), pipeline functions, dictGet, per-user databases and
+        FINAL. ``structure`` is the schema url()/file() sources read
+        text with when they declare none (an INSERT target's columns)."""
         if "__MOOSPARK_SESSION_USER__" in sql:
             # currentUser()/user() — the CH session identity, which is
             # the authenticated user, not the JVM OS user
@@ -975,9 +983,8 @@ class Engine:
         low = sql.lower()
         if "url(" in low or "file(" in low:
             try:
-                hint = self._insert_structure_hint(sess, sql)
                 sql = resolve_table_functions(
-                    self.spark, sql, default_schema=hint,
+                    self.spark, sql, default_schema=structure,
                     files_root=self.user_files_dir,
                 )
             except EngineError:
@@ -994,48 +1001,6 @@ class Engine:
         if "final" in sql.lower():
             sql = self._expand_final(sql)
         return sql
-
-    def _insert_structure_hint(self, sess: UserSession, sql: str) -> Optional[str]:
-        """Spark DDL schema string for the target of ``INSERT INTO t
-        [(cols)] SELECT … FROM url()/file()`` — CH types bare text
-        sources from the insert target's schema (structure hint), so
-        ``SELECT * FROM url('…hits_v1.tsv.xz','TSV')`` parses all 105
-        columns with the table's names and types instead of yielding
-        untyped ``_c0…`` strings (reference CI load, test.yml:50).
-        Returns None when the statement is not such an INSERT or the
-        target does not (yet) exist — plain SELECTs keep inference."""
-        toks = [t for t in tokenize(sql) if t.kind not in ("ws", "comment")]
-        if len(toks) < 4 or toks[0].text.upper() != "INSERT" or toks[1].text.upper() != "INTO":
-            return None
-        if toks[2].text.upper() in ("SELECT", "VALUES", "FUNCTION"):
-            return None
-        name = toks[2].text.strip("`")
-        i = 3
-        if i + 1 < len(toks) and toks[i].text == ".":
-            qual = f"`{sess.spark_db(name)}`.`{toks[i + 1].text.strip('`')}`"
-            i += 2
-        else:
-            qual = (
-                f"`{sess.temp_db}`.`{name}`"
-                if name in sess.temp_tables
-                else f"`{sess.spark_db()}`.`{name}`"
-            )
-        col_list: list[str] = []
-        if i < len(toks) and toks[i].text == "(":
-            close = find_close(toks, i)
-            if close != -1:
-                col_list = [c.strip("`") for c in arg_texts(toks[i + 1 : close])]
-        try:
-            schema = self.spark.table(qual).schema
-        except Exception:
-            return None
-        fields = {f.name: f for f in schema.fields}
-        picked = (
-            [fields[c] for c in col_list if c in fields] if col_list else list(schema.fields)
-        )
-        if col_list and len(picked) != len(col_list):
-            return None
-        return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in picked)
 
     def _expand_final(self, sql: str) -> str:
         """``FROM t FINAL`` after db-remapping: for a table whose
@@ -1784,17 +1749,44 @@ class Engine:
             self._plan_cache.clear()
 
     def _run_insert(self, sess: UserSession, sql: str) -> None:
-        self._invalidate_plans()
+        """``INSERT INTO t [(cols)] SELECT|WITH|VALUES …``: the body is
+        prepared and planned on its own, named after the target's
+        columns and appended through ``_append``."""
+        hdr = parse_insert(sql)
+        body = sql[hdr.body_at :].strip() if hdr else ""
+        kind = _INSERT_BODY_RE.match(body)
+        if kind is None:
+            raise EngineError(f"Syntax error: unsupported INSERT form: {sql[:200]}", 62)
         created: list = []
         with self._lock:
             self._in_user_db(sess)
             try:
-                prepared = self._prepare_sql(sess, sql, created)
-                target = self._insert_target(sess, prepared)
-                if target and self._mvs_for(sess, target):
-                    self._insert_with_mvs(sess, prepared, target)
-                elif not self._insert_sorted(sess, prepared):
-                    self.spark.sql(prepared)
+                tbl = self._resolve(sess, hdr.ref)
+                fields = {f.name.lower(): f for f in self.spark.table(tbl).schema.fields}
+                names = hdr.columns or [f.name for f in fields.values()]
+                picked = [fields.get(n.lower()) for n in names]
+                unknown = [n for n, f in zip(names, picked) if f is None]
+                if unknown:
+                    raise EngineError(f"Unknown column(s) {unknown} in {hdr.ref}", 47)
+                if kind.group(1).upper() == "VALUES":
+                    body = values_query(
+                        body, [f.metadata.get("CURRENT_DEFAULT", "NULL") for f in picked]
+                    )
+                # CH types bare url()/file() text sources from the insert
+                # target (structure hint): `SELECT * FROM url('…hits_v1.tsv.xz',
+                # 'TSV')` parses all 105 columns with the table's names
+                # and types instead of untyped `_c0…` strings (reference
+                # CI load, test.yml:50)
+                structure = ", ".join(
+                    f"`{f.name}` {f.dataType.simpleString()}" for f in picked
+                )
+                block = self.spark.sql(self._prepare_sql(sess, body, created, structure))
+                if len(block.columns) != len(names):
+                    raise EngineError(
+                        f"INSERT column count mismatch: {len(block.columns)} vs {len(names)}",
+                        20,
+                    )
+                self._append(sess, tbl, block.toDF(*names), names)
             except EngineError:
                 raise
             except Exception as e:
@@ -1806,63 +1798,70 @@ class Engine:
                     except Exception:
                         pass
 
-    def _insert_target(self, sess: UserSession, prepared: str) -> Optional[str]:
-        """Fully-qualified target of an INSERT statement, or None."""
-        toks = [t for t in tokenize(prepared) if t.kind not in ("ws", "comment")]
-        if len(toks) < 3 or toks[0].text.upper() != "INSERT" or toks[1].text.upper() != "INTO":
-            return None
-        if toks[2].text.upper() in ("SELECT", "VALUES"):
-            return None
-        name = toks[2].text.strip("`")
-        if len(toks) > 4 and toks[3].text == ".":
-            return f"`{name}`.`{toks[4].text.strip('`')}`"
-        return f"`{sess.spark_db()}`.`{name}`"
-
-    def _insert_with_mvs(self, sess: UserSession, prepared: str, target_qual: str) -> None:
-        """INSERT into a table with materialized views: evaluate the
-        inserted block once (cached), append it to the target with the
-        MergeTree sort, then fan it out through each MV's SELECT."""
+    def _append(
+        self,
+        sess: UserSession,
+        tbl: str,
+        block: DataFrame,
+        names: list[str],
+        _depth: int = 0,
+    ) -> None:
+        """The one write of every INSERT form. The block's columns
+        ``names`` are matched to ``tbl``'s by name, case-insensitively,
+        and cast to their types (permissive, as LEGACY store assignment
+        is: `'2024-01-05'` into a Date column casts); a column the
+        block omits takes its declared DEFAULT (Spark's
+        ``CURRENT_DEFAULT``) or NULL, and a block column the table
+        lacks is dropped (an MV's extra SELECT columns). The rows are
+        sorted on the table's ORDER BY (MergeTree sort-on-write), written
+        once, and the plan cache is invalidated after the write lands,
+        so a SELECT planned meanwhile is not kept against the old
+        files. Then each materialized view reading ``tbl`` appends its
+        SELECT over the same block (CH's insert trigger; views reading
+        MV storage chain, to depth 10). The block is cached only when
+        an MV reads it."""
         from pyspark.sql import functions as F
 
-        toks = [t for t in tokenize(prepared) if t.kind not in ("ws", "comment")]
-        col_list: list[str] = []
-        body_at = None
-        i = 2
-        while i < len(toks):
-            if toks[i].text.upper() in ("SELECT", "VALUES", "WITH"):
-                body_at = i
-                break
-            if toks[i].text == "(":  # the column list
-                close = find_close(toks, i)
-                if close == -1:
-                    break
-                col_list = [c.strip("`") for c in arg_texts(toks[i + 1 : close])]
-                i = close
-            i += 1
-        if body_at is None:
-            self.spark.sql(prepared)  # not a shape we can split; run as-is
-            return
-        delta = self.spark.sql(" ".join(t.text for t in toks[body_at:]))
-        tgt = self.spark.table(target_qual)
-        names = col_list or tgt.columns
-        if len(delta.columns) != len(names):
-            raise EngineError(
-                f"INSERT column count mismatch: {len(delta.columns)} vs {len(names)}", 20
-            )
-        delta = delta.toDF(*names)
+        given = {n.lower(): n for n in names}
         cols = []
-        for f in tgt.schema.fields:
-            if f.name in names:
-                cols.append(F.col(f"`{f.name}`").cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        delta = delta.select(*cols).cache()
+        for f in self.spark.table(tbl).schema.fields:
+            src = given.get(f.name.lower())
+            col = (
+                F.col(f"`{src}`")
+                if src is not None
+                else F.expr(f.metadata.get("CURRENT_DEFAULT", "NULL"))
+            )
+            cols.append(col.cast(f.dataType).alias(f.name))
+        block = block.select(*cols)
+        mvs = self._mvs_for(sess, tbl) if _depth < 10 else []
+        if mvs:
+            block = block.cache()
+        view = f"__moospark_mv_delta_{_depth}"
         try:
-            out = self._sort_for_write(delta, self._table_order_by(target_qual))
-            out.write.insertInto(target_qual)
-            self._propagate_mvs(sess, target_qual, delta)
+            try:
+                self._sort_for_write(block, self._table_order_by(tbl)).write.insertInto(tbl)
+            finally:
+                self._invalidate_plans()
+            if mvs:
+                block.createOrReplaceTempView(view)
+            for storage, body in mvs:
+                out = self.spark.sql(body.replace(tbl, view))
+                self._append(sess, storage, out, out.columns, _depth + 1)
         finally:
-            delta.unpersist()
+            if mvs:
+                self.spark.catalog.dropTempView(view)
+                block.unpersist()
+
+    def _resolve(self, sess: UserSession, table_ref: str) -> str:
+        """CH table reference (``t`` or ``db.t``, optionally
+        back-quoted) → fully-qualified Spark table name in ``sess``'s
+        namespace: its current database or its TEMPORARY tables."""
+        db, name = split_ref(table_ref)
+        if db:
+            return f"`{sess.spark_db(db)}`.`{name}`"
+        if name in sess.temp_tables:
+            return f"`{sess.temp_db}`.`{name}`"
+        return f"`{sess.spark_db()}`.`{name}`"
 
     def resolve_table(
         self,
@@ -1871,18 +1870,12 @@ class Engine:
         password: str = "",
         database: Optional[str] = None,
     ) -> str:
-        """CH table reference (``tbl`` or ``db.tbl``, optionally
-        back-quoted) → fully-qualified Spark table name inside the
-        credential pair's namespace."""
+        """``_resolve`` in the credential pair's unnamed session (the
+        native protocol has no session id)."""
         sess = self.get_session(user, password)
         if database:
             sess.current_db = database
-        parts = [p.strip().strip("`") for p in table_ref.split(".")]
-        if len(parts) == 2:
-            return f"`{sess.spark_db(parts[0])}`.`{parts[1]}`"
-        if parts[0] in sess.temp_tables:
-            return f"`{sess.temp_db}`.`{parts[0]}`"
-        return f"`{sess.spark_db()}`.`{parts[0]}`"
+        return self._resolve(sess, table_ref)
 
     def table_columns(
         self,
@@ -1893,9 +1886,13 @@ class Engine:
     ) -> tuple[list[str], list[str]]:
         """Column names + CH type names of a session table (the
         native-INSERT sample block the server must send, §3.2)."""
+        return self._ch_columns(self.resolve_table(table_ref, user, password, database))
+
+    def _ch_columns(self, tbl: str) -> tuple[list[str], list[str]]:
+        """Column names + CH type names (from the Spark types) of a
+        resolved table."""
         from .dialect.types import spark_type_to_ch
 
-        tbl = self.resolve_table(table_ref, user, password, database)
         with self._lock:
             try:
                 schema = self.spark.table(tbl).schema
@@ -1916,49 +1913,69 @@ class Engine:
         database: Optional[str] = None,
         ch_types: Optional[list[str]] = None,
     ) -> None:
-        """Apply externally-supplied rows (native-protocol INSERT
-        data blocks) to a session table. Unmentioned columns get
-        NULL; values are cast to the declared column types (LEGACY
-        store assignment, matching the SQL INSERT path). Honors the
-        table's MergeTree ``ORDER BY`` sort-on-write. *ch_types*
-        (the block's declared types) makes the source schema
-        explicit so all-NULL columns don't break inference."""
+        """Append externally-supplied rows (native-protocol INSERT data
+        blocks) to a table of the credential pair's unnamed session;
+        see ``_insert_rows``."""
+        sess = self.get_session(user, password)
+        if database:
+            sess.current_db = database
+        self._insert_rows(sess, table_ref, names, rows, ch_types)
+
+    def _insert_rows(
+        self,
+        sess: UserSession,
+        table_ref: str,
+        names: list[str],
+        rows: list[tuple],
+        ch_types: Optional[list[str]] = None,
+    ) -> None:
+        """Append rows held in Python through ``_append``. *ch_types* (a
+        native block's declared types, or String for text formats) makes
+        the source schema explicit. Without them the values' own types
+        are inferred (JSON, Avro, …), and a column with no value to
+        infer from takes the target column's type."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         from .dialect.types import ch_type_to_spark
 
-        sess = self.get_session(user, password)
-        tbl = self.resolve_table(table_ref, user, password, database)
         with self._lock:
             try:
-                target = self.spark.table(tbl)
-                tgt_fields = {f.name: f for f in target.schema.fields}
-                unknown = [n for n in names if n not in tgt_fields]
+                tbl = self._resolve(sess, table_ref)
+                known = {c.lower() for c in self.spark.table(tbl).columns}
+                unknown = [n for n in names if n.lower() not in known]
                 if unknown:
                     raise EngineError(f"Unknown column(s) {unknown} in {table_ref}", 47)
                 if ch_types is not None:
-                    src_schema = T.StructType(
-                        [
-                            T.StructField(n, ch_type_to_spark(t), True)
-                            for n, t in zip(names, ch_types)
+                    block = local_df(
+                        self.spark,
+                        rows,
+                        T.StructType(
+                            [
+                                T.StructField(n, ch_type_to_spark(t), True)
+                                for n, t in zip(names, ch_types)
+                            ]
+                        ),
+                    )
+                else:
+                    # Spark cannot infer a type from NULLs alone: such a
+                    # column is an untyped NULL, which _append casts
+                    full = [i for i in range(len(names)) if any(r[i] is not None for r in rows)]
+                    src = (
+                        self.spark.createDataFrame(
+                            [tuple(r[i] for i in full) for r in rows],
+                            schema=[names[i] for i in full],
+                        )
+                        if full
+                        else self.spark.range(len(rows))
+                    )
+                    block = src.select(
+                        *[
+                            F.col(f"`{n}`") if i in full else F.lit(None).alias(n)
+                            for i, n in enumerate(names)
                         ]
                     )
-                    src = local_df(self.spark, rows, src_schema)
-                else:
-                    src = self.spark.createDataFrame(rows, schema=names)
-                out_cols = []
-                for f in target.schema.fields:
-                    if f.name in names:
-                        out_cols.append(
-                            F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
-                        )
-                    else:
-                        out_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                df = src.select(*out_cols)
-                out = self._sort_for_write(df, self._table_order_by(tbl))
-                out.write.insertInto(tbl)
-                self._propagate_mvs(sess, tbl, df)
+                self._append(sess, tbl, block, names)
             except EngineError:
                 raise
             except Exception as e:
@@ -1981,41 +1998,6 @@ class Engine:
                 props = {}
             self._order_by_cache[tbl] = props
         return self._order_by_cache[tbl]
-
-    def _insert_sorted(self, sess: UserSession, sql: str) -> bool:
-        """INSERT INTO a table declared with ``ORDER BY`` (MergeTree
-        DDL, test.yml:49): sort rows within partitions on the declared
-        keys before writing, so parquet row-group min/max stats give
-        the same data-skipping a ClickHouse sparse primary index does
-        (SURVEY §4.2). Per-partition sort — no global shuffle added.
-
-        Returns True if handled; False → caller runs plain SQL."""
-        toks = [t for t in tokenize(sql) if t.kind not in ("ws", "comment")]
-        if len(toks) < 4 or toks[0].text.upper() != "INSERT" or toks[1].text.upper() != "INTO":
-            return False
-        # target: ident or `q`.`q` chain; find extent + SELECT start
-        i = 2
-        tbl_parts = []
-        while i < len(toks) and (toks[i].kind in ("ident", "bquote") or toks[i].text == "."):
-            if toks[i].text.upper() in ("SELECT", "VALUES", "FORMAT"):
-                break
-            tbl_parts.append(toks[i].text)
-            i += 1
-        if i >= len(toks) or toks[i].text.upper() != "SELECT":
-            return False  # VALUES / column-list forms → plain path
-        tbl = "".join(tbl_parts)
-        order_by = self._table_order_by(tbl)
-        if not order_by:
-            return False
-        select_sql = "".join(
-            t.text + " " for t in toks[i:]
-        )
-        tgt_cols = self.spark.table(tbl).columns
-        df = self.spark.sql(select_sql)
-        if len(df.columns) != len(tgt_cols):
-            return False  # let Spark produce the proper error
-        self._sort_for_write(df.toDF(*tgt_cols), order_by).write.insertInto(tbl)
-        return True
 
     def _sort_for_write(self, df: DataFrame, order_by: Optional[str]) -> DataFrame:
         """``df`` sorted within partitions on a table's declared ORDER BY
@@ -2401,13 +2383,15 @@ class Engine:
                     _clean_spark_error(e), _ch_error_code(str(e))
                 ) from e
         if src_df is not None:
-            # MergeTree sort-on-write analog for the CTAS payload
+            # declared columns take the SELECT's columns by position
+            names = [c.name for c in ct.columns]
             try:
-                writer = self._sort_for_write(src_df, ct.order_by)
-            except Exception:  # noqa: BLE001 — unsortable expr: keep data
-                writer = src_df
-            try:
-                writer.write.insertInto(tbl)
+                if len(src_df.columns) != len(names):
+                    raise EngineError(
+                        f"CREATE TABLE … AS SELECT column count mismatch: "
+                        f"{len(src_df.columns)} vs {len(names)}", 20
+                    )
+                self._append(sess, tbl, src_df.toDF(*names), names)
             except Exception as e:
                 if replace_target is not None:
                     # failed REPLACE payload: discard staging, keep
@@ -2416,6 +2400,8 @@ class Engine:
                         self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
                     except Exception:  # noqa: BLE001
                         pass
+                if isinstance(e, EngineError):
+                    raise
                 raise EngineError(
                     _clean_spark_error(e), _ch_error_code(str(e))
                 ) from e
@@ -2625,48 +2611,13 @@ class Engine:
                             self.spark.catalog.dropTempView(view)
                         except Exception:  # noqa: BLE001
                             pass
-                names, ch_types = self.table_columns(
-                    ref, sess.user, sess.password
+                names, ch_types, dflts = self._declared_columns(
+                    self._resolve(sess, ref)
                 )
-                # declared CH types win over the Spark-schema round
-                # trip (same policy as SHOW CREATE TABLE)
-                try:
-                    import json as _json
-
-                    tbl = self.resolve_table(ref, sess.user, sess.password)
-                    decl_raw = self._table_moospark_props(tbl).get("ch_types")
-                    if decl_raw:
-                        decl = dict(_json.loads(decl_raw))
-                        ch_types = [
-                            decl.get(n, t) for n, t in zip(names, ch_types)
-                        ]
-                except Exception:
-                    pass
-                dflts = {}
-                try:
-                    import json as _json
-
-                    raw = self._table_moospark_props(
-                        self.resolve_table(ref, sess.user, sess.password)
-                    ).get("col_defaults")
-                    if raw:
-                        dflts = {
-                            n: (k, e) for n, k, e in _json.loads(raw)
-                        }
-                except Exception:
-                    dflts = {}
                 return local_df(
                     self.spark,
                     [
-                        (
-                            n,
-                            t,
-                            dflts.get(n, ("", ""))[0],
-                            dflts.get(n, ("", ""))[1],
-                            "",
-                            "",
-                            "",
-                        )
+                        (n, t, *dflts.get(n, ("", "")), "", "", "")
                         for n, t in zip(names, ch_types)
                     ],
                     "name string, type string, default_type string, "
@@ -2700,39 +2651,36 @@ class Engine:
             return self._show_create(sess, ref)
         return None
 
+    def _declared_columns(self, tbl: str) -> tuple[list[str], list[str], dict]:
+        """Columns of a resolved table as DESCRIBE and SHOW CREATE report
+        them: names, CH types and ``{name: (default kind, expr)}``. The
+        schema is the source of truth for the column LIST (ALTERs may
+        have changed it); the declared CH types (``moospark.ch_types``:
+        UUID, Enum, LowCardinality, …) win over the Spark-type round
+        trip per column."""
+        import json as _json
+
+        names, ch_types = self._ch_columns(tbl)
+        props = self._table_moospark_props(tbl)
+        try:
+            decl = dict(_json.loads(props.get("ch_types") or "[]"))
+            ch_types = [decl.get(n, t) for n, t in zip(names, ch_types)]
+        except Exception:
+            pass
+        try:
+            raw = _json.loads(props.get("col_defaults") or "[]")
+            dflts = {n: (k, e) for n, k, e in raw}
+        except Exception:
+            dflts = {}
+        return names, ch_types, dflts
+
     def _show_create(self, sess: UserSession, table_ref: str):
         """Reconstruct CH-style DDL from the schema + moospark.*
         properties (column `statement`, as ClickHouse returns it)."""
-        names, ch_types = self.table_columns(table_ref, sess.user, sess.password)
-        tbl = self.resolve_table(table_ref, sess.user, sess.password)
-        props = {}
-        try:
-            for r in self.spark.sql(f"SHOW TBLPROPERTIES {tbl}").collect():
-                props[r["key"]] = r["value"]
-        except Exception:
-            pass
+        tbl = self._resolve(sess, table_ref)
+        names, ch_types, dflts = self._declared_columns(tbl)
+        props = self._table_moospark_props(tbl)
         visible = table_ref.strip().strip("`")
-        if props.get("moospark.ch_types"):
-            import json as _json
-
-            try:
-                decl = dict(_json.loads(props["moospark.ch_types"]))
-                # schema is source of truth for the column LIST (ALTERs
-                # may have changed it); declared names win per column
-                ch_types = [decl.get(n, t) for n, t in zip(names, ch_types)]
-            except Exception:
-                pass
-        dflts = {}
-        if props.get("moospark.col_defaults"):
-            import json as _json
-
-            try:
-                dflts = {
-                    n: (k, e)
-                    for n, k, e in _json.loads(props["moospark.col_defaults"])
-                }
-            except Exception:
-                dflts = {}
 
         def _colline(n, t):
             line = f"    `{n}` {t}"
@@ -2743,14 +2691,14 @@ class Engine:
 
         cols = ",\n".join(_colline(n, t) for n, t in zip(names, ch_types))
         stmt = f"CREATE TABLE {visible}\n(\n{cols}\n)\nENGINE = " + props.get(
-            "moospark.engine", "MergeTree"
+            "engine", "MergeTree"
         )
-        if props.get("moospark.engine_args"):
-            stmt += f"({props['moospark.engine_args']})"
-        if props.get("moospark.partition_by"):
-            stmt += f"\nPARTITION BY {props['moospark.partition_by']}"
-        if props.get("moospark.order_by"):
-            stmt += f"\nORDER BY {props['moospark.order_by']}"
+        if props.get("engine_args"):
+            stmt += f"({props['engine_args']})"
+        if props.get("partition_by"):
+            stmt += f"\nPARTITION BY {props['partition_by']}"
+        if props.get("order_by"):
+            stmt += f"\nORDER BY {props['order_by']}"
         return self.spark.createDataFrame([(stmt,)], "statement string")
 
     # ------------------------------------------- inline-data INSERT (HTTP)
@@ -2775,7 +2723,7 @@ class Engine:
             cols = f" ({', '.join(col_list)})" if col_list else ""
             self._run_insert(sess, f"INSERT INTO {table_ref}{cols} VALUES {payload}")
             return
-        names = col_list or self.table_columns(table_ref, sess.user, sess.password)[0]
+        names = col_list or self._ch_columns(self._resolve(sess, table_ref))[0]
         rows: list[tuple]
         if fmt in ("TSV", "TABSEPARATED", "TSVRAW", "TABSEPARATEDRAW",
                    "TSVWITHNAMES", "TABSEPARATEDWITHNAMES"):
@@ -2848,78 +2796,55 @@ class Engine:
             avro_names, rows = read_ocf(raw)
             if avro_names and avro_names != ["value"]:
                 names = [n for n in avro_names if n in names] or avro_names
-        elif fmt in ("PROTOBUF", "PROTOBUFSINGLE", "PROTOBUFLIST"):
-            from .formats.protobuf import decode_rows, resolve_schema
-
+        elif fmt in _SCHEMA_FILE_FORMATS:
+            # schema-file formats: CH's format_schema='file:Message'
+            # resolved inside the server's format_schema_path
             fs = (settings or {}).get("format_schema")
             if not fs:
                 raise EngineError(
-                    "INSERT FORMAT Protobuf requires SETTINGS "
-                    "format_schema='file.proto:Message'", 36
+                    f"INSERT FORMAT {fmt_name} requires SETTINGS "
+                    "format_schema='file:Message'", 36
                 )
             if not self.format_schema_dir:
                 raise EngineError(
                     "format_schema_path is not configured on this server", 36
                 )
-            try:
-                fields, _msg = resolve_schema(str(fs), self.format_schema_dir)
-                raw = payload.encode("utf-8", "surrogateescape")
-                mode = {"PROTOBUF": "delimited", "PROTOBUFSINGLE": "single",
-                        "PROTOBUFLIST": "list"}[fmt]
-                pb_names, rows = decode_rows(fields, raw, mode=mode)
-            except (ValueError, IndexError, OSError) as e:
-                raise EngineError(str(e), 36) from e
-            # match protobuf fields to table columns case-insensitively
-            lower_map = {n.lower(): n for n in names}
-            keep = [i for i, p in enumerate(pb_names) if p.lower() in lower_map]
-            if keep:
-                names = [lower_map[pb_names[i].lower()] for i in keep]
-                rows = [tuple(r[i] for i in keep) for r in rows]
+            from .formats import capnp, protobuf
+
+            if fmt == "CAPNPROTO":
+                resolve, decode = capnp.resolve_schema, capnp.decode_rows
             else:
-                names = pb_names
-        elif fmt == "CAPNPROTO":
-            from .formats.capnp import decode_rows as _capnp_decode
-            from .formats.capnp import resolve_schema as _capnp_resolve
-
-            fs = (settings or {}).get("format_schema")
-            if not fs:
-                raise EngineError(
-                    "INSERT FORMAT CapnProto requires SETTINGS "
-                    "format_schema='file.capnp:Struct'", 36
-                )
-            if not self.format_schema_dir:
-                raise EngineError(
-                    "format_schema_path is not configured on this server", 36
+                resolve = protobuf.resolve_schema
+                decode = functools.partial(
+                    protobuf.decode_rows, mode=_SCHEMA_FILE_FORMATS[fmt]
                 )
             try:
-                fields, _msg = _capnp_resolve(str(fs), self.format_schema_dir)
+                fields, _msg = resolve(str(fs), self.format_schema_dir)
                 raw = payload.encode("utf-8", "surrogateescape")
-                cp_names, rows = _capnp_decode(fields, raw)
+                msg_names, rows = decode(fields, raw)
             except (ValueError, IndexError, OSError, _struct.error) as e:
                 raise EngineError(str(e), 36) from e
+            # match message fields to table columns case-insensitively
             lower_map = {n.lower(): n for n in names}
-            keep = [i for i, p in enumerate(cp_names) if p.lower() in lower_map]
+            keep = [i for i, p in enumerate(msg_names) if p.lower() in lower_map]
             if keep:
-                names = [lower_map[cp_names[i].lower()] for i in keep]
+                names = [lower_map[msg_names[i].lower()] for i in keep]
                 rows = [tuple(r[i] for i in keep) for r in rows]
             else:
-                names = cp_names
+                names = msg_names
         else:
             raise EngineError(f"Unsupported INSERT format: {fmt_name}", 73)
         if not rows:
             return
         # text formats arrive as strings; declare String sources and let
-        # insert_rows cast to the column types (LEGACY store assignment);
-        # JSONEachRow and Avro carry native typed values
+        # _append cast to the column types (LEGACY store assignment);
+        # JSONEachRow, Avro and the schema-file formats carry typed values
         src_types = (
-            ["Nullable(String)"] * len(names)
-            if fmt not in ("JSONEACHROW", "AVRO", "PROTOBUF",
-                           "PROTOBUFSINGLE", "PROTOBUFLIST", "CAPNPROTO")
-            else None
+            None
+            if fmt in ("JSONEACHROW", "AVRO") or fmt in _SCHEMA_FILE_FORMATS
+            else ["Nullable(String)"] * len(names)
         )
-        self.insert_rows(
-            table_ref, list(names), rows, sess.user, sess.password, ch_types=src_types
-        )
+        self._insert_rows(sess, table_ref, list(names), rows, src_types)
 
     # ------------------------------------------------- mutations (CH ALTER)
 
@@ -2938,8 +2863,7 @@ class Engine:
         """``EXISTS TABLE t`` → one row, `result` UInt8 (CH shape)."""
         from pyspark.sql import functions as F
 
-        parts = [p.strip().strip("`") for p in table_ref.split(".") if p.strip()]
-        db, name = (parts[0], parts[1]) if len(parts) == 2 else (None, parts[0])
+        db, name = split_ref(table_ref)
         if db and db.lower() == "system":
             # virtual system.* tables exist if a provider serves them
             # (they are materialized per statement, never cataloged)
@@ -2960,7 +2884,7 @@ class Engine:
         storage offers (missing table errors, as CH does)."""
         from pyspark.sql import functions as F
 
-        tbl = self.resolve_table(table_ref, sess.user, sess.password)
+        tbl = self._resolve(sess, table_ref)
         self._sql_or_raise(f"SELECT * FROM {tbl} LIMIT 0").collect()
         return self.spark.range(1).select(
             F.lit(1).cast("smallint").alias("result")
@@ -2982,14 +2906,8 @@ class Engine:
         spark_db = sess.spark_db(db)
         tbl = f"`{spark_db}`.`{name}`"
         stage = f"`{spark_db}`.`{name}__moospark_stage`"
-        props = {}
-        try:
-            for r in self.spark.sql(f"SHOW TBLPROPERTIES {tbl}").collect():
-                if r["key"].startswith("moospark."):
-                    props[r["key"]] = r["value"]
-        except Exception:
-            pass
-        df = self._sort_for_write(df, props.get("moospark.order_by"))
+        props = self._table_moospark_props(tbl)
+        df = self._sort_for_write(df, props.get("order_by"))
         self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
         df.createOrReplaceTempView("__moospark_mutation_src")
         try:
@@ -3000,7 +2918,9 @@ class Engine:
             self._sql_or_raise(f"DROP TABLE {tbl}")
             self._sql_or_raise(f"ALTER TABLE {stage} RENAME TO {tbl}")
             if props:
-                kv = ", ".join(f"'{k}' = '{_esc(v)}'" for k, v in props.items())
+                kv = ", ".join(
+                    f"'moospark.{k}' = '{_esc(v)}'" for k, v in props.items()
+                )
                 self._sql_or_raise(f"ALTER TABLE {tbl} SET TBLPROPERTIES ({kv})")
         finally:
             self.spark.catalog.dropTempView("__moospark_mutation_src")
@@ -3280,40 +3200,6 @@ class Engine:
                 pass
         return self._mv_registry.get(ns, {}).get(source_qual, [])
 
-    def _propagate_mvs(
-        self, sess: UserSession, target_qual: str, delta: DataFrame, _depth: int = 0
-    ) -> None:
-        """Apply each MV's SELECT to the just-inserted block and append
-        to MV storage (the CH insert-trigger contract). The delta is a
-        temp view, so propagation is fully distributed — the inserted
-        block never lands on the driver. Cascades into MVs reading
-        from MV storage (CH chains too), bounded at depth 10."""
-        from pyspark.sql import functions as F
-
-        if _depth >= 10:
-            return
-        mvs = self._mvs_for(sess, target_qual)
-        if not mvs:
-            return
-        view = f"__moospark_mv_delta_{_depth}"
-        delta.createOrReplaceTempView(view)
-        try:
-            for storage, body in mvs:
-                out = self.spark.sql(body.replace(target_qual, view))
-                tgt = self.spark.table(storage)
-                cols = []
-                for f in tgt.schema.fields:
-                    if f.name in out.columns:
-                        cols.append(F.col(f"`{f.name}`").cast(f.dataType).alias(f.name))
-                    else:
-                        cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                aligned = out.select(*cols)
-                writer = self._sort_for_write(aligned, self._table_order_by(storage))
-                writer.write.insertInto(storage)
-                self._propagate_mvs(sess, storage, aligned, _depth + 1)
-        finally:
-            self.spark.catalog.dropTempView(view)
-
     def _translate_expr_body(self, select_sql: str) -> str:
         """CH-dialect SELECT text → Spark SQL text (no statement split)."""
         from .dialect.translate import translate_select
@@ -3342,29 +3228,42 @@ def _parse_set(stmt: str) -> dict:
 
 import re as _re
 
+# Where inline data starts. The data block follows a newline, except
+# for FORMAT Values, whose rows may follow on the same line
+# (clickhouse-client does this); an optional SETTINGS clause (e.g.
+# format_schema for Protobuf) may sit between the column list and
+# FORMAT, as in CH. The target and columns are read by parse_insert.
 _INSERT_DATA_RE = _re.compile(
-    # data block starts after a newline — except FORMAT Values, whose
-    # rows may follow on the same line (clickhouse-client does this);
-    # an optional SETTINGS clause (e.g. format_schema for Protobuf)
-    # may sit between the column list and FORMAT, as in CH
-    r"^\s*INSERT\s+INTO\s+(?P<ref>`[^`]+`(?:\s*\.\s*`[^`]+`)?|[\w.]+)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?"
+    r"^\s*INSERT\s+INTO\s+(?:`[^`]+`(?:\s*\.\s*`[^`]+`)?|[\w.]+)\s*"
+    r"(?:\([^)]*\)\s*)?"
     r"(?:SETTINGS\s+(?P<settings>[^\n]*?)\s+)?"
     r"FORMAT\s+(?P<fmt>\w+)[ \t]*\n(?P<data>.+)$",
     _re.IGNORECASE | _re.DOTALL,
 )
 
 _INSERT_VALUES_INLINE_RE = _re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<ref>`[^`]+`(?:\s*\.\s*`[^`]+`)?|[\w.]+)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?FORMAT\s+Values[ \t]+(?P<data>\(.+)$",
+    r"^\s*INSERT\s+INTO\s+(?:`[^`]+`(?:\s*\.\s*`[^`]+`)?|[\w.]+)\s*"
+    r"(?:\([^)]*\)\s*)?FORMAT\s+Values[ \t]+(?P<data>\(.+)$",
     _re.IGNORECASE | _re.DOTALL,
 )
 
+# what an INSERT body runs as a query (_run_insert)
+_INSERT_BODY_RE = _re.compile(r"(SELECT|WITH|VALUES)\b", _re.IGNORECASE)
+
+# schema-file INSERT formats → protobuf framing mode (CapnProto has one)
+_SCHEMA_FILE_FORMATS = {
+    "PROTOBUF": "delimited",
+    "PROTOBUFSINGLE": "single",
+    "PROTOBUFLIST": "list",
+    "CAPNPROTO": None,
+}
+
 
 def _match_insert_data(query: str):
-    """Split ``INSERT INTO t [(cols)] FORMAT X\\n<data>`` into parts;
-    None if the query isn't an inline-data insert (e.g. the data block
-    is empty — then it's a plain statement)."""
+    """Split ``INSERT INTO t [(cols)] FORMAT X\\n<data>`` into (ref,
+    columns, format, data, settings); None if the query isn't an
+    inline-data insert (e.g. the data block is empty — then it's a
+    plain statement)."""
     m = _INSERT_DATA_RE.match(query)
     fmt = m.group("fmt") if m else "Values"
     settings_txt = (m.group("settings") or "") if m else ""
@@ -3372,11 +3271,11 @@ def _match_insert_data(query: str):
         m = _INSERT_VALUES_INLINE_RE.match(query)
     if not m or not m.group("data").strip():
         return None
-    cols = [
-        c.strip().strip("`") for c in (m.group("cols") or "").split(",") if c.strip()
-    ]
+    hdr = parse_insert(query)
+    if hdr is None:
+        return None
     settings = _parse_set(f"SET {settings_txt}") if settings_txt.strip() else {}
-    return m.group("ref"), cols, fmt, m.group("data"), settings
+    return hdr.ref, hdr.columns, fmt, m.group("data"), settings
 
 
 def _tsv_field(v: str, raw: bool) -> Optional[str]:

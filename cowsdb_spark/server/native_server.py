@@ -19,6 +19,7 @@ import struct
 import threading
 import zlib
 
+from ..dialect.insert import InsertHeader, parse_insert
 from ..engine import Engine, EngineError
 from ..formats import QueryResult
 from ..formats.native import (
@@ -30,16 +31,12 @@ from ..formats.native import (
 )
 from .compression import METHOD_LZ4, FrameReader, compress_frame
 
-# INSERT that carries no inline data — the native protocol streams
-# the payload as DATA blocks after the QUERY packet (clickhouse-driver
-# sends exactly "INSERT INTO t (a, b) VALUES"). The reference reads
-# and DISCARDS those blocks (main.py:677-696); we apply them.
-_NATIVE_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<table>`?[\w.]+`?(?:\s*\.\s*`?[\w]+`?)?)\s*"
-    r"(?:\((?P<cols>[^)]*)\))?\s*"
-    r"(?:VALUES|FORMAT\s+\w+)?\s*;?\s*$",
-    re.IGNORECASE,
-)
+# What follows the header of an INSERT that carries no inline data —
+# the native protocol streams the payload as DATA blocks after the
+# QUERY packet (clickhouse-driver sends exactly "INSERT INTO t (a, b)
+# VALUES"). The reference reads and DISCARDS those blocks
+# (main.py:677-696); we apply them.
+_NATIVE_INSERT_TAIL = re.compile(r"\s*(?:VALUES|FORMAT\s+\w+)?\s*;?\s*", re.IGNORECASE)
 
 
 class ClientPacket:
@@ -297,9 +294,9 @@ class NativeServer:
 
     def _handle_query(self, client: socket.socket, r: _Reader, state: dict):
         query, settings, qparams = self._read_query_packet(r, state)
-        m = _NATIVE_INSERT_RE.match(query)
-        if m:
-            self._handle_insert(client, r, state, m)
+        hdr = parse_insert(query)
+        if hdr is not None and _NATIVE_INSERT_TAIL.fullmatch(query, hdr.body_at):
+            self._handle_insert(client, r, state, hdr)
             return
         try:
             # the same collect-once path as HTTP; INTO OUTFILE is
@@ -321,15 +318,14 @@ class NativeServer:
             out += write_varstr(str(e))
             client.sendall(bytes(out))
 
-    def _handle_insert(self, client: socket.socket, r: _Reader, state: dict, m):
+    def _handle_insert(
+        self, client: socket.socket, r: _Reader, state: dict, hdr: InsertHeader
+    ):
         """Native INSERT: send the target table's sample block, read
         the client's DATA blocks until the empty end-of-data marker,
         apply them through the engine (reference discards them —
         main.py:677-696 — a fidelity bug we fix), then END_OF_STREAM."""
-        table = re.sub(r"\s", "", m.group("table"))
-        want_cols = None
-        if m.group("cols"):
-            want_cols = [c.strip().strip("`") for c in m.group("cols").split(",") if c.strip()]
+        table, want_cols = hdr.ref, hdr.columns
         try:
             all_names, all_types = self.engine.table_columns(
                 table,

@@ -2782,3 +2782,89 @@ class TestTruthyConditions:
         )
         out = eng.execute("SELECT tgamma(0) AS a, tgamma(-2) AS b")
         assert out in (b"inf\tnan\n", b"inf\t\\N\n")
+
+
+class TestFunctionTablesRegisterOnce:
+    """A key assigned twice in one of ``dialect/functions.py``'s
+    module-level tables, or a function defined twice, leaves a dead
+    first registration that the later one silently overwrites."""
+
+    def test_no_key_or_function_is_registered_twice(self):
+        import ast
+        import inspect
+
+        from cowsdb_spark.dialect import functions
+
+        tree = ast.parse(inspect.getsource(functions))
+        seen: dict = {}
+        dups = []
+
+        def note(table, key, line):
+            if (table, key) in seen:
+                dups.append(f"{table}[{key!r}] at {seen[table, key]} and {line}")
+            seen[table, key] = line
+
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                note("def", node.name, node.lineno)
+            elif isinstance(node, ast.Delete):
+                for d in node.targets:
+                    if isinstance(d, ast.Subscript) and isinstance(d.slice, ast.Constant):
+                        seen.pop((ast.unparse(d.value), d.slice.value), None)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                tgt = node.target if isinstance(node, ast.AnnAssign) else node.targets[0]
+                if isinstance(tgt, ast.Name) and isinstance(node.value, ast.Dict):
+                    for k in node.value.keys:
+                        if isinstance(k, ast.Constant):
+                            note(tgt.id, k.value, k.lineno)
+                elif isinstance(tgt, ast.Subscript) and isinstance(tgt.slice, ast.Constant):
+                    note(ast.unparse(tgt.value), tgt.slice.value, node.lineno)
+        assert not dups, dups
+
+
+class TestInsertHeader:
+    """``dialect.insert``: the one reader of an INSERT's target."""
+
+    @pytest.mark.parametrize(
+        "sql, ref, columns, body",
+        [
+            ("INSERT INTO t SELECT 1", "t", [], "SELECT 1"),
+            ("insert into db.t (a, `b c`) VALUES (1, 2)", "db.t", ["a", "b c"], "VALUES (1, 2)"),
+            ("INSERT INTO `d`.`t`(a)FORMAT TSV\n1", "`d`.`t`", ["a"], "FORMAT TSV\n1"),
+            ("INSERT /* c */ INTO TABLE t WITH x AS (SELECT 1) SELECT * FROM x",
+             "t", [], "WITH x AS (SELECT 1) SELECT * FROM x"),
+            ("INSERT INTO t (a, b) VALUES", "t", ["a", "b"], "VALUES"),
+        ],
+    )
+    def test_parts(self, sql, ref, columns, body):
+        from cowsdb_spark.dialect.insert import parse_insert
+
+        hdr = parse_insert(sql)
+        assert (hdr.ref, hdr.columns, sql[hdr.body_at :].strip()) == (ref, columns, body)
+
+    @pytest.mark.parametrize(
+        "sql", ["SELECT 1", "INSERT INTO SELECT 1", "INSERT INTO FUNCTION file('x')", "INSERT INTO t (a"]
+    )
+    def test_not_an_insert_header(self, sql):
+        from cowsdb_spark.dialect.insert import parse_insert
+
+        assert parse_insert(sql) is None
+
+    @pytest.mark.parametrize(
+        "ref, parts",
+        [("t", (None, "t")), ("db.t", ("db", "t")), ("`my db` . `t`", ("my db", "t"))],
+    )
+    def test_split_ref(self, ref, parts):
+        from cowsdb_spark.dialect.insert import split_ref
+
+        assert split_ref(ref) == parts
+
+    def test_values_default_keyword_and_tuples(self):
+        from cowsdb_spark.dialect.insert import values_query
+
+        assert values_query("VALUES (1, DEFAULT), (DEFAULT, 2)", ["7", "'hi'"]) == (
+            "VALUES (1, ('hi')), ((7), 2)"
+        )
+        assert values_query("VALUES ((1, 'x'), DEFAULT)", ["NULL", "3"]).strip() == (
+            "SELECT struct(1, 'x'), (3)"
+        )

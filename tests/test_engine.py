@@ -990,6 +990,69 @@ class TestColumnDefaults:
         engine.execute("DROP TABLE cdef3")
 
 
+class TestDefaultsOnEveryInsertPath:
+    """A column an INSERT omits takes its declared DEFAULT on every
+    write path, and so does an MV fed from that insert: all of them
+    end in one append. ``values`` pins Spark's own INSERT behaviour."""
+
+    INSERTS = {
+        "values": "INSERT INTO t (a, s) VALUES (1, 'x')",
+        "json_each_row": 'INSERT INTO t FORMAT JSONEachRow\n{"a": 1, "s": "x"}',
+        "tsv": "INSERT INTO t (a, s) FORMAT TSV\n1\tx",
+        "native_subset": None,  # Engine.insert_rows, as the native server calls it
+        "mv_source_values": "INSERT INTO t (a, s) VALUES (1, 'x')",
+        "mv_source_default_keyword": "INSERT INTO t VALUES (1, DEFAULT, 'x')",
+    }
+
+    @pytest.mark.parametrize("path", list(INSERTS))
+    def test_omitted_column_takes_default(self, engine, path):
+        u = {"user": f"dflt_{path}"}
+        engine.execute(
+            "CREATE TABLE t (a Int64, b Int64 DEFAULT 7, s String) ENGINE=Memory", **u
+        )
+        if path.startswith("mv_"):
+            engine.execute(
+                "CREATE MATERIALIZED VIEW mv ENGINE=Memory AS SELECT a, b FROM t", **u
+            )
+        if self.INSERTS[path] is None:
+            engine.insert_rows("t", ["a", "s"], [(1, "x")], ch_types=["Int64", "String"], **u)
+        else:
+            engine.execute(self.INSERTS[path], **u)
+        assert engine.execute("SELECT a, b, s FROM t", **u) == b"1\t7\tx\n"
+        if path.startswith("mv_"):
+            assert engine.execute("SELECT a, b FROM mv", **u) == b"1\t7\n"
+
+
+class TestNamedSessionResolution:
+    """Statements that name a table resolve it in the caller's session
+    (its ``session_id``, current database and TEMPORARY tables), not
+    in the credential pair's unnamed session."""
+
+    STATEMENTS = {
+        "insert_tsv": ("INSERT INTO t FORMAT TSV\n2", "SELECT a FROM t ORDER BY a", b"1\n2\n"),
+        "describe": ("DESCRIBE t", None, b"a\tInt64\t\t\t\t\t\n"),
+        "show_create": ("SHOW CREATE TABLE t", None, b"CREATE TABLE t"),
+        "check": ("CHECK TABLE t", None, b"1\n"),
+        "temp_insert_json": (
+            'INSERT INTO tt FORMAT JSONEachRow\n{"x": 9}', "SELECT x FROM tt ORDER BY x", b"8\n9\n"
+        ),
+        "temp_describe": ("DESCRIBE tt", None, b"x\tInt64\t\t\t\t\t\n"),
+    }
+
+    @pytest.mark.parametrize("name", list(STATEMENTS))
+    def test_statement_resolves_in_session(self, engine, name):
+        u = {"user": f"named_{name}", "session_id": "s1"}
+        engine.execute("CREATE DATABASE d2", **u)
+        engine.execute("USE d2", **u)
+        engine.execute("CREATE TABLE t (a Int64) ENGINE=Memory", **u)
+        engine.execute("INSERT INTO t VALUES (1)", **u)
+        engine.execute("CREATE TEMPORARY TABLE tt (x Int64)", **u)
+        engine.execute("INSERT INTO tt VALUES (8)", **u)
+        stmt, check, want = self.STATEMENTS[name]
+        out = engine.execute(stmt, **u)
+        assert (engine.execute(check, **u) if check else out).startswith(want)
+
+
 class TestPlanCacheGuards:
     """The optimized-plan cache must never serve stale results: engine
     DDL/inserts bump the generation; direct temp-view replacement is
@@ -1399,6 +1462,15 @@ class TestInsertFormatBreadth:
             **u,
         )
         assert engine.execute("SELECT sum(a) FROM i3", **u) == b"11\n"
+
+    def test_json_each_row_all_null_column(self, engine):
+        # no value to infer `b`'s type from: it takes the column's type;
+        # a number into a String column still stores its text
+        u = {"user": "insfx"}
+        engine.execute("CREATE TABLE i5 (a Int64, b Nullable(String)) ENGINE=Memory", **u)
+        engine.execute('INSERT INTO i5 FORMAT JSONEachRow\n{"a": 1, "b": null}', **u)
+        engine.execute('INSERT INTO i5 FORMAT JSONEachRow\n{"a": 3, "b": 5}', **u)
+        assert engine.execute("SELECT a, b FROM i5 ORDER BY a", **u) == b"1\t\\N\n3\t5\n"
 
     def test_line_as_string(self, engine):
         u = {"user": "insfx"}

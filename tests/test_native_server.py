@@ -521,6 +521,21 @@ class TestNativeInsert:
         c.close()
 
 
+    def test_same_select_text_sees_native_insert(self, native_port):
+        # a plan cached before a native INSERT must not answer after it
+        c = Client(native_port, user="nat_ins7")
+        c.query("CREATE TABLE nr (a Int64, s String) ENGINE=Memory")
+        ins = ("INSERT INTO nr (a, s) VALUES", ["a", "s"], ["Int64", "String"])
+        c.insert(*ins, [(1, "x")])
+        q = "SELECT a, s FROM nr ORDER BY a"
+        assert c.query(q)[1] == [(1, "x")]
+        assert c.query("SELECT count() AS n FROM nr")[1] == [(1,)]
+        c.insert(*ins, [(2, "y")])
+        assert c.query(q)[1] == [(1, "x"), (2, "y")]
+        assert c.query("SELECT count() AS n FROM nr")[1] == [(2,)]
+        c.close()
+
+
 class TestQueryParameters:
     """Server-side {name:Type} binding over the native wire (the
     parameter entries after the query string in the QUERY packet)."""
