@@ -1,10 +1,11 @@
 """ClickHouse DDL parsing → structured form for the engine.
 
 Handles the shapes the reference exercises (SURVEY §2.1 S6):
-``CREATE DATABASE [IF NOT EXISTS] db``, ``DROP DATABASE/TABLE [IF
-EXISTS]``, and ``CREATE TABLE [IF NOT EXISTS] [db.]name (cols)
-ENGINE = X(...) [PARTITION BY e] [ORDER BY e] [SAMPLE BY e]
-[SETTINGS ...]`` (the ClickBench MergeTree DDL, test.yml:49).
+``CREATE DATABASE [IF NOT EXISTS] db``, ``DROP
+DATABASE/TABLE/VIEW/DICTIONARY [IF EXISTS]``, and ``CREATE TABLE
+[IF NOT EXISTS] [db.]name (cols) ENGINE = X(...) [PARTITION BY e]
+[ORDER BY e] [SAMPLE BY e] [SETTINGS ...]`` (the ClickBench MergeTree
+DDL, test.yml:49).
 
 Engine clauses map per SURVEY §1.1: Memory and MergeTree both
 become parquet-backed managed tables; PARTITION BY / ORDER BY are
@@ -66,7 +67,7 @@ class CreateDatabase:
 
 @dataclass
 class DropObject:
-    what: str  # "TABLE" | "DATABASE"
+    what: str  # "TABLE" | "VIEW" | "DATABASE" | "DICTIONARY"
     database: Optional[str]
     name: str
     if_exists: bool
@@ -166,7 +167,6 @@ def _ident(t: Tok) -> str:
 
 
 _IF_NOT_EXISTS = re.compile(r"\bIF\s+NOT\s+EXISTS\b", re.IGNORECASE)
-_IF_EXISTS = re.compile(r"\bIF\s+EXISTS\b", re.IGNORECASE)
 
 
 def parse_ddl(sql: str):
@@ -195,9 +195,9 @@ def parse_ddl(sql: str):
             j += 1
         if j < len(toks) and toks[j].text.upper() == "VIEW":
             return _parse_create_view(toks, j + 1, or_replace, mat)
-    if head == "DROP" and len(toks) >= 2 and toks[1].text.upper() in ("DATABASE", "TABLE", "VIEW"):
-        what = toks[1].text.upper()
-        ie = bool(_IF_EXISTS.search(sql))
+    if head == "DROP" and len(toks) >= 2 and toks[1].upper in ("DATABASE", "TABLE", "VIEW", "DICTIONARY"):
+        what = toks[1].upper
+        ie = len(toks) >= 4 and toks[2].upper == "IF" and toks[3].upper == "EXISTS"
         name_tok = toks[-1]
         name = _ident(name_tok)
         db = None

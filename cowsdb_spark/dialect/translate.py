@@ -1262,22 +1262,31 @@ def _truthy_starts_clause(toks: list[Tok], sig: list[int], si: int) -> bool:
 
 
 def _rewrite_truthy_filters(toks: list[Tok]) -> list[Tok]:
-    """Wrap every WHERE/HAVING condition in ``boolean(…)``.
+    """Wrap every WHERE/HAVING condition in ``boolean(…)``, one wrapper
+    per operand of the clause's top-level AND/OR/NOT.
 
-    CH filters are UInt8 expressions — ``WHERE flag``, ``HAVING c % 2``
-    are idiomatic; Spark requires boolean. The wrapper is a no-op cast
-    on already-boolean predicates (Catalyst's SimplifyCasts removes it,
+    CH filters are UInt8 expressions — ``WHERE flag``, ``HAVING c % 2``,
+    ``WHERE has(a, x) AND x % 2`` are idiomatic; Spark requires
+    boolean, operand by operand. The wrapper is a no-op cast on
+    already-boolean predicates (Catalyst's SimplifyCasts removes it,
     so plans — including parquet pushdown — are unchanged) and applies
-    CH truthiness (nonzero = true) to numeric ones. Subquery clauses
-    wrap independently; clause ends at the next same-depth clause
-    keyword or the enclosing ``)``."""
+    CH truthiness (nonzero = true) to numeric ones. The AND of
+    ``BETWEEN a AND b`` and connectives inside CASE … END stay inside
+    their operand. Subquery clauses wrap independently; a clause ends
+    at the next same-depth clause keyword or the enclosing ``)``."""
     out: list[Tok] = []
     depth = 0
-    open_depths: list[int] = []  # depths of unclosed boolean( wrappers
+    # unclosed boolean( wrappers, innermost last: [depth, CASE nesting,
+    # BETWEEN awaiting its AND, the wrapper's offset in out]
+    open_wraps: list[list] = []
+
+    def open_wrap(d: int) -> None:
+        open_wraps.append([d, 0, False, len(out)])
+        out.extend((Tok("ident", "boolean"), Tok("op", "(")))
 
     def close_ge(d: int) -> None:
-        while open_depths and open_depths[-1] >= d:
-            open_depths.pop()
+        while open_wraps and open_wraps[-1][0] >= d:
+            open_wraps.pop()
             out.append(Tok("op", ")"))
 
     sig = _sig(toks)
@@ -1295,21 +1304,40 @@ def _rewrite_truthy_filters(toks: list[Tok]) -> list[Tok]:
             up = t.text.upper()
             if up in ("WHERE", "HAVING"):
                 close_ge(depth)
-                out.append(t)
-                out.append(Tok("ws", " "))
-                out.append(Tok("ident", "boolean"))
-                out.append(Tok("op", "("))
-                open_depths.append(depth)
+                out.extend((t, Tok("ws", " ")))
+                open_wrap(depth)
                 continue
+            wrap = open_wraps[-1] if open_wraps and open_wraps[-1][0] == depth else None
             if (
-                up in _TRUTHY_CLAUSE_ENDS
-                and open_depths
-                and open_depths[-1] == depth
+                wrap is not None
+                and up in _TRUTHY_CLAUSE_ENDS
                 and _truthy_starts_clause(toks, sig, sig_index[i])
             ):
-                open_depths.pop()
-                out.append(Tok("op", ")"))
-                out.append(Tok("ws", " "))
+                open_wraps.pop()
+                out.extend((Tok("op", ")"), Tok("ws", " ")))
+            elif wrap is not None:
+                if up == "CASE":
+                    wrap[1] += 1
+                elif up == "END" and wrap[1]:
+                    wrap[1] -= 1
+                elif wrap[1]:
+                    pass  # inside CASE … END: part of this operand
+                elif up == "BETWEEN":
+                    wrap[2] = True
+                elif up == "AND" and wrap[2]:
+                    wrap[2] = False
+                elif up in ("AND", "OR"):
+                    open_wraps.pop()
+                    out.extend((Tok("op", ")"), Tok("ws", " "), t, Tok("ws", " ")))
+                    open_wrap(depth)
+                    continue
+                elif up == "NOT" and not any(x.text.strip() for x in out[wrap[3] + 2:]):
+                    # NOT opens the operand: it goes outside the wrapper
+                    open_wraps.pop()
+                    del out[wrap[3]:wrap[3] + 2]
+                    out.extend((t, Tok("ws", " ")))
+                    open_wrap(depth)
+                    continue
         out.append(t)
     close_ge(0)
     return out

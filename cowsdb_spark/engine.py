@@ -249,6 +249,24 @@ class UserSession:
         sid = hashlib.sha256(self.session_id.encode()).hexdigest()[:8]
         return f"tmp{self.ns}_s{sid}"
 
+    def spark_table(self, db: Optional[str], name: str, temporary: bool = False) -> str:
+        """The one map from a CH table reference (``db`` or None, and
+        ``name``) to its Spark table: ``db.t`` is in ``spark_db(db)``;
+        a bare name is this session's TEMPORARY table if it has one by
+        that name (or ``temporary`` says it is being created), else it
+        is in the current database. The spelling is canonical,
+        lower-cased as Spark's catalog stores and lists names, so two
+        spellings of one table give one string."""
+        if not db and (temporary or name.lower() in self.temp_tables):
+            return f"`{self.temp_db}`.`{name}`".lower()
+        return f"`{self.spark_db(db)}`.`{name}`".lower()
+
+
+def _split_table(tbl: str) -> tuple[str, str]:
+    """(Spark database, table name) of a ``spark_table`` spelling."""
+    db, _, name = tbl[1:-1].partition("`.`")
+    return db, name
+
 
 def bind_query_params(sql: str, params: dict[str, str]) -> str:
     """Server-side binding of ``{name:Type}`` placeholders (the CH
@@ -819,11 +837,11 @@ class Engine:
                 names.add(t.text.strip("`").lower())
         return names
 
-    def _table_known(self, sess: UserSession, name: str) -> bool:
-        """Is ``name`` a real table in the session's current database?
-        Cached per Spark db; DDL clears the cache (single process, so
-        no cross-process staleness)."""
-        db = sess.spark_db()
+    def _table_known(self, tbl: str) -> bool:
+        """Is the resolved table ``tbl`` a real catalog table? Cached
+        per Spark db; DDL clears the cache (single process, so no
+        cross-process staleness)."""
+        db, name = _split_table(tbl)
         cache = self._tables_cache.get(db)
         if cache is None:
             try:
@@ -835,7 +853,7 @@ class Engine:
             except Exception:
                 cache = set()
             self._tables_cache[db] = cache
-        return name.lower() in cache
+        return name in cache
 
     def _is_temp_view(self, name: str) -> bool:
         """True only for session temp views (conformance tables etc.).
@@ -935,28 +953,26 @@ class Engine:
                             k += 3
                             table_ctx = False
                             continue
-                    out[i] = f"`{sess.spark_db(db)}`"
+                    out[i] = sess.spark_table(db, toks[sig[k + 2]].text.strip("`"))
+                    out[sig[k + 1]] = ""
+                    out[sig[k + 2]] = ""
                     k += 3
                 elif k + 1 < len(sig) and toks[sig[k + 1]].text == "(":
                     k += 1  # table function (numbers(), file(), …)
                 else:
                     name = t.text.strip("`")
+                    tbl = sess.spark_table(None, name)
                     # Qualify BOTH known tables and unknown names (an
                     # unknown name must error inside this session's
                     # namespace, not resolve against whatever current
                     # database another thread last set). Only CTEs and
                     # temp views stay unqualified.
-                    if name in sess.temp_tables:
-                        out[i] = f"`{sess.temp_db}`.`{name}`"
-                    elif (
+                    if (
                         name.lower() not in cte
                         and not name.startswith("__moospark")
-                        and (
-                            self._table_known(sess, name)
-                            or not self._is_temp_view(name)
-                        )
+                        and (self._table_known(tbl) or not self._is_temp_view(name))
                     ):
-                        out[i] = f"`{sess.spark_db()}`.`{name}`"
+                        out[i] = tbl
                     k += 1
                 table_ctx = False
                 continue
@@ -1221,25 +1237,8 @@ class Engine:
             )
             df = self.spark.table(inner)
         else:
-            parts = [p.strip("`") for p in ref.split(".")]
-            if len(parts) == 2:
-                db, tname = parts
-                qual = f"`{sess.spark_db(db)}`.`{tname}`"
-            elif len(parts) == 1:
-                tname = parts[0]
-                # the session's CH TEMPORARY tables shadow catalog
-                # names, exactly like _remap_databases; no bare
-                # spark.table fallback — that would resolve against
-                # the SHARED session's current database / temp views
-                # (cross-credential leak)
-                if tname in sess.temp_tables:
-                    qual = f"`{sess.temp_db}`.`{tname}`"
-                else:
-                    qual = f"`{sess.spark_db(sess.current_db)}`.`{tname}`"
-            else:
-                raise EngineError(f"{name}: bad table reference '{ref}'", 60)
             try:
-                df = self.spark.table(qual)
+                df = self.spark.table(sess.spark_table(*split_ref(ref)))
             except Exception as e:
                 raise EngineError(
                     f"{name}: unknown table '{ref}': {e}", 60
@@ -1761,7 +1760,7 @@ class Engine:
         with self._lock:
             self._in_user_db(sess)
             try:
-                tbl = self._resolve(sess, hdr.ref)
+                tbl = sess.spark_table(*split_ref(hdr.ref))
                 fields = {f.name.lower(): f for f in self.spark.table(tbl).schema.fields}
                 names = hdr.columns or [f.name for f in fields.values()]
                 picked = [fields.get(n.lower()) for n in names]
@@ -1852,17 +1851,6 @@ class Engine:
                 self.spark.catalog.dropTempView(view)
                 block.unpersist()
 
-    def _resolve(self, sess: UserSession, table_ref: str) -> str:
-        """CH table reference (``t`` or ``db.t``, optionally
-        back-quoted) → fully-qualified Spark table name in ``sess``'s
-        namespace: its current database or its TEMPORARY tables."""
-        db, name = split_ref(table_ref)
-        if db:
-            return f"`{sess.spark_db(db)}`.`{name}`"
-        if name in sess.temp_tables:
-            return f"`{sess.temp_db}`.`{name}`"
-        return f"`{sess.spark_db()}`.`{name}`"
-
     def resolve_table(
         self,
         table_ref: str,
@@ -1870,12 +1858,13 @@ class Engine:
         password: str = "",
         database: Optional[str] = None,
     ) -> str:
-        """``_resolve`` in the credential pair's unnamed session (the
-        native protocol has no session id)."""
+        """A CH table reference (``t`` or ``db.t``) resolved in the
+        credential pair's unnamed session (the native protocol has no
+        session id)."""
         sess = self.get_session(user, password)
         if database:
             sess.current_db = database
-        return self._resolve(sess, table_ref)
+        return sess.spark_table(*split_ref(table_ref))
 
     def table_columns(
         self,
@@ -1941,7 +1930,7 @@ class Engine:
 
         with self._lock:
             try:
-                tbl = self._resolve(sess, table_ref)
+                tbl = sess.spark_table(*split_ref(table_ref))
                 known = {c.lower() for c in self.spark.table(tbl).columns}
                 unknown = [n for n in names if n.lower() not in known]
                 if unknown:
@@ -2167,18 +2156,6 @@ class Engine:
         ):
             self._create_dictionary(sess, sql)
             return
-        if up.startswith("DROP DICTIONARY"):
-            import re as _re
-
-            dm = _re.match(
-                r"(?is)\s*DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?([\w.`\"]+)", sql
-            )
-            if dm:
-                name = dm.group(1).strip("`\"")
-                if name not in sess.dictionaries and "IF EXISTS" not in up:
-                    raise EngineError(f"Dictionary {name} does not exist", 36)
-                sess.dictionaries.pop(name, None)
-            return
         parsed = parse_ddl(sql)
         with self._lock:
             if isinstance(parsed, CreateDatabase):
@@ -2186,19 +2163,16 @@ class Engine:
                 return
             if isinstance(parsed, DropObject):
                 ie = "IF EXISTS " if parsed.if_exists else ""
-                if parsed.what == "DATABASE":
+                if parsed.what == "DICTIONARY":
+                    name = ".".join(filter(None, (parsed.database, parsed.name)))
+                    if sess.dictionaries.pop(name, None) is None and not parsed.if_exists:
+                        raise EngineError(f"Dictionary {name} does not exist", 36)
+                elif parsed.what == "DATABASE":
                     self.spark.sql(
                         f"DROP DATABASE {ie}`{sess.spark_db(parsed.name)}` CASCADE"
                     )
-                elif parsed.database is None and parsed.name in sess.temp_tables:
-                    self.spark.sql(
-                        f"DROP TABLE {ie}`{sess.temp_db}`.`{parsed.name}`"
-                    )
-                    sess.temp_tables.discard(parsed.name)
-                    return
                 else:
-                    db = sess.spark_db(parsed.database)
-                    qual = f"`{db}`.`{parsed.name}`"
+                    qual = sess.spark_table(parsed.database, parsed.name)
                     # CH accepts DROP TABLE and DROP VIEW interchangeably
                     # for views/MVs; Spark does not — try both shapes
                     try:
@@ -2207,6 +2181,8 @@ class Engine:
                         other = "VIEW" if parsed.what == "TABLE" else "TABLE"
                         self.spark.sql(f"DROP {other} {ie}{qual}")
                     self._mv_forget(sess.ns, qual)
+                    if parsed.database is None:
+                        sess.temp_tables.discard(parsed.name.lower())
                 return
             if isinstance(parsed, CreateView):
                 self._run_create_view(sess, parsed)
@@ -2215,21 +2191,13 @@ class Engine:
                 # DETACH hides the table under a reserved name (data
                 # kept); ATTACH restores it — the observable CH
                 # contract for the metadata-level pair
-                db = sess.spark_db(parsed.database)
-                hidden = f"__detached__{parsed.name}"
-                src, dst = (
-                    (parsed.name, hidden)
-                    if parsed.action == "detach"
-                    else (hidden, parsed.name)
-                )
-                if parsed.if_exists and not self._table_exists(
-                    sess, parsed.database, src
-                ):
+                tbl = sess.spark_table(parsed.database, parsed.name)
+                hidden = sess.spark_table(parsed.database, f"__detached__{parsed.name}")
+                src, dst = (tbl, hidden) if parsed.action == "detach" else (hidden, tbl)
+                if parsed.if_exists and not self.spark.catalog.tableExists(src):
                     return
                 try:
-                    self.spark.sql(
-                        f"ALTER TABLE `{db}`.`{src}` RENAME TO `{db}`.`{dst}`"
-                    )
+                    self.spark.sql(f"ALTER TABLE {src} RENAME TO {dst}")
                 except Exception as e:
                     raise EngineError(_clean_spark_error(e), 60) from e
                 return
@@ -2239,15 +2207,15 @@ class Engine:
                 self._create_table(sess, parsed)
                 return
             if isinstance(parsed, TruncateTable):
-                tbl = f"`{sess.spark_db(parsed.database)}`.`{parsed.name}`"
-                if parsed.if_exists and not self._table_exists(sess, parsed.database, parsed.name):
+                tbl = sess.spark_table(parsed.database, parsed.name)
+                if parsed.if_exists and not self.spark.catalog.tableExists(tbl):
                     return
                 self._sql_or_raise(f"TRUNCATE TABLE {tbl}")
                 return
             if isinstance(parsed, RenameTables):
                 for db_f, n_f, db_t, n_t in parsed.pairs:
-                    src = f"`{sess.spark_db(db_f)}`.`{n_f}`"
-                    dst = f"`{sess.spark_db(db_t)}`.`{n_t}`"
+                    src = sess.spark_table(db_f, n_f)
+                    dst = sess.spark_table(db_t, n_t)
                     self._sql_or_raise(f"ALTER TABLE {src} RENAME TO {dst}")
                 self._mv_registry.pop(sess.ns, None)
                 self._mv_scanned.discard(sess.ns)
@@ -2269,12 +2237,8 @@ class Engine:
                 raise EngineError(_clean_spark_error(e), _ch_error_code(str(e))) from e
 
     def _create_table(self, sess: UserSession, ct: CreateTable) -> None:
-        if ct.temporary:
-            db = sess.temp_db
-            sess.temp_tables.add(ct.table)
-        else:
-            db = sess.spark_db(ct.database)
-        self._ensure_db(db)
+        tbl = sess.spark_table(ct.database, ct.table, temporary=ct.temporary)
+        self._ensure_db(_split_table(tbl)[0])
         # CREATE OR REPLACE over an existing table swaps ATOMICALLY:
         # build the new table (including the CTAS payload, which may
         # legitimately read the OLD table) under a staging name, and
@@ -2282,11 +2246,10 @@ class Engine:
         # destroyed the old data on any select/write failure
         # (ADVICE r4 — CH's REPLACE preserves the table on failure).
         replace_target: Optional[str] = None
-        create_name = ct.table
-        if ct.or_replace and self.spark.catalog.tableExists(f"`{db}`.`{ct.table}`"):
-            replace_target = f"`{db}`.`{ct.table}`"
-            create_name = f"{ct.table}__moospark_replace"
-            self.spark.sql(f"DROP TABLE IF EXISTS `{db}`.`{create_name}`")
+        if ct.or_replace and self.spark.catalog.tableExists(tbl):
+            replace_target = tbl
+            tbl = f"{tbl[:-1]}__moospark_replace`"
+            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         # CTAS: run the CH-dialect select first — without a declared
         # column list its schema IS the table schema
         src_df = None
@@ -2356,7 +2319,6 @@ class Engine:
             props.append(f"'moospark.order_by' = '{_esc(ct.order_by)}'")
         if ct.partition_by:
             props.append(f"'moospark.partition_by' = '{_esc(ct.partition_by)}'")
-        tbl = f"`{db}`.`{create_name}`"
         stmt = f"CREATE TABLE {ine}{tbl} ({cols}) USING PARQUET"
         if props:
             stmt += " TBLPROPERTIES (" + ", ".join(props) + ")"
@@ -2382,6 +2344,10 @@ class Engine:
                 raise EngineError(
                     _clean_spark_error(e), _ch_error_code(str(e))
                 ) from e
+        if ct.temporary:
+            # only now: a failed create must not leave a name that
+            # shadows a regular table of the same name
+            sess.temp_tables.add(ct.table.lower())
         if src_df is not None:
             # declared columns take the SELECT's columns by position
             names = [c.name for c in ct.columns]
@@ -2612,7 +2578,7 @@ class Engine:
                         except Exception:  # noqa: BLE001
                             pass
                 names, ch_types, dflts = self._declared_columns(
-                    self._resolve(sess, ref)
+                    sess.spark_table(*split_ref(ref))
                 )
                 return local_df(
                     self.spark,
@@ -2677,7 +2643,7 @@ class Engine:
     def _show_create(self, sess: UserSession, table_ref: str):
         """Reconstruct CH-style DDL from the schema + moospark.*
         properties (column `statement`, as ClickHouse returns it)."""
-        tbl = self._resolve(sess, table_ref)
+        tbl = sess.spark_table(*split_ref(table_ref))
         names, ch_types, dflts = self._declared_columns(tbl)
         props = self._table_moospark_props(tbl)
         visible = table_ref.strip().strip("`")
@@ -2723,7 +2689,7 @@ class Engine:
             cols = f" ({', '.join(col_list)})" if col_list else ""
             self._run_insert(sess, f"INSERT INTO {table_ref}{cols} VALUES {payload}")
             return
-        names = col_list or self._ch_columns(self._resolve(sess, table_ref))[0]
+        names = col_list or self._ch_columns(sess.spark_table(*split_ref(table_ref)))[0]
         rows: list[tuple]
         if fmt in ("TSV", "TABSEPARATED", "TSVRAW", "TABSEPARATEDRAW",
                    "TSVWITHNAMES", "TABSEPARATEDWITHNAMES"):
@@ -2856,9 +2822,6 @@ class Engine:
         except Exception as e:
             raise EngineError(_clean_spark_error(e), _ch_error_code(str(e))) from e
 
-    def _table_exists(self, sess: UserSession, db: Optional[str], name: str) -> bool:
-        return self.spark.catalog.tableExists(f"`{sess.spark_db(db)}`.`{name}`")
-
     def _run_exists(self, sess: UserSession, table_ref: str):
         """``EXISTS TABLE t`` → one row, `result` UInt8 (CH shape)."""
         from pyspark.sql import functions as F
@@ -2874,7 +2837,7 @@ class Engine:
                 F.lit(v).cast("smallint").alias("result")
             )
         with self._lock:
-            v = 1 if self._table_exists(sess, db, name) else 0
+            v = 1 if self.spark.catalog.tableExists(sess.spark_table(db, name)) else 0
         return self.spark.range(1).select(F.lit(v).cast("smallint").alias("result"))
 
     def _run_check(self, sess: UserSession, table_ref: str):
@@ -2884,7 +2847,7 @@ class Engine:
         storage offers (missing table errors, as CH does)."""
         from pyspark.sql import functions as F
 
-        tbl = self._resolve(sess, table_ref)
+        tbl = sess.spark_table(*split_ref(table_ref))
         self._sql_or_raise(f"SELECT * FROM {tbl} LIMIT 0").collect()
         return self.spark.range(1).select(
             F.lit(1).cast("smallint").alias("result")
@@ -2896,16 +2859,14 @@ class Engine:
 
         return translate_select(f"SELECT {expr}").spark_sql[len("SELECT "):]
 
-    def _swap_rewrite(self, sess: UserSession, db: Optional[str], name: str, df) -> None:
-        """Rewrite a table's contents atomically-ish via stage-and-swap
-        (the Spark analog of a ClickHouse mutation's part rewrite:
-        materialize the mutated data, then swap names). Preserves
-        moospark.* TBLPROPERTIES and the MergeTree sort-on-write; at
-        cluster scale this is one distributed write + two catalog ops,
-        no driver-side data movement."""
-        spark_db = sess.spark_db(db)
-        tbl = f"`{spark_db}`.`{name}`"
-        stage = f"`{spark_db}`.`{name}__moospark_stage`"
+    def _swap_rewrite(self, tbl: str, df) -> None:
+        """Rewrite the resolved table ``tbl``'s contents atomically-ish
+        via stage-and-swap (the Spark analog of a ClickHouse mutation's
+        part rewrite: materialize the mutated data, then swap names).
+        Preserves moospark.* TBLPROPERTIES and the MergeTree
+        sort-on-write; at cluster scale this is one distributed write +
+        two catalog ops, no driver-side data movement."""
+        stage = f"{tbl[:-1]}__moospark_stage`"
         props = self._table_moospark_props(tbl)
         df = self._sort_for_write(df, props.get("order_by"))
         self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
@@ -2929,7 +2890,7 @@ class Engine:
     def _run_mutation(self, sess: UserSession, m: AlterMutation) -> None:
         from pyspark.sql import functions as F
 
-        tbl = f"`{sess.spark_db(m.database)}`.`{m.name}`"
+        tbl = sess.spark_table(m.database, m.name)
         src = self._sql_or_raise(f"SELECT * FROM {tbl}")
         cond = F.expr(self._translate_expr(m.where)).cast("boolean")
         if m.action == "delete":
@@ -2952,14 +2913,14 @@ class Engine:
                 else:
                     cols.append(F.col(f"`{f.name}`"))
             out = src.select(*cols)
-        self._swap_rewrite(sess, m.database, m.name, out)
+        self._swap_rewrite(tbl, out)
 
     def _run_alter_column(self, sess: UserSession, a: AlterColumn) -> None:
         from pyspark.sql import functions as F
 
         from .dialect.types import ch_type_to_spark
 
-        tbl = f"`{sess.spark_db(a.database)}`.`{a.name}`"
+        tbl = sess.spark_table(a.database, a.name)
         cols = self._sql_or_raise(f"SELECT * FROM {tbl} LIMIT 0").columns
         if a.action == "add":
             if a.column in cols:
@@ -2978,7 +2939,7 @@ class Engine:
             out = src.withColumn(
                 a.column, F.expr(self._translate_expr(a.default)).cast(dt)
             )
-            self._swap_rewrite(sess, a.database, a.name, out)
+            self._swap_rewrite(tbl, out)
             return
         if a.column not in cols:
             if a.if_clause:
@@ -2990,12 +2951,12 @@ class Engine:
             # recording the new declared type for SHOW CREATE/DESCRIBE
             dt = ch_type_to_spark(a.ch_type or "String")
             out = src.withColumn(a.column, F.col(f"`{a.column}`").cast(dt))
-            self._swap_rewrite(sess, a.database, a.name, out)
+            self._swap_rewrite(tbl, out)
             self._update_declared_type(tbl, a.column, a.ch_type)
             return
         if a.action == "rename":
             out = src.withColumnRenamed(a.column, a.new_name)
-            self._swap_rewrite(sess, a.database, a.name, out)
+            self._swap_rewrite(tbl, out)
             self._update_declared_type(tbl, a.column, None, rename_to=a.new_name)
             return
         if a.action == "comment":
@@ -3021,10 +2982,10 @@ class Engine:
             else:
                 dv = F.lit(0).cast(tn)
             out = src.withColumn(a.column, dv)
-            self._swap_rewrite(sess, a.database, a.name, out)
+            self._swap_rewrite(tbl, out)
             return
         # drop: parquet v1 tables can't drop columns in place → rewrite
-        self._swap_rewrite(sess, a.database, a.name, src.drop(a.column))
+        self._swap_rewrite(tbl, src.drop(a.column))
 
     def _update_declared_type(
         self, tbl: str, column: str, ch_type: Optional[str], rename_to: Optional[str] = None
@@ -3059,7 +3020,7 @@ class Engine:
         With FINAL on a Replacing* table, the merge also collapses
         key-duplicate rows to the latest version — the CH semantics
         of forcing the Replacing merge to completion."""
-        tbl = f"`{sess.spark_db(o.database)}`.`{o.name}`"
+        tbl = sess.spark_table(o.database, o.name)
         props = self._table_moospark_props(tbl)
         spec = (
             self._final_partition_order(props)
@@ -3076,15 +3037,15 @@ class Engine:
         else:
             src = self._sql_or_raise(f"SELECT * FROM {tbl}")
         n = max(1, self.spark.sparkContext.defaultParallelism // 4)
-        self._swap_rewrite(sess, o.database, o.name, src.coalesce(n))
+        self._swap_rewrite(tbl, src.coalesce(n))
 
     # --------------------------------------------- views / materialized views
 
     def _qualify_first_from(self, sess: UserSession, body: str) -> tuple[str, Optional[str]]:
         """Fully qualify the first FROM-position table ref of an
-        (already db-remapped) SELECT body with the session's current
-        database. Returns (body, qualified_ref or None). The MV
-        trigger substitutes this exact text with the insert delta."""
+        (already db-remapped) SELECT body. Returns (body, qualified_ref
+        or None). The MV trigger substitutes this exact text with the
+        insert delta."""
         toks = tokenize(body)
         sig = [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
         out = [t.text for t in toks]
@@ -3101,22 +3062,18 @@ class Engine:
                     and toks[sig[k + 2]].text == "."
                     and toks[sig[k + 3]].kind in ("ident", "bquote")
                 ):
-                    db = toks[j].text.strip("`")
-                    nm = toks[sig[k + 3]].text.strip("`")
-                    qual = f"`{db}`.`{nm}`"
-                    out[j], out[sig[k + 2]], out[sig[k + 3]] = qual, "", ""
+                    # _remap_databases already wrote the resolved name
+                    qual = "".join(toks[x].text for x in (j, sig[k + 2], sig[k + 3]))
                 else:
-                    nm = toks[j].text.strip("`")
-                    qual = f"`{sess.spark_db()}`.`{nm}`"
+                    qual = sess.spark_table(None, toks[j].text.strip("`"))
                     out[j] = qual
                 return "".join(out), qual
         return body, None
 
     def _run_create_view(self, sess: UserSession, cv: CreateView) -> None:
-        db = sess.spark_db(cv.database)
-        self._ensure_db(db)
+        name = sess.spark_table(cv.database, cv.name)
+        self._ensure_db(_split_table(name)[0])
         self._in_user_db(sess)  # unqualified refs in the body bind here
-        name = f"`{db}`.`{cv.name}`"
         body = self._prepare_sql(sess, self._translate_expr_body(cv.select_sql))
         if not cv.materialized:
             head = "CREATE OR REPLACE VIEW" if cv.or_replace else "CREATE VIEW"
@@ -3130,7 +3087,7 @@ class Engine:
         if source is None:
             raise EngineError("MATERIALIZED VIEW requires a FROM table", 62)
         if cv.to_table:
-            storage = f"`{sess.spark_db(cv.to_database)}`.`{cv.to_table}`"
+            storage = sess.spark_table(cv.to_database, cv.to_table)
             if not self.spark.catalog.tableExists(storage):
                 raise EngineError(f"TO table {storage} does not exist", 60)
             # the MV name reads from the target (CH TO-form)
@@ -3195,7 +3152,10 @@ class Engine:
                         src = props.get("moospark.mv_source")
                         sel = props.get("moospark.mv_select")
                         if src and sel:
-                            self._mv_remember(ns, src, qual, sel)
+                            # an MV stored before names were canonical
+                            # may spell its source in mixed case
+                            canon = src.lower()
+                            self._mv_remember(ns, canon, qual, sel.replace(src, canon))
             except Exception:
                 pass
         return self._mv_registry.get(ns, {}).get(source_qual, [])

@@ -300,7 +300,7 @@ class TestChModifiers:
 
     def test_prewhere_merges_into_where(self):
         s = self._sql("SELECT x FROM t PREWHERE a > 1 WHERE b < 2 ORDER BY x")
-        assert "WHERE boolean( ( a > 1 ) AND ( b < 2 ) )" in s and "ORDER BY x" in s
+        assert "WHERE boolean( ( a > 1 ) ) AND boolean( ( b < 2 ) )" in s and "ORDER BY x" in s
 
     def test_prewhere_alone_becomes_where(self):
         assert "WHERE boolean( a > 1)" in self._sql("SELECT x FROM t PREWHERE a > 1")
@@ -2632,6 +2632,24 @@ class TestTruthyConditions:
             "SELECT number % 3 AS k, count() AS c FROM numbers(9) "
             "GROUP BY k HAVING count() % 2 ORDER BY k"
         ) == b"0\t3\n1\t3\n2\t3\n"
+
+    # WHERE condition → the rows of numbers(6) it keeps, by CH truthiness
+    OPERAND_CONDS = {
+        "has([1, 2, 3], number) AND number % 2": lambda n: n in (1, 2, 3) and n % 2,
+        "number BETWEEN 1 AND 3 AND number % 2": lambda n: 1 <= n <= 3 and n % 2,
+        "NOT number % 2": lambda n: not n % 2,
+        "number % 2 OR number = 4": lambda n: n % 2 or n == 4,
+        "number > 0 AND NOT number % 3": lambda n: n > 0 and not n % 3,
+        "CASE WHEN number > 1 AND number < 4 THEN 1 ELSE 0 END AND number % 2":
+            lambda n: 1 < n < 4 and n % 2,
+    }
+
+    @pytest.mark.parametrize("cond", list(OPERAND_CONDS))
+    def test_where_operands_truthy(self, eng, cond):
+        # CH truthiness applies to each operand of AND/OR/NOT
+        out = eng.execute(f"SELECT number FROM numbers(6) WHERE {cond} ORDER BY number")
+        keep = self.OPERAND_CONDS[cond]
+        assert out == b"".join(b"%d\n" % n for n in range(6) if keep(n))
 
     def test_array_predicate_lambdas_truthy(self, eng):
         assert eng.execute(

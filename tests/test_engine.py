@@ -374,6 +374,27 @@ class TestViews:
         engine.execute("DROP TABLE mv2")
         engine.execute("DROP TABLE mvsrc2")
 
+    def test_drop_by_other_case_forgets_mv(self, engine):
+        # Spark drops `mv` for DROP TABLE MV; the MV registry must
+        # forget it too, or the next INSERT into the source fails
+        # after its rows are written
+        u = {"user": "mvcase_drop"}
+        engine.execute("CREATE TABLE Src (x Int64) ENGINE=Memory", **u)
+        engine.execute("CREATE MATERIALIZED VIEW mv ENGINE=Memory AS SELECT x * 10 AS x FROM Src", **u)
+        engine.execute("INSERT INTO Src VALUES (1)", **u)
+        engine.execute("DROP TABLE MV", **u)
+        engine.execute("INSERT INTO Src VALUES (2)", **u)
+        assert engine.execute("SELECT x FROM Src ORDER BY x", **u) == b"1\n2\n"
+
+    def test_insert_by_other_case_feeds_mv(self, engine):
+        u = {"user": "mvcase_insert"}
+        engine.execute("CREATE TABLE Src (x Int64) ENGINE=Memory", **u)
+        engine.execute("CREATE MATERIALIZED VIEW mv ENGINE=Memory AS SELECT x * 10 AS x FROM Src", **u)
+        engine.execute("INSERT INTO Src VALUES (1)", **u)
+        engine.execute("INSERT INTO src VALUES (2)", **u)
+        assert engine.execute("SELECT x FROM Src ORDER BY x", **u) == b"1\n2\n"
+        assert engine.execute("SELECT x FROM mv ORDER BY x", **u) == b"10\n20\n"
+
     def test_mv_aggregating_into_to_table(self, engine):
         engine.execute("DROP TABLE IF EXISTS evsrc")
         engine.execute("CREATE TABLE evsrc (site String, hits Int64) ENGINE=Memory")
@@ -846,6 +867,23 @@ class TestDictionaries:
         with pytest.raises(EngineError):
             eng.execute("SELECT dictGet('tmp_d', 'v', 1) AS r")
 
+    @pytest.mark.parametrize(
+        "sql, code",
+        [
+            ("DROP DICTIONARY never_registered", 36),
+            ("DROP DICTIONARY IF EXISTS never_registered", None),
+            # the phrase inside a quoted name is not the IF EXISTS clause
+            ("DROP DICTIONARY `if exists`", 36),
+        ],
+    )
+    def test_drop_missing(self, eng, sql, code):
+        if code is None:
+            eng.execute(sql)
+            return
+        with pytest.raises(EngineError) as e:
+            eng.execute(sql)
+        assert e.value.code == code
+
     def test_unknown_dict_is_normal_error(self, eng):
         from cowsdb_spark.engine import EngineError
 
@@ -901,6 +939,51 @@ class TestTemporaryTables:
         assert engine.execute("SELECT x FROM shad", session_id="sv", **u) == b"10\n"
         engine.execute("DROP TABLE shad", **u)
 
+    # statement, check query (None: the statement's own output), want
+    STATEMENTS = {
+        "exists": ("EXISTS TABLE {t}", None, b"1\n"),
+        "delete": ("ALTER TABLE {t} DELETE WHERE x = 1", "SELECT x FROM {t} ORDER BY x", b"2\n3\n"),
+        "update": (
+            "ALTER TABLE {t} UPDATE x = 10 WHERE x = 2", "SELECT x FROM {t} ORDER BY x", b"1\n3\n10\n"
+        ),
+        "add_column": (
+            "ALTER TABLE {t} ADD COLUMN y Int64",
+            "SELECT x, y FROM {t} ORDER BY x",
+            b"1\t\\N\n2\t\\N\n3\t\\N\n",
+        ),
+        "optimize": ("OPTIMIZE TABLE {t} FINAL", "SELECT x FROM {t} ORDER BY x", b"1\n2\n3\n"),
+        "truncate": ("TRUNCATE TABLE {t}", "SELECT count() FROM {t}", b"0\n"),
+    }
+
+    @pytest.mark.parametrize("kind", ["temporary", "regular_after_use"])
+    @pytest.mark.parametrize("name", list(STATEMENTS))
+    def test_statement_resolves_table(self, engine, name, kind):
+        """Every statement that names a table finds a TEMPORARY one,
+        and a regular one in a named session's current database."""
+        u = {"user": f"tmpstmt_{name}_{kind}", "session_id": "s"}
+        if kind == "temporary":
+            engine.execute("CREATE TEMPORARY TABLE tt (x Int64)", **u)
+        else:
+            engine.execute("CREATE DATABASE d2", **u)
+            engine.execute("USE d2", **u)
+            engine.execute("CREATE TABLE tt (x Int64) ENGINE=Memory", **u)
+        engine.execute("INSERT INTO tt VALUES (1), (2), (3)", **u)
+        stmt, check, want = self.STATEMENTS[name]
+        out = engine.execute(stmt.format(t="tt"), **u)
+        assert (engine.execute(check.format(t="tt"), **u) if check else out) == want
+
+    def test_failed_create_leaves_no_temporary_name(self, engine):
+        # a failed CREATE TEMPORARY TABLE must not leave a name that
+        # hides the regular table of the same name
+        u = {"user": "tmpphantom"}
+        engine.execute("CREATE TABLE reg (x Int64) ENGINE=Memory", **u)
+        engine.execute("INSERT INTO reg VALUES (7)", **u)
+        with pytest.raises(EngineError):
+            engine.execute(
+                "CREATE TEMPORARY TABLE reg AS SELECT * FROM no_such_table", session_id="s", **u
+            )
+        assert engine.execute("SELECT x FROM reg", session_id="s", **u) == b"7\n"
+
     def test_expiry_drops_temp_storage(self, engine):
         import time as _t
 
@@ -914,6 +997,45 @@ class TestTemporaryTables:
         assert not engine.has_session(u["user"], "", "se")
         dbs = [d.name for d in engine.spark.catalog.listDatabases()]
         assert tdb not in dbs
+
+
+class TestOneTableResolver:
+    """``UserSession.spark_table`` is the only code in ``engine.py`` that
+    turns a table reference into a Spark table: no other function tests
+    a name against a session's TEMPORARY tables or formats a
+    `` `db`.`name` `` string. The catalog listings are allowed."""
+
+    LISTINGS = {"_expand_merge", "_mvs_for"}
+
+    def test_no_second_resolver(self):
+        import ast
+        import inspect
+
+        from cowsdb_spark import engine as engine_mod
+
+        tree = ast.parse(inspect.getsource(engine_mod))
+        found = []
+
+        def walk(node, fn):
+            for child in ast.iter_child_nodes(node):
+                name = child.name if isinstance(child, (ast.FunctionDef, ast.ClassDef)) else fn
+                if name in ("spark_table", *self.LISTINGS):
+                    continue
+                if isinstance(child, ast.Compare) and any(
+                    isinstance(op, (ast.In, ast.NotIn))
+                    and isinstance(c, ast.Attribute)
+                    and c.attr == "temp_tables"
+                    for op, c in zip(child.ops, child.comparators)
+                ):
+                    found.append(f"{name}:{child.lineno} tests temp_tables")
+                if isinstance(child, ast.JoinedStr) and any(
+                    isinstance(v, ast.Constant) and "`.`" in v.value for v in child.values
+                ):
+                    found.append(f"{name}:{child.lineno} formats a `db`.`name`")
+                walk(child, name)
+
+        walk(tree, "<module>")
+        assert not found, found
 
 
 class TestModifyRenameColumn:
